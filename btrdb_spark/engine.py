@@ -37,6 +37,7 @@ table (MERGE + transaction log); the engine relies only on
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import threading
@@ -100,11 +101,13 @@ def time_bucket(col, pw: int = TIME_PARTITION_PW):
     return F.shiftright(col, pw)
 
 
+class NoSuchStream(KeyError):
+    """The uuid names no live stream (never created, or obliterated)."""
+
+
 def _locked(fn):
     """Serialize a mutating engine method on the per-engine write lock
     (see __init__) — required once a MaintenanceLoop runs off-thread."""
-    import functools
-
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
         with self._write_lock:
@@ -146,6 +149,8 @@ class BTrDBEngine:
         self._write_lock = threading.RLock()
         # query-path DataFrame memo: see _scan_memo
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
+        # stream_version memo: (table signatures, {uuid: (major, minor)})
+        self._version_memo: tuple[tuple | None, dict] = (None, {})
         os.makedirs(base_dir, exist_ok=True)
         self._init_layout()
         # uuids tombstoned with defer_gc=True whose data the background
@@ -252,51 +257,10 @@ class BTrDBEngine:
         return False
 
     def _scan_memo(self, name: str) -> DataFrame | None:
-        """Query-path table scan, memoized on the (generation path,
-        parquet file name+size set) signature — the same scheme as
-        RollupLadder._read_memo: spark.read.parquet costs ~0.1-0.2 s of
-        JVM listing + schema inference per call, which dominated
-        short-query latency. Appends (any process) add uniquely named
-        files to the live generation and rewrites flip the generation
-        path, so a changed signature is exactly a changed table and a
-        hit can never serve stale data. None = no parquet yet.
-        Mutation paths (_rewrite_bucket_partition etc.) stay unmemoized —
-        they must read the precise generation they CAS against."""
-        path = self._data_dir(name)
-        if path is None:
-            return None
-        # O(1) fast path (VERDICT r12 #3): every in-repo appender bumps
-        # the table's mutation stamp after its parquet job commits, and
-        # rewrites flip the generation path — so (path, stamp) changes
-        # exactly when the table does, with no O(#files) driver-side
-        # walk on the memoized query path. The walk survives as the
-        # miss-side emptiness check (staging-only trees must still sign
-        # as "no table yet" — store.parquet_signature applies Spark's
-        # hidden-path rule, closing the UNABLE_TO_INFER_SCHEMA race)
-        # and as the full signature for stampless legacy stores.
-        stamp = store.read_stamp(self.base, name)
-        if stamp is not None:
-            sig = (path, stamp)
-            hit = self._df_memo.get(name)
-            if hit is not None and hit[0] == sig:
-                return hit[1]
-            df = (
-                self.spark.read.parquet(path)
-                if store.parquet_signature(path)
-                else None
-            )
-            self._df_memo[name] = (sig, df)
-            return df
-        sig_files = store.parquet_signature(path)
-        if not sig_files:
-            return None
-        sig = (path, sig_files)
-        hit = self._df_memo.get(name)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-        df = self.spark.read.parquet(path)
-        self._df_memo[name] = (sig, df)
-        return df
+        """Query-path table scan, memoized on the table's signature
+        (store.memo_scan; the rollup ladder shares it). None = no
+        parquet yet."""
+        return store.memo_scan(self.spark, self.store, self._df_memo, self.base, name)
 
     def _read(self, name: str, schema) -> DataFrame:
         df = self._scan_memo(name)
@@ -421,7 +385,7 @@ class BTrDBEngine:
         md.validate_kv(changes, md.MAX_ANNOTATIONS, "annotation")
         cur = self.streams.filter(F.col("uuid") == uuid).collect()
         if not cur or cur[0]["tombstoned"] is not None:
-            raise KeyError(f"no such stream: {uuid}")
+            raise NoSuchStream(f"no such stream: {uuid}")
         row = cur[0]
         if row["annotation_version"] != expected_version:
             raise ValueError(
@@ -513,19 +477,39 @@ class BTrDBEngine:
 
     def stream_version(self, uuid: str) -> tuple[int, int]:
         """(major, minor): major from committed data/deletes, minor = hot rows
-        (pqm.go:337-355)."""
-        if not md.live(self.streams).filter(F.col("uuid") == uuid).count():
-            raise KeyError(f"no such stream: {uuid}")
-        committed = (
-            self.points.filter(F.col("uuid") == uuid)
-            .select("version")
-            .unionByName(self.deletes.filter(F.col("uuid") == uuid).select("version"))
-            .agg(F.max("version").alias("v"))
-            .collect()[0]["v"]
+        (pqm.go:337-355).
+
+        Memoized on the signatures of the four tables the answer reads
+        (streams, points, deletes, hot — store.table_signature, the key
+        the scan memo trusts). Every write either appends and bumps the
+        table's stamp or publishes a new generation path, in this engine
+        or in another one on the same base dir, so any write that can
+        move a version changes the key, and a hit is the answer a fresh
+        read would give. The key is read BEFORE the tables, so a write
+        racing the miss can only make the memoized answer newer than its
+        key, never older. One (signature, {uuid: version}) pair is kept
+        and a changed signature drops it: memory is bounded by the
+        streams read since the last write, and a hit runs no Spark job."""
+        sig = tuple(
+            store.table_signature(self.store, self.base, n)
+            for n in ("streams", "points", "deletes", "hot")
         )
-        major = committed if committed is not None else VERSION_CREATED
-        minor = self.hot.filter(F.col("uuid") == uuid).count()
-        return major, minor
+        memo_sig, memo = self._version_memo
+        if memo_sig != sig:
+            memo = {}
+            self._version_memo = (sig, memo)
+        hit = memo.get(uuid)
+        if hit is None:
+            hit = memo[uuid] = self._stream_versions_multi([uuid])[uuid]
+        return hit
+
+    def _buffered(self, uuid: str) -> bool:
+        """Whether the stream has rows in the hot buffer (memoized minor
+        version; an unknown or obliterated stream has none)."""
+        try:
+            return self.stream_version(uuid)[1] > 0
+        except NoSuchStream:
+            return False
 
     def info(self) -> dict:
         """Info RPC analog (reference grpcinterface/serve.go:818-872,
@@ -959,49 +943,63 @@ class BTrDBEngine:
         df = self._scan_memo("points")
         if df is None:
             return self.spark.createDataFrame([], POINTS_SCHEMA)
-        buckets = sorted({self._bucket_of(u) for u in uuids})
-        return df.filter(
-            F.col("uuid_bucket").isin(buckets) & F.col("uuid").isin(list(uuids))
-        ).select("uuid", "time", "value", "version")
+        return df.filter(self._in_buckets(uuids) & F.col("uuid").isin(list(uuids))).select(
+            "uuid", "time", "value", "version"
+        )
+
+    def _in_buckets(self, uuids: list[str]):
+        """uuid_bucket IN (each uuid's bucket): the optimizer folds the
+        hash expressions to literals, so this prunes partition
+        directories without running a job."""
+        return F.col("uuid_bucket").isin(*[self._ubucket(F.lit(u)) for u in uuids])
 
     def _stream_versions_multi(self, uuids: list[str]) -> dict[str, tuple[int, int]]:
-        """Batched stream_version: THREE jobs for the whole uuid set
-        (live-check, committed max, hot counts) instead of three per
-        stream — the dominant per-stream fixed cost of a batch delete."""
-        ulist = list(uuids)
-        found = {
-            r["uuid"]
-            for r in md.live(self.streams)
-            .filter(F.col("uuid").isin(ulist))
-            .select("uuid")
-            .distinct()
-            .collect()
-        }
-        missing = [u for u in ulist if u not in found]
-        if missing:
-            raise KeyError(f"no such stream: {missing[0]}")
-        committed = {
-            r["uuid"]: r["v"]
-            for r in self.points.filter(F.col("uuid").isin(ulist))
-            .select("uuid", "version")
-            .unionByName(
-                self.deletes.filter(F.col("uuid").isin(ulist)).select(
-                    "uuid", "version"
+        """Versions of a uuid set in ONE aggregate over the union of the
+        live catalog rows, committed versions (points, deletes) and hot
+        rows — not one job per table per stream. Tables with no parquet
+        yet are left out of the union."""
+        ulist = list(dict.fromkeys(uuids))
+        want = F.col("uuid").isin(ulist)
+        none = F.lit(None).cast("long")
+        parts = [
+            md.live(self.streams)
+            .filter(want)
+            .select("uuid", F.lit(1).alias("live"), none.alias("version"), F.lit(0).alias("hot"))
+        ]
+        pts = self._scan_memo("points")
+        if pts is not None:
+            pts = pts.filter(self._in_buckets(ulist))
+        for df, version, hot in (
+            (pts, F.col("version"), 0),
+            (self._scan_memo("deletes"), F.col("version"), 0),
+            (self._scan_memo("hot"), none, 1),
+        ):
+            if df is not None:
+                parts.append(
+                    df.filter(want).select(
+                        "uuid", F.lit(0).alias("live"), version.alias("version"),
+                        F.lit(hot).alias("hot"),
+                    )
                 )
+        rows = {
+            r["uuid"]: r
+            for r in functools.reduce(DataFrame.unionByName, parts)
+            .groupBy("uuid")
+            .agg(
+                F.max("live").alias("live"),
+                F.max("version").alias("v"),
+                F.sum("hot").alias("n"),
             )
-            .groupBy("uuid")
-            .agg(F.max("version").alias("v"))
             .collect()
         }
-        hot_counts = {
-            r["uuid"]: r["n"]
-            for r in self.hot.filter(F.col("uuid").isin(ulist))
-            .groupBy("uuid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        for u in ulist:
+            if u not in rows or not rows[u]["live"]:
+                raise NoSuchStream(f"no such stream: {u}")
         return {
-            u: (committed.get(u, VERSION_CREATED), hot_counts.get(u, 0))
+            u: (
+                rows[u]["v"] if rows[u]["v"] is not None else VERSION_CREATED,
+                int(rows[u]["n"]),
+            )
             for u in ulist
         }
 
@@ -1077,7 +1075,7 @@ class BTrDBEngine:
         pointer flip."""
         with self._write_lock:
             if not self.streams.filter(F.col("uuid") == uuid).count():
-                raise KeyError(f"no such stream: {uuid}")
+                raise NoSuchStream(f"no such stream: {uuid}")
             self._rewrite_stream_row(uuid, tombstoned="deleted")
             if defer_gc:
                 self.spark.createDataFrame(
@@ -1144,12 +1142,15 @@ class BTrDBEngine:
         uuid: str | None = None,
         start: int | None = None,
         end: int | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame | None]:
         """(points, deletes) visible at `version`; latest merges the hot
         buffer in as an uncommitted overlay (J2). The cold side prunes
-        every partition dimension the (uuid, time-range) bounds allow."""
+        every partition dimension the (uuid, time-range) bounds allow.
+        A hot or deletes table with no parquet yet is left out of the
+        plan (deletes = None), rather than planned as an empty local
+        frame that costs a job to scan or broadcast."""
         pts = self.points_pruned(uuid, start, end)
-        if version is None:
+        if version is None and self._scan_memo("hot") is not None:
             hot = self.hot
             if uuid is not None:
                 hot = hot.filter(F.col("uuid") == uuid)
@@ -1163,14 +1164,19 @@ class BTrDBEngine:
             # every reader — a literal NOT IN, zero cost when the set is
             # empty (the steady state)
             pts = pts.filter(~F.col("uuid").isin(sorted(self._pending_gc)))
-        return pts, self.deletes
+        # no deletes parquet yet: plan no anti-join at all
+        dels = self.deletes if self._scan_memo("deletes") is not None else None
+        return pts, dels
 
     def raw_values(self, uuid: str, start: int, end: int, version: int | None = None) -> DataFrame:
         pts, dels = self._queryable(version, uuid, start, end)
         return raw_ops.raw_values(pts, uuid, start, end, version=version, deletes=dels)
 
     def _delete_versions(self, uuid: str) -> list[int]:
-        """Distinct tombstone versions of one stream (tiny table scan)."""
+        """Distinct tombstone versions of one stream (tiny table scan;
+        no job when no delete was ever committed)."""
+        if self._scan_memo("deletes") is None:
+            return []
         return sorted(
             r["version"]
             for r in self.deletes.filter(F.col("uuid") == uuid)
@@ -1237,10 +1243,7 @@ class BTrDBEngine:
             lvl = route_level(pw, self.ladder.levels)
             routable, include_rebase = self._ladder_gate(uuid, lvl)
             if routable:
-                if (
-                    version is None
-                    and self.hot.filter(F.col("uuid") == uuid).limit(1).count()
-                ):
+                if version is None and self._buffered(uuid):
                     routed = self._aligned_windows_hot_merge(
                         uuid, start, end, pw, include_rebase
                     )
@@ -1275,7 +1278,7 @@ class BTrDBEngine:
             self.ladder is not None
             and version is None
             and uuid not in self._pending_gc
-            and not self.hot.filter(F.col("uuid") == uuid).limit(1).count()
+            and not self._buffered(uuid)
         ):
             from .plans.rollup import route_level_width
 
@@ -1381,4 +1384,4 @@ class BTrDBEngine:
         visible = _raw.apply_deletes(pts, dels, version=None)
         visible.createOrReplaceTempView(f"{prefix}_points")
         self.streams.createOrReplaceTempView(f"{prefix}_streams")
-        dels.createOrReplaceTempView(f"{prefix}_deletes")
+        self.deletes.createOrReplaceTempView(f"{prefix}_deletes")

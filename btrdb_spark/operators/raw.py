@@ -10,9 +10,12 @@ Reference semantics:
 Scale notes: the filter is a pure conjunctive predicate on (uuid, time,
 version) — Catalyst pushes it into the parquet scan (PushedFilters), and with
 a (uuid_bucket, time_bucket)-partitioned layout it prunes partitions, which
-is the distributed analog of the reference's tree descent. orderBy on the
-single-stream result is a range-partitioned sort of only the matching rows.
-The set-oriented nearest over *all* streams is one shuffle (groupBy uuid).
+is the distributed analog of the reference's tree descent. A single-stream
+result is sorted inside one partition (coalesce(1) + sortWithinPartitions):
+no sampling job and no range exchange, at the price that one task, and the
+process that drains it, hold that stream's whole range result. A
+multi-stream result keeps the range-partitioned orderBy. The set-oriented
+nearest over *all* streams is one shuffle (groupBy uuid).
 """
 
 from __future__ import annotations
@@ -71,7 +74,12 @@ def raw_values(
     if uuid is not None:
         df = df.filter(F.col("uuid") == F.lit(uuid))
     df = df.filter((F.col("time") >= F.lit(start)) & (F.col("time") < F.lit(end)))
-    return df.select("uuid", "time", "value").orderBy("uuid", "time", "value")
+    df = df.select("uuid", "time", "value")
+    if uuid is not None:
+        # one stream: sort inside a single partition — no sampling job,
+        # no range exchange; the rows arrive in the same order orderBy gives
+        return df.coalesce(1).sortWithinPartitions("time", "value")
+    return df.orderBy("uuid", "time", "value")
 
 
 def nearest_all(

@@ -16,8 +16,11 @@ below the handler layer):
   envelope of serve.go:116-133).
 
 Results iterate through ``toLocalIterator()`` — the driver holds one
-partition at a time, not the whole result, so a full-history RawValues
-scan streams at bounded memory exactly like the reference's cursor.
+partition at a time, not the whole result. A single-stream RawValues
+result is ONE partition (operators/raw.py sorts it without a range
+shuffle), so this process holds that stream's whole range result; the
+response itself still goes out in bounded batches. Multi-stream results
+stay range-partitioned and stream a partition at a time.
 
 Concurrency: ThreadingHTTPServer gives one thread per request; reads are
 lock-free (generation-pointer MVCC), mutations serialize on the engine's
@@ -36,6 +39,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame
+
+from .engine import NoSuchStream
 
 RESULTS_BATCH_SIZE = 5000  # grpcinterface/serve.go:58
 
@@ -139,11 +144,9 @@ class BTrDBService:
     def rpc_StreamInfo(self, req: dict):
         from pyspark.sql import functions as F
 
+        # raises NoSuchStream (404) for an unknown or obliterated uuid
         major, minor = self.engine.stream_version(req["uuid"])
-        rows = self.engine.streams.filter(F.col("uuid") == req["uuid"]).collect()
-        if not rows:
-            raise RpcError(404, f"no such stream: {req['uuid']}")
-        r = rows[0]
+        r = self.engine.streams.filter(F.col("uuid") == req["uuid"]).collect()[0]
         return {
             "uuid": r["uuid"],
             "collection": r["collection"],
@@ -637,7 +640,11 @@ class BTrDBService:
                     req = json.loads(self.rfile.read(length) or b"{}")
                     if handler is None:
                         raise RpcError(404, f"unknown RPC: {name}")
-                    meta, batches = handler(req)
+                    try:
+                        meta, batches = handler(req)
+                    except NoSuchStream as e:
+                        # a KeyError too; a missing request field stays 400
+                        raise RpcError(404, e.args[0]) from e
                 except RpcError as e:
                     self._send_chunks([{"error": {"code": e.code, "msg": e.msg}}])
                     return

@@ -701,6 +701,65 @@ def read_stamp(base: str, name: str) -> str | None:
         return None
 
 
+def table_signature(backend: StoreBackend, base: str, name: str) -> tuple | None:
+    """(generation path, change marker) of table ``name``, or None when
+    the table was never written. The marker is the mutation stamp — O(1)
+    — or, for a stampless legacy store, the full parquet_signature walk.
+    Appends bump the stamp and rewrites flip the path, so two equal
+    signatures name the same table contents: every query-path memo keys
+    on this."""
+    path = backend.resolve(base, name)
+    if path is None:
+        return None
+    stamp = read_stamp(base, name)
+    return (path, stamp if stamp is not None else parquet_signature(path))
+
+
+def memo_scan(spark, backend: StoreBackend, memo: dict, base: str, name: str):
+    """``spark.read.parquet`` of table ``name``, memoized in ``memo`` on
+    its table_signature: a read costs ~0.1-0.2 s of JVM listing and
+    schema inference, which dominated short-query latency. None = no
+    parquet yet. On a miss the parquet walk is the emptiness check: a
+    stamped tree that holds only ``_temporary/`` staging files must read
+    as absent, not throw UNABLE_TO_INFER_SCHEMA. Mutation paths stay
+    unmemoized — they must read the precise generation they CAS
+    against.
+
+    A miss runs no Spark job either: Spark infers a parquet schema from
+    ONE file's footer, but does it in a one-task job. This function
+    reads the same footer in-process (the walk already named the file)
+    and hands Spark the schema Spark itself stored there."""
+    sig = table_signature(backend, base, name)
+    if sig is None:
+        return None
+    hit = memo.get(name)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    path, marker = sig
+    files = marker if isinstance(marker, tuple) else parquet_signature(path)
+    df = None
+    if files:
+        schema = _spark_footer_schema(os.path.join(path, files[0][0]))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
+    memo[name] = (sig, df)
+    return df
+
+
+def _spark_footer_schema(parquet_file: str):
+    """The Spark schema a Spark writer stored in a parquet footer (the
+    ``org.apache.spark.sql.parquet.row.metadata`` key, which Spark's own
+    inference prefers), or None for a file written by anything else."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_schema(parquet_file).metadata or {}
+    js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if js is None else StructType.fromJson(json.loads(js))
+
+
 def link_tree(src: str, dst: str, skip_existing: bool = False) -> None:
     """Recreate ``src`` under ``dst`` with hardlinked files: O(#files)
     metadata operations, zero data copied. Used for the partition

@@ -1,0 +1,79 @@
+"""Interactive reads run no hidden Spark jobs.
+
+A read of an unchanged store costs one job: stream_version is memoized on
+the signatures of the tables it reads, a table with no parquet yet is left
+out of the plan, memoized scans take their schema from a parquet footer,
+and a single-stream raw read sorts inside one partition instead of through
+a range shuffle. Jobs are counted as deltas of the DAG scheduler's job id
+counter around each call. The memo must still see every write, whether it
+comes through the memoizing engine or through another engine on the same
+base dir.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from btrdb_spark.engine import BTrDBEngine, NoSuchStream
+
+
+def _jobs(spark, fn):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = fn()
+    return dag.nextJobId() - j0, out
+
+
+def test_reads_of_unchanged_store_run_one_job(spark, tmp_path):
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9, ladder=True)
+    u = eng.create_stream("jobs/a")
+    eng.insert(u, [(i << 20, float(i % 13)) for i in range(3000)], sync=True)
+    # no deletes and no buffered rows: the steady state of a plotted stream
+    assert eng.stream_version(u)[1] == 0
+
+    assert _jobs(spark, lambda: eng.stream_version(u)) == (0, eng.stream_version(u))
+    builds = {
+        "raw_values": lambda: eng.raw_values(u, 0, 1 << 40),
+        "aligned_windows": lambda: eng.aligned_windows(u, 0, 1 << 40, 30),
+        "windows": lambda: eng.windows(u, 0, 1 << 40, 1 << 31),
+    }
+    for name, build in builds.items():
+        n, _df = _jobs(spark, build)
+        assert n == 0, f"building {name} ran {n} Spark jobs"
+
+    df = builds["raw_values"]()
+    n, rows = _jobs(spark, df.collect)
+    assert n == 1
+    assert [(r["time"], r["value"]) for r in rows] == [
+        (i << 20, float(i % 13)) for i in range(3000)
+    ]
+
+
+def _version_or_gone(eng, u):
+    try:
+        return eng.stream_version(u)
+    except NoSuchStream:
+        return "gone"
+
+
+@pytest.mark.parametrize("writer", ["same_engine", "other_engine"])
+def test_version_memo_sees_every_write(spark, tmp_path, writer):
+    base = str(tmp_path / "db")
+    a = BTrDBEngine(spark, base, flush_threshold=10**9)
+    u = a.create_stream("memo/a")
+    a.insert(u, [(i * 10, float(i)) for i in range(100)], sync=True)
+    w = a if writer == "same_engine" else BTrDBEngine(spark, base, flush_threshold=10**9)
+    steps = [
+        ("insert", lambda: w.insert(u, [(5000 + i, 1.0) for i in range(10)])),
+        ("flush", lambda: w.flush(u)),
+        ("delete_range", lambda: w.delete_range(u, 0, 500)),
+        ("compact_points", lambda: w.compact_points()),
+        ("obliterate", lambda: w.obliterate(u, defer_gc=True)),
+    ]
+    for name, write in steps:
+        before = a.stream_version(u)  # A's memo holds the pre-write answer
+        write()
+        fresh = _version_or_gone(BTrDBEngine(spark, base, flush_threshold=10**9), u)
+        assert _version_or_gone(a, u) == fresh, name
+        if name != "compact_points":  # compaction moves no version
+            assert fresh != before, name

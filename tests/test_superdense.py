@@ -85,3 +85,32 @@ def test_engine_roundtrip_superdense(spark, tmp_path):
     assert [r["value"] for r in got] == [float(i) for i in range(N)]
     aw = eng.aligned_windows(u, 0, 2048, pw=11).collect()
     assert aw[0]["cnt"] == N and aw[0]["vmax"] == float(N - 1)
+
+
+def test_engine_single_stream_order_matches_multi_stream_sort(spark, tmp_path):
+    """The single-stream raw read sorts inside one partition; it must give
+    the rows, in order, that the multi-stream range sort gives for that
+    stream — over duplicates spread across two cold flush files, the hot
+    buffer and a delete."""
+    from pyspark.sql import functions as F
+
+    eng = BTrDBEngine(spark, str(tmp_path / "ord"), flush_threshold=10**9)
+    u, other = eng.create_stream("c/order"), eng.create_stream("c/order2")
+    eng.insert(u, [(T, float(i % 50)) for i in range(300)] + [(100, 3.0), (100, 1.0)], sync=True)
+    eng.insert(
+        u, [(T, float(-i)) for i in range(300)] + [(100, 2.0), (2000, 5.0), (2000, 5.0)], sync=True
+    )
+    eng.insert(other, [(T, 1.0), (T, 0.5)], sync=True)
+    eng.delete_range(u, 50, 150)  # hides every committed point at t=100
+    # buffered after the delete, so visible
+    eng.insert(u, [(T, 0.25), (T, 7.0), (100, 9.0), (2000, 5.0)])
+    eng.insert(other, [(T, 2.0)])
+
+    got = [(r["time"], r["value"]) for r in eng.raw_values(u, 0, 3000).collect()]
+    pts, dels = eng._queryable(None)
+    multi = raw_ops.raw_values(pts, None, 0, 3000, deletes=dels).filter(F.col("uuid") == u)
+    assert got == [(r["time"], r["value"]) for r in multi.collect()]
+    assert len(got) == 302 + 303 - 3 + 4
+    assert got == sorted(got)
+    assert [v for t, v in got if t == 100] == [9.0]
+    assert got.count((2000, 5.0)) == 3

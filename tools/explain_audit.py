@@ -644,6 +644,12 @@ def main() -> int:
         pf = bounded.split("PartitionFilters:")[1][:300] if "PartitionFilters:" in bounded else ""
         if "time_bucket" not in pf:
             bad.append("engine_raw_bounded: time_bucket partition pruning missing")
+        # a single-stream read of a delete-free store plans nothing that
+        # costs a job of its own: no Python-built empty frame, no range
+        # shuffle (and its sampling job), no tombstone broadcast
+        for frag in ("Scan ExistingRDD", "rangepartitioning", "BroadcastExchange"):
+            if frag in plan:
+                bad.append(f"engine_raw_single_stream: contains {frag!r}")
 
     # DISTIL write path: the seq-stamping row_number must rank within
     # time buckets (data shuffles on the bucket key), never as a global
@@ -707,7 +713,7 @@ def main() -> int:
 
     for b in bad:
         print("VIOLATION", b)
-    print(f"{len(bad)} violations across {len(RULES) + 7} audited plans")
+    print(f"{len(bad)} violations across {len(RULES) + 8} audited plans")
     return 1 if bad else 0
 
 
