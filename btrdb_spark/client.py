@@ -210,9 +210,9 @@ class Stream:
     ) -> list[StatPoint]:
         return [
             StatPoint(r["bucket_start"], r["vmin"], r["vmean"], r["vmax"], r["cnt"])
-            for r in self.engine.aligned_windows(
+            for r in self.engine.aligned_windows_rows(
                 self._uuid, start, end, pointwidth, version=version
-            ).collect()
+            )
         ]
 
     def windows(

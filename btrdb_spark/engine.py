@@ -43,7 +43,7 @@ import re
 import threading
 import time as timelib
 import uuid as uuidlib
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1202,9 +1202,27 @@ class BTrDBEngine:
             return True, False
         return set(dv) <= self.ladder.rebase_versions(uuid, lvl), True
 
+    def _ladder_route(
+        self, uuid: str, pw: int, version: int | None
+    ) -> tuple[int, bool, bool] | None:
+        """The routing decision for a single-stream A1 read, made once
+        for both tiers: None when only raw points answer it exactly,
+        else (level, include_rebase, hot). ``hot`` marks a latest read
+        of a stream with buffered rows (the A5/A6 overlay merge); a
+        pinned read sees only committed data."""
+        if self.ladder is None or uuid in self._pending_gc:
+            return None
+        from .plans.rollup import route_level
+
+        lvl = route_level(pw, self.ladder.levels)
+        routable, include_rebase = self._ladder_gate(uuid, lvl)
+        if not routable:
+            return None
+        return lvl, include_rebase, version is None and self._buffered(uuid)
+
     def _aligned_windows_hot_merge(
         self, uuid: str, start: int, end: int, pw: int, include_rebase: bool
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """A5/A6 — AlignedWindows for a stream WITH buffered rows, without
         rescanning cold points: ladder partials for the committed interior
         plus an O(buffer) rollup of the hot overlay, combined with the
@@ -1217,8 +1235,6 @@ class BTrDBEngine:
         cold = self.ladder.aligned_partials(
             uuid, start, end, pw, version=None, include_rebase=include_rebase
         )
-        if cold is None:
-            return None
         width = 1 << pw
         snap_s = start - (start % width + width) % width
         snap_e = end - (end % width + width) % width
@@ -1230,32 +1246,37 @@ class BTrDBEngine:
         hot_part = ru.rollup_points(overlay, pw)
         return ru.finalize_stats(ru.combine(cold.unionByName(hot_part)))
 
-    def aligned_windows(self, uuid: str, start: int, end: int, pw: int, version: int | None = None) -> DataFrame:
-        """A1 — routed through the rollup ladder when it can answer exactly:
-        a maintained level at or below pw and (for deleted streams) full
-        rebase-snapshot coverage. Latest-version reads of streams with
-        buffered rows merge the ladder with an O(buffer) hot overlay
-        instead of falling back to a cold rescan (A5/A6). Otherwise the
-        raw path (always exact; the ladder is a pure accelerator)."""
-        if self.ladder is not None and uuid not in self._pending_gc:
-            from .plans.rollup import route_level
+    def _arrow_tier(
+        self, route, uuid: str, start: int, end: int, pw: int, version: int | None
+    ):
+        """The Arrow tier's answer to a routed A1 read: a pyarrow Table
+        ``(bucket_start, cnt, vmin, vmean, vmax)`` computed on the driver
+        from committed ladder partials without a Spark job, or None when
+        the read must run on Spark.
 
-            lvl = route_level(pw, self.ladder.levels)
-            routable, include_rebase = self._ladder_gate(uuid, lvl)
-            if routable:
-                if version is None and self._buffered(uuid):
-                    routed = self._aligned_windows_hot_merge(
-                        uuid, start, end, pw, include_rebase
-                    )
-                else:
-                    # versioned reads see only committed data, so the hot
-                    # buffer never participates at a pinned version
-                    routed = self.ladder.aligned_windows(
-                        uuid, start, end, pw, version=version,
-                        include_rebase=include_rebase,
-                    )
-                if routed is not None:
-                    return routed
+        The tier takes a read only when the route found a ladder level,
+        no tombstones (no rebase resolution) and no hot-buffer merge (a
+        pinned read, or no buffered rows: the merge's raw
+        double-to-decimal casts stay in Spark). The ladder then declines
+        a level that is not in the additive format or a slice over its
+        row bound (RollupLadder.aligned_windows_arrow)."""
+        if route is None or route[1] or route[2]:
+            return None
+        return self.ladder.aligned_windows_arrow(uuid, start, end, pw, version=version)
+
+    def _aligned_windows_plan(
+        self, route, uuid: str, start: int, end: int, pw: int, version: int | None
+    ) -> DataFrame:
+        """The Spark plan of a routed A1 read (see aligned_windows)."""
+        if route is not None:
+            _lvl, include_rebase, hot = route
+            if hot:
+                return self._aligned_windows_hot_merge(uuid, start, end, pw, include_rebase)
+            # versioned reads see only committed data, so the hot
+            # buffer never participates at a pinned version
+            return self.ladder.aligned_windows(
+                uuid, start, end, pw, version=version, include_rebase=include_rebase
+            )
         # prune with the SNAPPED bounds (the operator widens start downward
         # to the 2^pw grid — quasar.go:279-283), never the raw ones
         width = 1 << pw
@@ -1263,6 +1284,41 @@ class BTrDBEngine:
         snap_e = end - (end % width + width) % width
         pts, dels = self._queryable(version, uuid, snap_s, snap_e)
         return win_ops.aligned_windows(pts, uuid, start, end, pw, version=version, deletes=dels)
+
+    def aligned_windows(self, uuid: str, start: int, end: int, pw: int, version: int | None = None) -> DataFrame:
+        """A1 — routed through the rollup ladder when it can answer exactly:
+        a maintained level at or below pw and (for deleted streams) full
+        rebase-snapshot coverage. Latest-version reads of streams with
+        buffered rows merge the ladder with an O(buffer) hot overlay
+        instead of falling back to a cold rescan (A5/A6). Otherwise the
+        raw path (always exact; the ladder is a pure accelerator)."""
+        route = self._ladder_route(uuid, pw, version)
+        return self._aligned_windows_plan(route, uuid, start, end, pw, version)
+
+    def aligned_windows_rows(
+        self, uuid: str, start: int, end: int, pw: int, version: int | None = None
+    ) -> Iterator[dict]:
+        """A1 delivered to the driver: an iterator of row dicts
+        ``(bucket_start, cnt, vmin, vmean, vmax)`` in bucket order, for
+        callers that consume the answer in this process (the service, the
+        client). The read is routed once: the Arrow tier's table when it
+        serves (read here; the driver holds the finished result, one row
+        per bucket), else the aligned_windows plan, built here and drained
+        partition-at-a-time through toLocalIterator as the iterator is
+        consumed."""
+        route = self._ladder_route(uuid, pw, version)
+        tbl = self._arrow_tier(route, uuid, start, end, pw, version)
+        if tbl is not None:
+            return (row for batch in tbl.to_batches() for row in batch.to_pylist())
+        df = self._aligned_windows_plan(route, uuid, start, end, pw, version).select(
+            "bucket_start", "cnt", "vmin", "vmean", "vmax"
+        )
+
+        def drain():
+            for row in df.toLocalIterator():
+                yield row.asDict()
+
+        return drain()
 
     def windows(
         self,
@@ -1304,8 +1360,8 @@ class BTrDBEngine:
         pts, dels = self._queryable(
             version, uuid, start=None if backward else t, end=t if backward else None
         )
-        out = raw_ops.nearest_all(pts, t, backward, version=version, deletes=dels).collect()
-        return (out[0]["time"], out[0]["value"]) if out else None
+        row = raw_ops.nearest(pts, t, backward, version=version, deletes=dels).collect()[0]
+        return None if row["time"] is None else (row["time"], row["value"])
 
     def aligned_windows_collection(
         self,
@@ -1340,21 +1396,13 @@ class BTrDBEngine:
         self, uuid: str, from_ver: int, to_ver: int | None, resolution: int
     ) -> DataFrame:
         """V2. to_ver=None means latest: committed changes > from_ver PLUS
-        the buckets touched by the unflushed buffer (pqm.go:357-381)."""
-        pts = self.points_pruned(uuid)
-        if to_ver is None:
-            hot = self.hot
-            if uuid is not None:
-                hot = hot.filter(F.col("uuid") == uuid)
-            overlay = hot.select(
-                "uuid", "time", "value", F.lit(1 << 62).cast("long").alias("version")
-            )
-            pts = pts.unionByName(overlay)
-            to_ver = 1 << 62
-        if self._pending_gc:
-            pts = pts.filter(~F.col("uuid").isin(sorted(self._pending_gc)))
+        the buckets touched by the unflushed buffer (pqm.go:357-381).
+        Planned over _queryable, so a hot or deletes table with no
+        parquet yet is left out."""
+        pts, dels = self._queryable(to_ver, uuid)
         return chg_ops.changed_ranges(
-            pts, uuid, from_ver, to_ver, resolution, deletes=self.deletes
+            pts, uuid, from_ver, 1 << 62 if to_ver is None else to_ver, resolution,
+            deletes=dels,
         )
 
     # ---------- SQL surface ----------

@@ -15,7 +15,9 @@ result is sorted inside one partition (coalesce(1) + sortWithinPartitions):
 no sampling job and no range exchange, at the price that one task, and the
 process that drains it, hold that stream's whole range result. A
 multi-stream result keeps the range-partitioned orderBy. The set-oriented
-nearest over *all* streams is one shuffle (groupBy uuid).
+nearest over *all* streams is one shuffle (groupBy uuid); single-stream
+nearest is one global aggregate: partial picks in parallel, then one
+single-row-per-partition exchange, with no groupBy and no sort.
 """
 
 from __future__ import annotations
@@ -82,6 +84,23 @@ def raw_values(
     return df.orderBy("uuid", "time", "value")
 
 
+def _nearest_pick(df: DataFrame, t: int, backward: bool) -> tuple[DataFrame, Column, Column]:
+    """(rows on the query's side of t, the pick aggregate ``p``, the
+    picked value column) for J3. backward: max(time) with time < t
+    (exclusive); forward: min(time) with time >= t (qtree/qtree.go:24-26).
+    Among duplicate timestamps the reference returns the stored-order
+    point; we deterministically return the max value (documented
+    divergence, duplicates are pathological). max/min of a struct picks
+    the row without a window sort."""
+    if backward:
+        # max(time), tie -> max(value)
+        pick = F.max(F.struct(F.col("time"), F.col("value"))).alias("p")
+        return df.filter(F.col("time") < F.lit(t)), pick, F.col("p.value")
+    # min(time), tie -> max(value): order by (time, -value) ascending
+    pick = F.min(F.struct(F.col("time"), (-F.col("value")).alias("nv"))).alias("p")
+    return df.filter(F.col("time") >= F.lit(t)), pick, -F.col("p.nv")
+
+
 def nearest_all(
     points: DataFrame,
     t: int,
@@ -89,30 +108,31 @@ def nearest_all(
     version: int | None = None,
     deletes: DataFrame | None = None,
 ) -> DataFrame:
-    """J3 set-oriented: nearest point to t for every stream at once.
-
-    backward: last point with time < t (exclusive); forward: first point
-    with time >= t (qtree/qtree.go:24-26). Among duplicate timestamps the
-    reference returns the stored-order point; we deterministically return
-    the max value (documented divergence, duplicates are pathological).
-
-    One shuffle: filter -> per-uuid argmin/argmax via max_by/min_by struct
-    ordering (no window-function sort of the whole stream).
-    """
+    """J3 set-oriented: nearest point to t for every stream at once
+    (pick and tie rule: _nearest_pick). One shuffle: filter -> per-uuid
+    argmin/argmax."""
     df = apply_deletes(at_version(points, version), deletes, version)
-    if backward:
-        # max(time), tie -> max(value)
-        df = df.filter(F.col("time") < F.lit(t))
-        pick = F.max(F.struct(F.col("time"), F.col("value"))).alias("p")
-        out = df.groupBy("uuid").agg(pick)
-        val = F.col("p.value")
-    else:
-        # min(time), tie -> max(value): order by (time, -value) ascending
-        df = df.filter(F.col("time") >= F.lit(t))
-        pick = F.min(F.struct(F.col("time"), (-F.col("value")).alias("nv"))).alias("p")
-        out = df.groupBy("uuid").agg(pick)
-        val = -F.col("p.nv")
+    df, pick, val = _nearest_pick(df, t, backward)
+    out = df.groupBy("uuid").agg(pick)
     return out.select("uuid", F.col("p.time").alias("time"), val.alias("value")).orderBy("uuid")
+
+
+def nearest(
+    points: DataFrame,
+    t: int,
+    backward: bool,
+    version: int | None = None,
+    deletes: DataFrame | None = None,
+) -> DataFrame:
+    """J3 for one stream (``points`` holds only that stream): the same
+    pick as nearest_all, as one global aggregate. Each input partition
+    computes a partial pick in parallel and the exchange carries one row
+    per partition; there is no groupBy and no sort. Returns one row
+    ``(time, value)``, both null when no point lies on the query's side
+    of t."""
+    df = apply_deletes(at_version(points, version), deletes, version)
+    df, pick, val = _nearest_pick(df, t, backward)
+    return df.agg(pick).select(F.col("p.time").alias("time"), val.alias("value"))
 
 
 def snapshot(points: DataFrame, at: int, lookback: int | None = None) -> DataFrame:

@@ -26,6 +26,9 @@ Design:
   answered from the *coarsest* level <= pw (fewest rows scanned), with
   one re-bucketing groupBy. Levels divide evenly (step 6), so bucket
   edges always align. pw finer than the finest level -> raw points.
+- **Driver-side read**: a single-stream, delete-free slice of at most
+  ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
+  (RollupLadder.aligned_windows_arrow), without a Spark job.
 
 Scale: each coarser level is 64x smaller; the whole ladder costs ~1.6%
 extra storage (sum of 64^-k). A year of 1 ns data at pw=20 is ~31M
@@ -54,6 +57,17 @@ ROLLUP_COLS = ["uuid", "bucket_start", "cnt", "vmin", "vmax", "vsum"]
 # bucket_start (points are bounded by schemas.MIN_TIME); if a widest-range
 # query ever admits it, apply_rebase's trailing cnt>0 filter drops it.
 REBASE_SENTINEL_BUCKET = -(1 << 62)
+
+# Largest ladder slice, in rows, that RollupLadder.aligned_windows_arrow
+# loads on the driver: the level rows that pass the read's filter (uuid,
+# bucket range, version) must number at most this, or the read stays on
+# Spark. It bounds driver memory (about 60 B a row in Arrow); it is not a
+# knob.
+ARROW_MAX_ROWS = 1 << 18
+# Columns of the additive (r6) level format, the only one the Arrow read
+# serves; a file with an inline ``rebase`` column, or without ``version``,
+# keeps its read on Spark.
+_ADDITIVE_COLS = {*ROLLUP_COLS, "version"}
 
 
 def rollup_points(points: DataFrame, pw: int, versioned: bool = False) -> DataFrame:
@@ -420,6 +434,9 @@ class RollupLadder:
         # path). A changed signature is exactly a changed table — a hit
         # can never serve stale data.
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
+        # pyarrow datasets of the levels, keyed the same way; a memoized
+        # dataset keeps the footers it has read
+        self._ds_memo: dict[str, tuple[tuple, object]] = {}
 
     def _read_memo(self, name: str) -> DataFrame | None:
         """Read table ``name`` behind its generation pointer, memoized on
@@ -637,6 +654,98 @@ class RollupLadder:
             uuid, start, end, pw, version=version, include_rebase=include_rebase
         )
         return None if partials is None else finalize_stats(partials)
+
+    def _arrow_level(self, pw: int):
+        """pyarrow dataset over level pw's live generation, memoized on
+        its table signature; None = never written. Dataset discovery
+        skips every path with a component starting ``_`` or ``.``, the
+        rule Spark applies to ``_temporary/`` staging and ``_SUCCESS``."""
+        import pyarrow.dataset as ds
+
+        from .. import store as store_mod
+
+        name = self._name(pw)
+        sig = store_mod.table_signature(self.store, self.base, name)
+        if sig is None:
+            return None
+        hit = self._ds_memo.get(name)
+        if hit is None or hit[0] != sig:
+            hit = self._ds_memo[name] = (sig, ds.dataset(sig[0], format="parquet"))
+        return hit[1]
+
+    def aligned_windows_arrow(
+        self, uuid: str, start: int, end: int, pw: int, version: int | None = None
+    ):
+        """A1 for one stream from the main (additive) level, computed on
+        the driver with Arrow: no Spark job. The caller must know the
+        stream has no tombstones, so the rebase sidecar is not read (the
+        ``include_rebase=False`` case of aligned_windows, whose answer
+        this equals exactly).
+
+        Same filter as partials_from_rollup (uuid, snapped bucket range,
+        and ``version <= v`` when pinned), same pw re-bucketing, exact
+        decimal128 sums, and ``vmean = float(vsum) / cnt``: Python's
+        Decimal-to-float is correctly rounded like Spark's cast, which
+        Arrow's decimal cast is not. Returns a Table
+        ``(bucket_start, cnt, vmin, vmean, vmax)`` sorted by bucket, or
+        None when the read must stay on Spark: pw finer than the ladder
+        or past the int64 grid, a level never written, a level file not
+        in the additive format, or a slice of more than ARROW_MAX_ROWS
+        level rows (counted as the filtered scan streams in, which stops at
+        the first batch past the bound)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        lvl = route_level(pw, self.levels)
+        if lvl is None or pw > 62:
+            return None
+        width = 1 << pw
+        snap_s = start - (start % width + width) % width
+        snap_e = end - (end % width + width) % width
+        cond = (
+            (ds.field("uuid") == uuid)
+            & (ds.field("bucket_start") >= snap_s)
+            & (ds.field("bucket_start") < snap_e)
+        )
+        if version is not None:
+            cond = cond & (ds.field("version") <= version)
+        level = self._arrow_level(lvl)
+        if level is None:
+            return None
+        for frag in level.get_fragments():
+            names = set(frag.physical_schema.names)
+            if not _ADDITIVE_COLS <= names or "rebase" in names:
+                return None
+        # footer statistics skip row groups; the bound counts the rows
+        # the filter keeps, i.e. what the driver holds for this slice
+        scan = level.scanner(
+            columns=["bucket_start", "cnt", "vmin", "vmax", "vsum"], filter=cond
+        )
+        batches, rows = [], 0
+        for batch in scan.to_batches():
+            rows += batch.num_rows
+            if rows > ARROW_MAX_ROWS:
+                return None
+            batches.append(batch)
+        tbl = pa.Table.from_batches(batches, scan.projected_schema)
+        b = tbl["bucket_start"].to_numpy()
+        g = (
+            tbl.set_column(0, "bucket_start", pa.array((b >> pw) << pw, pa.int64()))
+            .group_by("bucket_start")
+            .aggregate([("cnt", "sum"), ("vmin", "min"), ("vmax", "max"), ("vsum", "sum")])
+            .sort_by("bucket_start")
+        )
+        vmean = [
+            float(s) / c
+            for s, c in zip(g["vsum_sum"].to_pylist(), g["cnt_sum"].to_pylist())
+        ]
+        return pa.table({
+            "bucket_start": g["bucket_start"],
+            "cnt": g["cnt_sum"],
+            "vmin": g["vmin_min"],
+            "vmean": pa.array(vmean, pa.float64()),
+            "vmax": g["vmax_max"],
+        })
 
     def windows(
         self,

@@ -22,6 +22,14 @@ shuffle), so this process holds that stream's whole range result; the
 response itself still goes out in bounded batches. Multi-stream results
 stay range-partitioned and stream a partition at a time.
 
+AlignedWindows takes its rows from BTrDBEngine.aligned_windows_rows. A
+committed stream without tombstones is answered there on the driver,
+without a Spark job, when the engine's Arrow tier serves it: this process
+loads at most plans/rollup.py ARROW_MAX_ROWS ladder rows of the stream's
+slice with pyarrow and holds the finished result, one row per bucket, as
+an Arrow table while the batches go out. Every other stat read drains
+its DataFrame through ``toLocalIterator()`` as above.
+
 Concurrency: ThreadingHTTPServer gives one thread per request; reads are
 lock-free (generation-pointer MVCC), mutations serialize on the engine's
 write RLock. Multi-process safety stays with the store backends' CAS.
@@ -69,17 +77,25 @@ class RpcError(Exception):
         self.msg = msg
 
 
-def _batches(df: DataFrame, cols: list[str]):
-    """Yield lists of row-dicts, <= RESULTS_BATCH_SIZE each, streaming
-    partition-at-a-time through the driver."""
+def _chunked(rows):
+    """Yield lists of the row-dicts ``rows`` yields, <= RESULTS_BATCH_SIZE
+    each, pulling rows only as batches are taken."""
     batch: list[dict] = []
-    for row in df.select(*cols).toLocalIterator():
-        batch.append({c: row[c] for c in cols})
+    for row in rows:
+        batch.append(row)
         if len(batch) >= RESULTS_BATCH_SIZE:
             yield batch
             batch = []
     if batch:
         yield batch
+
+
+def _batches(df: DataFrame, cols: list[str]):
+    """Yield lists of row-dicts, <= RESULTS_BATCH_SIZE each, streaming
+    partition-at-a-time through the driver."""
+    yield from _chunked(
+        {c: row[c] for c in cols} for row in df.select(*cols).toLocalIterator()
+    )
 
 
 class BTrDBService:
@@ -190,16 +206,16 @@ class BTrDBService:
 
     def rpc_AlignedWindows(self, req: dict):
         version = req.get("versionMajor")
-        df = self.engine.aligned_windows(
-            req["uuid"], int(req["start"]), int(req["end"]),
-            int(req["pointWidth"]), version=version,
-        )
+        args = (req["uuid"], int(req["start"]), int(req["end"]), int(req["pointWidth"]))
+        # the label is read before the data (the Arrow tier reads it
+        # right away), so a racing commit can only make the data newer
+        # than its versionMajor, never older
         major = version if version is not None else self._latest_major(req["uuid"])
-        out = df.withColumnRenamed("bucket_start", "time").withColumnRenamed(
-            "cnt", "count"
-        )
-        return {"versionMajor": major}, _batches(
-            out, ["time", "count", "vmin", "vmean", "vmax"]
+        rows = self.engine.aligned_windows_rows(*args, version=version)
+        return {"versionMajor": major}, _chunked(
+            {"time": r["bucket_start"], "count": r["cnt"], "vmin": r["vmin"],
+             "vmean": r["vmean"], "vmax": r["vmax"]}
+            for r in rows
         )
 
     def rpc_Windows(self, req: dict):

@@ -36,10 +36,13 @@ def test_reads_of_unchanged_store_run_one_job(spark, tmp_path):
         "raw_values": lambda: eng.raw_values(u, 0, 1 << 40),
         "aligned_windows": lambda: eng.aligned_windows(u, 0, 1 << 40, 30),
         "windows": lambda: eng.windows(u, 0, 1 << 40, 1 << 31),
+        "changed_ranges": lambda: eng.changed_ranges(u, 0, None, 30),
     }
     for name, build in builds.items():
-        n, _df = _jobs(spark, build)
+        n, df = _jobs(spark, build)
         assert n == 0, f"building {name} ran {n} Spark jobs"
+        # absent hot/deletes tables are left out, not planned as empty frames
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString(), name
 
     df = builds["raw_values"]()
     n, rows = _jobs(spark, df.collect)
@@ -77,3 +80,49 @@ def test_version_memo_sees_every_write(spark, tmp_path, writer):
         assert _version_or_gone(a, u) == fresh, name
         if name != "compact_points":  # compaction moves no version
             assert fresh != before, name
+
+
+def test_rpc_job_counts(spark, tmp_path, monkeypatch):
+    """Through the service: a warm AlignedWindows of a committed stream is
+    served by the driver-side Arrow tier with no Spark job, and Nearest is
+    two: the parallel partial picks, then the final pick over one row per
+    partition (no groupBy, no sort). On a buffered stream the tier's
+    eligibility check runs no job and opens no parquet file before handing
+    the read to Spark."""
+    import pyarrow.dataset
+    import pyarrow.parquet
+
+    from btrdb_spark.service import BTrDBHttpClient, BTrDBService
+
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9, ladder=True)
+    u, hot = (eng.create_stream(f"jobs/{i}") for i in range(2))
+    rows = [(s, i << 20, float(i % 13)) for s in (u, hot) for i in range(3000)]
+    eng.bulk_load(spark.createDataFrame(rows, "uuid string, time long, value double"))
+    eng.insert(hot, [(7, 1.0)])
+    svc = BTrDBService(eng)
+    cli = BTrDBHttpClient("127.0.0.1", svc.start())
+    try:
+        stat = dict(uuid=u, start=0, end=1 << 40, pointWidth=26)
+        cli.rows("AlignedWindows", **stat)  # warm: memos and footers
+        n, (_meta, rows) = _jobs(spark, lambda: cli.rows("AlignedWindows", **stat))
+        assert n == 0 and sum(r["count"] for r in rows) == 3000
+        near = dict(uuid=u, time=1000 << 20, backward=True)
+        n, (meta, _rows) = _jobs(spark, lambda: cli.rows("Nearest", **near))
+        assert n == 2 and (meta["time"], meta["value"]) == (999 << 20, float(999 % 13))
+    finally:
+        svc.stop()
+
+    eng.stream_version(hot)  # warm the version memo
+
+    def no_parquet(*a, **kw):
+        raise AssertionError("the eligibility check opened parquet")
+
+    monkeypatch.setattr(pyarrow.dataset, "dataset", no_parquet)
+    monkeypatch.setattr(pyarrow.parquet, "read_schema", no_parquet)
+    monkeypatch.setattr(pyarrow.parquet, "ParquetFile", no_parquet)
+    def eligible():
+        route = eng._ladder_route(hot, 26, None)
+        assert route is not None and route[2]  # buffered at latest: the hot merge
+        return eng._arrow_tier(route, hot, 0, 1 << 40, 26, None)
+
+    assert _jobs(spark, eligible) == (0, None)
