@@ -154,10 +154,10 @@ class Stream:
         return self._uuid
 
     def _row(self):
-        rows = self.engine.streams.filter(F.col("uuid") == self._uuid).collect()
-        if not rows or rows[0]["tombstoned"] is not None:
+        row = self.engine.stream_row(self._uuid)
+        if row is None or row["tombstoned"] is not None:
             raise KeyError(f"no such stream: {self._uuid}")
-        return rows[0]
+        return row
 
     def collection(self) -> str:
         return self._row()["collection"]
@@ -200,9 +200,7 @@ class Stream:
     def values(self, start: int, end: int, version: int | None = None) -> list[RawPoint]:
         return [
             RawPoint(r["time"], r["value"])
-            for r in self.engine.raw_values(self._uuid, start, end, version=version)
-            .orderBy("time", "value")
-            .collect()
+            for r in self.engine.raw_values_rows(self._uuid, start, end, version=version)
         ]
 
     def aligned_windows(

@@ -40,6 +40,7 @@ from __future__ import annotations
 import functools
 import os
 import re
+import struct
 import threading
 import time as timelib
 import uuid as uuidlib
@@ -90,6 +91,61 @@ def uuid_bucket(col, n: int = N_UUID_BUCKETS):
     a stream's data so single-stream queries prune to one partition
     directory. At 100 TB raise the store's fanout (compact_points migrates)."""
     return F.pmod(F.xxhash64(col), F.lit(n))
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64`` of a
+    single string column (its UTF-8 bytes, seed 42), computed on the
+    driver without a job."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64, (seed - _P1) & _M64]
+        while i <= n - 32:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= (struct.unpack_from("<I", data, i)[0] * _P1) & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= (b * _P5) & _M64
+        h = (_rotl(h, 11) * _P1) & _M64
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def uuid_bucket_of(uuid: str, n: int = N_UUID_BUCKETS) -> int:
+    """uuid_bucket of one uuid on the driver: Spark's
+    ``pmod(xxhash64(uuid), n)``, without a job."""
+    return xxhash64(uuid.encode("utf-8")) % n
 
 
 def time_bucket(col, pw: int = TIME_PARTITION_PW):
@@ -151,6 +207,10 @@ class BTrDBEngine:
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
         # stream_version memo: (table signatures, {uuid: (major, minor)})
         self._version_memo: tuple[tuple | None, dict] = (None, {})
+        # stream_row memo: (streams signature, {uuid: catalog Row})
+        self._row_memo: tuple[tuple | None, dict] = (None, {})
+        # pyarrow datasets of the raw tier: see store.memo_dataset
+        self._ds_memo: dict[str, tuple[tuple, dict]] = {}
         os.makedirs(base_dir, exist_ok=True)
         self._init_layout()
         # uuids tombstoned with defer_gc=True whose data the background
@@ -256,16 +316,32 @@ class BTrDBEngine:
                 return True
         return False
 
+    @staticmethod
+    def _legacy_root(path: str | None) -> bool:
+        """Whether a generation directory holds parquet files at its root:
+        the pre-partitioned layout, with no bucket directories."""
+        return path is not None and any(f.endswith(".parquet") for f in os.listdir(path))
+
     def _scan_memo(self, name: str) -> DataFrame | None:
         """Query-path table scan, memoized on the table's signature
         (store.memo_scan; the rollup ladder shares it). None = no
         parquet yet."""
         return store.memo_scan(self.spark, self.store, self._df_memo, self.base, name)
 
+    def _empty(self, schema) -> DataFrame:
+        """An empty frame of ``schema`` planned as a local relation
+        (LocalTableScan): no Python RDD to scan, no job to build it.
+        ``createDataFrame([], schema)`` would plan a Python RDD scan."""
+        jss = self.spark._jsparkSession
+        jdf = jss.createDataFrame(
+            self.spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+        )
+        return DataFrame(jdf, self.spark)
+
     def _read(self, name: str, schema) -> DataFrame:
         df = self._scan_memo(name)
         if df is None:
-            return self.spark.createDataFrame([], schema)
+            return self._empty(schema)
         # select by name: drops the physical partition columns
         # (uuid_bucket / meta_bucket) from the logical schema
         return df.select(*[f.name for f in schema.fields])
@@ -274,9 +350,7 @@ class BTrDBEngine:
     def points(self) -> DataFrame:
         df = self._scan_memo("points")
         if df is None:
-            return self.spark.createDataFrame(
-                [], "uuid string, time long, value double, version long, uuid_bucket long"
-            )
+            return self._empty(POINTS_SCHEMA).withColumn("uuid_bucket", F.lit(None).cast("long"))
         # partition columns uuid_bucket/time_bucket come from the directory
         # layout; time_bucket is consumed by points_pruned, not exposed here
         return df.select("uuid", "time", "value", "version", "uuid_bucket")
@@ -290,7 +364,7 @@ class BTrDBEngine:
         inside the surviving files)."""
         df = self._scan_memo("points")
         if df is None:
-            return self.spark.createDataFrame([], POINTS_SCHEMA)
+            return self._empty(POINTS_SCHEMA)
         if uuid is not None:
             df = df.filter(
                 (F.col("uuid_bucket") == self._ubucket(F.lit(uuid))) & (F.col("uuid") == uuid)
@@ -311,7 +385,7 @@ class BTrDBEngine:
     def hot(self) -> DataFrame:
         df = self._scan_memo("hot")
         if df is None:
-            return self.spark.createDataFrame([], HOT_POINTS_SCHEMA)
+            return self._empty(HOT_POINTS_SCHEMA)
         if "ingest_ts" not in df.columns:  # pre-ingest_ts generation
             df = df.withColumn("ingest_ts", F.lit(None).cast("long"))
         return df.select(*[f.name for f in HOT_POINTS_SCHEMA.fields])
@@ -401,12 +475,9 @@ class BTrDBEngine:
         self._rewrite_stream_row(uuid, annotations=anns, annotation_version=expected_version + 1)
 
     def _bucket_of(self, uuid: str) -> int:
-        """Partition bucket of one uuid, via the SAME hash Spark applies on
-        write (xxhash64 has no portable driver-side twin): one local 1-row
-        job, O(1) regardless of catalog size."""
-        return int(
-            self.spark.range(1).select(self._ubucket(F.lit(uuid)).alias("b")).first()["b"]
-        )
+        """Partition bucket of one uuid: the hash Spark applies on write,
+        computed on the driver (uuid_bucket_of)."""
+        return uuid_bucket_of(uuid, self.n_uuid_buckets)
 
     @staticmethod
     def _typed_lit(v):
@@ -430,8 +501,7 @@ class BTrDBEngine:
             return
         sub = f"{bucket_col}={bucket}"
         gen = self.store.new_generation(self.base, name)
-        legacy_root = any(f.endswith(".parquet") for f in os.listdir(cur))
-        if legacy_root:
+        if self._legacy_root(cur):
             # pre-partitioned layout: the transforms are keyed on uuid, so
             # applying them to the whole (small, legacy) table is exact
             rewrite(self.spark.read.parquet(cur)).write.mode("append").parquet(gen)
@@ -501,6 +571,23 @@ class BTrDBEngine:
         hit = memo.get(uuid)
         if hit is None:
             hit = memo[uuid] = self._stream_versions_multi([uuid])[uuid]
+        return hit
+
+    def stream_row(self, uuid: str):
+        """The stream's catalog Row (STREAMS_SCHEMA; a tombstoned stream's
+        row too), or None for a uuid never created. Memoized on the
+        streams table signature under stream_version's rule: a changed
+        signature drops the memo, and a hit runs no Spark job."""
+        sig = store.table_signature(self.store, self.base, "streams")
+        memo_sig, memo = self._row_memo
+        if memo_sig != sig:
+            memo = {}
+            self._row_memo = (sig, memo)
+        hit = memo.get(uuid)
+        if hit is None and sig is not None:
+            rows = self.streams.filter(F.col("uuid") == uuid).collect()
+            if rows:
+                hit = memo[uuid] = rows[0]
         return hit
 
     def _buffered(self, uuid: str) -> bool:
@@ -942,7 +1029,7 @@ class BTrDBEngine:
         batch's bucket set, uuid IN-list pushed to parquet row groups."""
         df = self._scan_memo("points")
         if df is None:
-            return self.spark.createDataFrame([], POINTS_SCHEMA)
+            return self._empty(POINTS_SCHEMA)
         return df.filter(self._in_buckets(uuids) & F.col("uuid").isin(list(uuids))).select(
             "uuid", "time", "value", "version"
         )
@@ -1171,6 +1258,103 @@ class BTrDBEngine:
     def raw_values(self, uuid: str, start: int, end: int, version: int | None = None) -> DataFrame:
         pts, dels = self._queryable(version, uuid, start, end)
         return raw_ops.raw_values(pts, uuid, start, end, version=version, deletes=dels)
+
+    def raw_values_rows(
+        self, uuid: str, start: int, end: int, version: int | None = None
+    ) -> Iterator[dict]:
+        """S5 delivered to the driver: an iterator of row dicts
+        ``(time, value)``, the rows raw_values returns in its order, for
+        callers that consume the answer in this process (the service, the
+        client). The Arrow tier's table when it serves (read here, in
+        this call; the driver holds at most store.ARROW_MAX_ROWS rows),
+        else the raw_values plan, built here and drained
+        partition-at-a-time through toLocalIterator as the iterator is
+        consumed."""
+        tbl = self._raw_arrow(uuid, start, end, version)
+        if tbl is not None:
+            return (
+                {"time": t, "value": v}
+                for t, v in zip(tbl["time"].to_pylist(), tbl["value"].to_pylist())
+            )
+        df = self.raw_values(uuid, start, end, version=version).select("time", "value")
+
+        def drain():
+            for row in df.toLocalIterator():
+                yield row.asDict()
+
+        return drain()
+
+    def _raw_arrow(self, uuid: str, start: int, end: int, version: int | None):
+        """The Arrow tier's answer to a single-stream raw read: a pyarrow
+        Table ``(time, value)`` sorted by (time, value), read on the
+        driver with pyarrow.dataset and no Spark job, or None when the
+        read must run on Spark: bounds outside int64, a points or hot
+        table in the legacy root-level layout, or more than
+        store.ARROW_MAX_ROWS rows, cold plus hot, passing the filter
+        (counted as the scans stream in).
+
+        The answer is raw_values' over _queryable. Cold points come from
+        the stream's uuid_bucket directory and the time_bucket range the
+        bounds allow, filtered on uuid, ``start <= time < end`` and, when
+        pinned, ``version <= v`` (footer statistics skip row groups). A
+        latest read adds the stream's hot rows in range. The stream's
+        tombstones (``version <= v`` when pinned) drop every cold point
+        with ``d_start <= time < d_end`` and ``version <= d_version``
+        (raw_ops.apply_deletes); hot rows are never deleted. A pending-GC
+        uuid has no rows. Duplicates are kept."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if not (-(1 << 63) <= start and end < (1 << 63)):
+            return None
+        if any(self._legacy_root(self._data_dir(n)) for n in ("points", "hot")):
+            return None
+        empty = pa.table({"time": pa.array([], pa.int64()), "value": pa.array([], pa.float64())})
+        if uuid in self._pending_gc or start >= end:
+            return empty
+        sub = f"uuid_bucket={self._bucket_of(uuid)}"
+        span = (ds.field("uuid") == uuid) & (ds.field("time") >= start) & (ds.field("time") < end)
+        pw = self.time_partition_pw
+        cold_f = (
+            span
+            & (ds.field("time_bucket") >= (start >> pw))
+            & (ds.field("time_bucket") <= ((end - 1) >> pw))
+        )
+        if version is not None:
+            cold_f = cold_f & (ds.field("version") <= version)
+        cold = self._dataset(
+            "points", sub, ds.partitioning(pa.schema([("time_bucket", pa.int64())]), flavor="hive")
+        )
+        hot = self._dataset("hot", sub) if version is None else None
+        scans = [] if cold is None else [cold.scanner(columns=["time", "value", "version"], filter=cold_f)]
+        if hot is not None:
+            scans.append(hot.scanner(columns=["time", "value"], filter=span))
+        tables = store.bounded_tables(scans)
+        if tables is None:
+            return None
+        if cold is not None:
+            pts = tables.pop(0)
+            dels = self._dataset("deletes")
+            if dels is not None and pts.num_rows:
+                d_f = ds.field("uuid") == uuid
+                if version is not None:
+                    d_f = d_f & (ds.field("version") <= version)
+                d = dels.to_table(columns=["start", "end", "version"], filter=d_f)
+                t, v = pts["time"].to_numpy(), pts["version"].to_numpy()
+                keep = np.ones(len(t), dtype=bool)
+                for d_s, d_e, d_v in zip(*(d[c].to_pylist() for c in ("start", "end", "version"))):
+                    keep &= ~((t >= d_s) & (t < d_e) & (v <= d_v))
+                pts = pts.filter(pa.array(keep))
+            tables.insert(0, pts.select(["time", "value"]))
+        return pa.concat_tables([t.cast(empty.schema) for t in (empty, *tables)]).sort_by(
+            [("time", "ascending"), ("value", "ascending")]
+        )
+
+    def _dataset(self, name: str, subdir: str | None = None, partitioning=None):
+        """pyarrow dataset of a table or one partition directory of it
+        (store.memo_dataset); None = never written."""
+        return store.memo_dataset(self.store, self._ds_memo, self.base, name, subdir, partitioning)
 
     def _delete_versions(self, uuid: str) -> list[int]:
         """Distinct tombstone versions of one stream (tiny table scan;

@@ -13,8 +13,11 @@ a (uuid_bucket, time_bucket)-partitioned layout it prunes partitions, which
 is the distributed analog of the reference's tree descent. A single-stream
 result is sorted inside one partition (coalesce(1) + sortWithinPartitions):
 no sampling job and no range exchange, at the price that one task, and the
-process that drains it, hold that stream's whole range result. A
-multi-stream result keeps the range-partitioned orderBy. The set-oriented
+process that drains it, hold that stream's whole range result. The engine's
+service and client path (BTrDBEngine.raw_values_rows) answers a
+single-stream read of at most store.ARROW_MAX_ROWS rows on the driver with
+pyarrow instead, with the same filter, delete rule and order, and no Spark
+job. A multi-stream result keeps the range-partitioned orderBy. The set-oriented
 nearest over *all* streams is one shuffle (groupBy uuid); single-stream
 nearest is one global aggregate: partial picks in parallel, then one
 single-row-per-partition exchange, with no groupBy and no sort.

@@ -27,7 +27,7 @@ Design:
   one re-bucketing groupBy. Levels divide evenly (step 6), so bucket
   edges always align. pw finer than the finest level -> raw points.
 - **Driver-side read**: a single-stream, delete-free slice of at most
-  ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
+  store.ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
   (RollupLadder.aligned_windows_arrow), without a Spark job.
 
 Scale: each coarser level is 64x smaller; the whole ladder costs ~1.6%
@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store as store_mod
 from ..functions.timeops import bucket_start, floor_div
 from ..schemas import PWFACTOR
 
@@ -58,12 +59,6 @@ ROLLUP_COLS = ["uuid", "bucket_start", "cnt", "vmin", "vmax", "vsum"]
 # query ever admits it, apply_rebase's trailing cnt>0 filter drops it.
 REBASE_SENTINEL_BUCKET = -(1 << 62)
 
-# Largest ladder slice, in rows, that RollupLadder.aligned_windows_arrow
-# loads on the driver: the level rows that pass the read's filter (uuid,
-# bucket range, version) must number at most this, or the read stays on
-# Spark. It bounds driver memory (about 60 B a row in Arrow); it is not a
-# knob.
-ARROW_MAX_ROWS = 1 << 18
 # Columns of the additive (r6) level format, the only one the Arrow read
 # serves; a file with an inline ``rebase`` column, or without ``version``,
 # keeps its read on Spark.
@@ -422,8 +417,6 @@ class RollupLadder:
     def __init__(
         self, spark, base_dir: str, levels: tuple[int, ...] = LEVELS, backend=None
     ):
-        from .. import store as store_mod
-
         self.spark = spark
         self.base = base_dir
         self.levels = tuple(sorted(levels))
@@ -434,16 +427,14 @@ class RollupLadder:
         # path). A changed signature is exactly a changed table — a hit
         # can never serve stale data.
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
-        # pyarrow datasets of the levels, keyed the same way; a memoized
-        # dataset keeps the footers it has read
-        self._ds_memo: dict[str, tuple[tuple, object]] = {}
+        # pyarrow datasets of the levels, keyed the same way
+        # (store.memo_dataset)
+        self._ds_memo: dict[str, tuple[tuple, dict]] = {}
 
     def _read_memo(self, name: str) -> DataFrame | None:
         """Read table ``name`` behind its generation pointer, memoized on
         its signature (store.memo_scan — the engine's scan memo). None =
         no parquet yet."""
-        from .. import store as store_mod
-
         return store_mod.memo_scan(self.spark, self.store, self._df_memo, self.base, name)
 
     def _name(self, pw: int) -> str:
@@ -588,8 +579,6 @@ class RollupLadder:
             partial.write.mode("append").parquet(
                 self.store.current_dir(self.base, self._name(pw), create=True)
             )
-            from .. import store as store_mod
-
             store_mod.bump_stamp(self.base, self._name(pw))
             if epoch is not None:
                 self._mark_epoch(pw, epoch)
@@ -656,22 +645,9 @@ class RollupLadder:
         return None if partials is None else finalize_stats(partials)
 
     def _arrow_level(self, pw: int):
-        """pyarrow dataset over level pw's live generation, memoized on
-        its table signature; None = never written. Dataset discovery
-        skips every path with a component starting ``_`` or ``.``, the
-        rule Spark applies to ``_temporary/`` staging and ``_SUCCESS``."""
-        import pyarrow.dataset as ds
-
-        from .. import store as store_mod
-
-        name = self._name(pw)
-        sig = store_mod.table_signature(self.store, self.base, name)
-        if sig is None:
-            return None
-        hit = self._ds_memo.get(name)
-        if hit is None or hit[0] != sig:
-            hit = self._ds_memo[name] = (sig, ds.dataset(sig[0], format="parquet"))
-        return hit[1]
+        """pyarrow dataset over level pw's live generation
+        (store.memo_dataset); None = never written."""
+        return store_mod.memo_dataset(self.store, self._ds_memo, self.base, self._name(pw))
 
     def aligned_windows_arrow(
         self, uuid: str, start: int, end: int, pw: int, version: int | None = None
@@ -690,9 +666,9 @@ class RollupLadder:
         ``(bucket_start, cnt, vmin, vmean, vmax)`` sorted by bucket, or
         None when the read must stay on Spark: pw finer than the ladder
         or past the int64 grid, a level never written, a level file not
-        in the additive format, or a slice of more than ARROW_MAX_ROWS
-        level rows (counted as the filtered scan streams in, which stops at
-        the first batch past the bound)."""
+        in the additive format, or a slice of more than
+        store.ARROW_MAX_ROWS level rows (counted as the filtered scan
+        streams in, which stops at the first batch past the bound)."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
@@ -721,13 +697,10 @@ class RollupLadder:
         scan = level.scanner(
             columns=["bucket_start", "cnt", "vmin", "vmax", "vsum"], filter=cond
         )
-        batches, rows = [], 0
-        for batch in scan.to_batches():
-            rows += batch.num_rows
-            if rows > ARROW_MAX_ROWS:
-                return None
-            batches.append(batch)
-        tbl = pa.Table.from_batches(batches, scan.projected_schema)
+        tables = store_mod.bounded_tables([scan])
+        if tables is None:
+            return None
+        tbl = tables[0]
         b = tbl["bucket_start"].to_numpy()
         g = (
             tbl.set_column(0, "bucket_start", pa.array((b >> pw) << pw, pa.int64()))
@@ -877,8 +850,6 @@ def invalidate_buckets(
             full.unionByName(sentinel).coalesce(1).write.mode("append").parquet(
                 ladder.store.current_dir(ladder.base, ladder._rb_name(pw), create=True)
             )
-            from .. import store as store_mod
-
             store_mod.bump_stamp(ladder.base, ladder._rb_name(pw))
             continue
         keep = ladder.level(pw).filter(~in_range)
@@ -990,6 +961,4 @@ def invalidate_buckets_multi(
         full.unionByName(sentinels).coalesce(1).write.mode("append").parquet(
             ladder.store.current_dir(ladder.base, ladder._rb_name(pw), create=True)
         )
-        from .. import store as store_mod
-
         store_mod.bump_stamp(ladder.base, ladder._rb_name(pw))

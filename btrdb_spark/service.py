@@ -16,19 +16,29 @@ below the handler layer):
   envelope of serve.go:116-133).
 
 Results iterate through ``toLocalIterator()`` — the driver holds one
-partition at a time, not the whole result. A single-stream RawValues
-result is ONE partition (operators/raw.py sorts it without a range
-shuffle), so this process holds that stream's whole range result; the
-response itself still goes out in bounded batches. Multi-stream results
-stay range-partitioned and stream a partition at a time.
+partition at a time, not the whole result. Multi-stream results stay
+range-partitioned and stream a partition at a time.
+
+RawValues takes its rows from BTrDBEngine.raw_values_rows. The engine's
+Arrow tier answers it on the driver, without a Spark job: this process
+reads the stream's cold points (its uuid_bucket directory, the
+time_bucket range the bounds allow), its hot rows at latest and its
+tombstones with pyarrow, and holds the finished, sorted result, at most
+store.ARROW_MAX_ROWS rows, as an Arrow table while the batches go out. A
+read past that bound, or on a legacy root-level layout, drains the
+raw_values plan instead; a single-stream Spark result is ONE partition
+(operators/raw.py sorts it without a range shuffle), so this process then
+holds that stream's whole range result too. Either way the response goes
+out in bounded batches.
 
 AlignedWindows takes its rows from BTrDBEngine.aligned_windows_rows. A
 committed stream without tombstones is answered there on the driver,
 without a Spark job, when the engine's Arrow tier serves it: this process
-loads at most plans/rollup.py ARROW_MAX_ROWS ladder rows of the stream's
-slice with pyarrow and holds the finished result, one row per bucket, as
-an Arrow table while the batches go out. Every other stat read drains
-its DataFrame through ``toLocalIterator()`` as above.
+loads at most store.ARROW_MAX_ROWS ladder rows of the stream's slice
+with pyarrow and holds the finished result, one row per bucket, as an
+Arrow table while the batches go out. Every other stat read drains its
+DataFrame through ``toLocalIterator()`` as above. StreamInfo reads the
+engine's memoized catalog row and version: no Spark job when warm.
 
 Concurrency: ThreadingHTTPServer gives one thread per request; reads are
 lock-free (generation-pointer MVCC), mutations serialize on the engine's
@@ -158,11 +168,9 @@ class BTrDBService:
         return {"versionMajor": major, "versionMinor": minor}, None
 
     def rpc_StreamInfo(self, req: dict):
-        from pyspark.sql import functions as F
-
         # raises NoSuchStream (404) for an unknown or obliterated uuid
         major, minor = self.engine.stream_version(req["uuid"])
-        r = self.engine.streams.filter(F.col("uuid") == req["uuid"]).collect()[0]
+        r = self.engine.stream_row(req["uuid"])
         return {
             "uuid": r["uuid"],
             "collection": r["collection"],
@@ -198,11 +206,12 @@ class BTrDBService:
 
     def rpc_RawValues(self, req: dict):
         version = req.get("versionMajor")
-        df = self.engine.raw_values(
-            req["uuid"], int(req["start"]), int(req["end"]), version=version
-        )
+        args = (req["uuid"], int(req["start"]), int(req["end"]))
+        # the label is read before the data (the Arrow tier reads it
+        # right away), so a racing commit can only make the data newer
+        # than its versionMajor, never older
         major = version if version is not None else self._latest_major(req["uuid"])
-        return {"versionMajor": major}, _batches(df, ["time", "value"])
+        return {"versionMajor": major}, _chunked(self.engine.raw_values_rows(*args, version=version))
 
     def rpc_AlignedWindows(self, req: dict):
         version = req.get("versionMajor")

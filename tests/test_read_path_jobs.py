@@ -52,6 +52,20 @@ def test_reads_of_unchanged_store_run_one_job(spark, tmp_path):
     ]
 
 
+def test_unflushed_stream_plans_no_python_rdd(spark, tmp_path):
+    """A stream that was created but never flushed has no points table:
+    its raw read plans the absent table as an empty local relation, not a
+    scan of a Python RDD."""
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9)
+    u = eng.create_stream("jobs/unflushed")
+    for step in ("created", "buffered"):
+        n, df = _jobs(spark, lambda: eng.raw_values(u, 0, 1 << 40))
+        assert n == 0, step
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString(), step
+        eng.insert(u, [(5, 1.0)])
+    assert [(r["time"], r["value"]) for r in df.collect()] == [(5, 1.0)]
+
+
 def _version_or_gone(eng, u):
     try:
         return eng.stream_version(u)
@@ -83,12 +97,13 @@ def test_version_memo_sees_every_write(spark, tmp_path, writer):
 
 
 def test_rpc_job_counts(spark, tmp_path, monkeypatch):
-    """Through the service: a warm AlignedWindows of a committed stream is
-    served by the driver-side Arrow tier with no Spark job, and Nearest is
-    two: the parallel partial picks, then the final pick over one row per
-    partition (no groupBy, no sort). On a buffered stream the tier's
-    eligibility check runs no job and opens no parquet file before handing
-    the read to Spark."""
+    """Through the service: a warm AlignedWindows, RawValues or StreamInfo
+    of a committed stream runs no Spark job (the first two are served by
+    the driver-side Arrow tiers, StreamInfo by the memoized catalog row),
+    and Nearest is two: the parallel partial picks, then the final pick
+    over one row per partition (no groupBy, no sort). On a buffered stream
+    the AlignedWindows tier's eligibility check runs no job and opens no
+    parquet file before handing the read to Spark."""
     import pyarrow.dataset
     import pyarrow.parquet
 
@@ -106,6 +121,16 @@ def test_rpc_job_counts(spark, tmp_path, monkeypatch):
         cli.rows("AlignedWindows", **stat)  # warm: memos and footers
         n, (_meta, rows) = _jobs(spark, lambda: cli.rows("AlignedWindows", **stat))
         assert n == 0 and sum(r["count"] for r in rows) == 3000
+        raw = dict(uuid=u, start=10 << 20, end=1011 << 20)
+        cli.rows("RawValues", **raw)
+        n, (meta, rows) = _jobs(spark, lambda: cli.rows("RawValues", **raw))
+        assert n == 0 and meta["versionMajor"] == 10
+        assert [(r["time"], r["value"]) for r in rows] == [
+            (i << 20, float(i % 13)) for i in range(10, 1011)
+        ]
+        cli.rows("StreamInfo", uuid=u)
+        n, (meta, _rows) = _jobs(spark, lambda: cli.rows("StreamInfo", uuid=u))
+        assert n == 0 and (meta["collection"], meta["versionMajor"]) == ("jobs/0", 10)
         near = dict(uuid=u, time=1000 << 20, backward=True)
         n, (meta, _rows) = _jobs(spark, lambda: cli.rows("Nearest", **near))
         assert n == 2 and (meta["time"], meta["value"]) == (999 << 20, float(999 % 13))

@@ -161,14 +161,14 @@ def test_midstream_failure_emits_terminal_error_chunk(served, monkeypatch):
 
     import btrdb_spark.service as svcmod
 
-    real = svcmod._batches
+    real = svcmod._chunked
 
-    def exploding(df, cols):
-        it = real(df, cols)
+    def exploding(rows):
+        it = real(rows)
         yield next(it)  # first batch goes out fine -> headers are sent
         raise RuntimeError("executor lost mid-scan")
 
-    monkeypatch.setattr(svcmod, "_batches", exploding)
+    monkeypatch.setattr(svcmod, "_chunked", exploding)
     with pytest.raises(RpcError) as e:
         cli.call("RawValues", uuid=u, start=0, end=2**62)
     assert e.value.code == 500 and "mid-scan" in e.value.msg
