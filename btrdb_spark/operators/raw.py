@@ -15,9 +15,9 @@ result is sorted inside one partition (coalesce(1) + sortWithinPartitions):
 no sampling job and no range exchange, at the price that one task, and the
 process that drains it, hold that stream's whole range result. The engine's
 service and client path (BTrDBEngine.raw_values_rows) answers a
-single-stream read of at most store.ARROW_MAX_ROWS rows on the driver with
-pyarrow instead, with the same filter, delete rule and order, and no Spark
-job. A multi-stream result keeps the range-partitioned orderBy. The set-oriented
+single-stream read on the driver with pyarrow instead, with the same
+filter, delete rule and order, and no Spark job; the driver holds the
+whole result either way. A multi-stream result keeps the range-partitioned orderBy. The set-oriented
 nearest over *all* streams is one shuffle (groupBy uuid); single-stream
 nearest is one global aggregate: partial picks in parallel, then one
 single-row-per-partition exchange, with no groupBy and no sort.

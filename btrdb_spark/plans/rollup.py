@@ -27,7 +27,7 @@ Design:
   one re-bucketing groupBy. Levels divide evenly (step 6), so bucket
   edges always align. pw finer than the finest level -> raw points.
 - **Driver-side read**: a single-stream, delete-free slice of at most
-  store.ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
+  ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
   (RollupLadder.aligned_windows_arrow), without a Spark job.
 
 Scale: each coarser level is 64x smaller; the whole ladder costs ~1.6%
@@ -59,6 +59,12 @@ ROLLUP_COLS = ["uuid", "bucket_start", "cnt", "vmin", "vmax", "vsum"]
 # query ever admits it, apply_rebase's trailing cnt>0 filter drops it.
 REBASE_SENTINEL_BUCKET = -(1 << 62)
 
+# Largest ladder slice, in rows, that RollupLadder.aligned_windows_arrow
+# loads on the driver: the level rows that pass the read's filter (uuid,
+# bucket range, version) must number at most this, or the read stays on
+# Spark. It bounds driver memory (about 60 B a row in Arrow); it is not a
+# knob.
+ARROW_MAX_ROWS = 1 << 18
 # Columns of the additive (r6) level format, the only one the Arrow read
 # serves; a file with an inline ``rebase`` column, or without ``version``,
 # keeps its read on Spark.
@@ -666,9 +672,9 @@ class RollupLadder:
         ``(bucket_start, cnt, vmin, vmean, vmax)`` sorted by bucket, or
         None when the read must stay on Spark: pw finer than the ladder
         or past the int64 grid, a level never written, a level file not
-        in the additive format, or a slice of more than
-        store.ARROW_MAX_ROWS level rows (counted as the filtered scan
-        streams in, which stops at the first batch past the bound)."""
+        in the additive format, or a slice of more than ARROW_MAX_ROWS
+        level rows (counted as the filtered scan streams in, which stops at
+        the first batch past the bound)."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
@@ -697,10 +703,13 @@ class RollupLadder:
         scan = level.scanner(
             columns=["bucket_start", "cnt", "vmin", "vmax", "vsum"], filter=cond
         )
-        tables = store_mod.bounded_tables([scan])
-        if tables is None:
-            return None
-        tbl = tables[0]
+        batches, rows = [], 0
+        for batch in scan.to_batches():
+            rows += batch.num_rows
+            if rows > ARROW_MAX_ROWS:
+                return None
+            batches.append(batch)
+        tbl = pa.Table.from_batches(batches, scan.projected_schema)
         b = tbl["bucket_start"].to_numpy()
         g = (
             tbl.set_column(0, "bucket_start", pa.array((b >> pw) << pw, pa.int64()))

@@ -23,22 +23,22 @@ RawValues takes its rows from BTrDBEngine.raw_values_rows. The engine's
 Arrow tier answers it on the driver, without a Spark job: this process
 reads the stream's cold points (its uuid_bucket directory, the
 time_bucket range the bounds allow), its hot rows at latest and its
-tombstones with pyarrow, and holds the finished, sorted result, at most
-store.ARROW_MAX_ROWS rows, as an Arrow table while the batches go out. A
-read past that bound, or on a legacy root-level layout, drains the
-raw_values plan instead; a single-stream Spark result is ONE partition
-(operators/raw.py sorts it without a range shuffle), so this process then
-holds that stream's whole range result too. Either way the response goes
-out in bounded batches.
+tombstones with pyarrow, and holds the whole finished, sorted result (an
+Arrow table plus Python lists of its two columns) while the batches go
+out. The read has no row bound: a single-stream Spark result is ONE
+partition (operators/raw.py sorts it without a range shuffle), which this
+process would fetch whole as well, and more slowly. Only a legacy
+root-level layout drains the raw_values plan instead. Either way the
+response goes out in bounded batches.
 
 AlignedWindows takes its rows from BTrDBEngine.aligned_windows_rows. A
 committed stream without tombstones is answered there on the driver,
 without a Spark job, when the engine's Arrow tier serves it: this process
-loads at most store.ARROW_MAX_ROWS ladder rows of the stream's slice
-with pyarrow and holds the finished result, one row per bucket, as an
-Arrow table while the batches go out. Every other stat read drains its
-DataFrame through ``toLocalIterator()`` as above. StreamInfo reads the
-engine's memoized catalog row and version: no Spark job when warm.
+loads at most plans/rollup.py ARROW_MAX_ROWS ladder rows of the stream's
+slice with pyarrow and holds the finished result, one row per bucket, as
+an Arrow table while the batches go out. Every other stat read drains
+its DataFrame through ``toLocalIterator()`` as above. StreamInfo reads
+the engine's memoized catalog row and version: no Spark job when warm.
 
 Concurrency: ThreadingHTTPServer gives one thread per request; reads are
 lock-free (generation-pointer MVCC), mutations serialize on the engine's

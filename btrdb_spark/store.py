@@ -753,11 +753,12 @@ def memo_dataset(
     """``pyarrow.dataset`` of table ``name``'s live generation, or of one
     partition subdirectory of it, memoized in ``memo`` on the table's
     table_signature (the key memo_scan trusts); a changed signature drops
-    every dataset of the table. None = the table, or the subdirectory,
-    was never written. Discovery skips every path with a component
-    starting ``_`` or ``.``, the rule Spark applies to ``_temporary/``
-    staging and ``_SUCCESS``. A memoized dataset keeps the footers it has
-    read."""
+    every dataset of the table. Discovery skips every path with a
+    component starting ``_`` or ``.``, the rule Spark applies to
+    ``_temporary/`` staging and ``_SUCCESS``. None = the table, or the
+    subdirectory, holds no parquet file: never written, or (as memo_scan
+    reads it) a published generation whose first write has not committed
+    yet. A memoized dataset keeps the footers it has read."""
     import pyarrow.dataset as ds
 
     sig = table_signature(backend, base, name)
@@ -769,36 +770,13 @@ def memo_dataset(
     sets = hit[1]
     if subdir not in sets:
         path = sig[0] if subdir is None else os.path.join(sig[0], subdir)
-        sets[subdir] = (
+        found = (
             ds.dataset(path, format="parquet", partitioning=partitioning)
             if os.path.isdir(path)
             else None
         )
+        sets[subdir] = found if found is not None and found.files else None
     return sets[subdir]
-
-
-# Largest number of rows a driver-side Arrow read holds: the rows that
-# pass the read's filter, summed over every scan the read makes, must
-# number at most this, or the read stays on Spark. It bounds driver
-# memory (tens of bytes a row in Arrow); it is not a knob.
-ARROW_MAX_ROWS = 1 << 18
-
-
-def bounded_tables(scanners) -> list | None:
-    """One pyarrow Table per scanner, read batch by batch, or None as soon
-    as the rows read so far, across all scanners, pass ARROW_MAX_ROWS."""
-    import pyarrow as pa
-
-    out, rows = [], 0
-    for scan in scanners:
-        batches = []
-        for batch in scan.to_batches():
-            rows += batch.num_rows
-            if rows > ARROW_MAX_ROWS:
-                return None
-            batches.append(batch)
-        out.append(pa.Table.from_batches(batches, scan.projected_schema))
-    return out
 
 
 def _spark_footer_schema(parquet_file: str):

@@ -18,8 +18,8 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from btrdb_spark import store
 from btrdb_spark.engine import BTrDBEngine
+from btrdb_spark.plans import rollup
 from btrdb_spark.plans.rollup import LEVELS, RollupLadder
 from btrdb_spark.service import BTrDBHttpClient, BTrDBService, RpcError
 
@@ -126,9 +126,9 @@ def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
     # counts only the rows the read's filter keeps (plain's 400, or the
     # 10 of a sub-range)
     assert eng.ladder.level(20).count() == 1200
-    monkeypatch.setattr(store, "ARROW_MAX_ROWS", 400)
+    monkeypatch.setattr(rollup, "ARROW_MAX_ROWS", 400)
     assert _tier(eng, plain, LO, HI, 20) is not None
-    monkeypatch.setattr(store, "ARROW_MAX_ROWS", 399)
+    monkeypatch.setattr(rollup, "ARROW_MAX_ROWS", 399)
     assert _tier(eng, plain, LO, HI, 20) is None
     assert _tier(eng, plain, 0, 10 << 22, 20) is not None
     monkeypatch.undo()

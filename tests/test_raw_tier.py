@@ -7,7 +7,8 @@ partition directories, the hot overlay at latest, tombstones and pending
 GC applied, sorted by (time, value). Its rows must equal
 ``raw_values(...).collect()`` in order, at latest and at every committed
 version, over random insert/flush/delete_range/re-insert histories, and a
-read past the row bound must drain the Spark plan with the same answer.
+read of a legacy root-level layout must drain the Spark plan with the same
+answer.
 The partition bucket it reads is computed by a driver-side XXH64, which
 must equal Spark's ``pmod(xxhash64(uuid), n)``.
 """
@@ -23,7 +24,6 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from btrdb_spark import store
 from btrdb_spark.engine import BTrDBEngine, uuid_bucket, uuid_bucket_of
 from btrdb_spark.service import BTrDBService
 
@@ -129,6 +129,9 @@ def test_raw_tier_equals_spark(history):
     full = {(u, v): rows for (u, s, e, v), rows in zip(reads, want) if (s, e) == (LO, HI)}
     rng = random.Random(len(reads))
     for (u, v), rows in full.items():
+        # bounds past int64 clamp to it
+        _assert_same(_tier_rows(eng, u, -(1 << 64), 1 << 64, v), rows, (u, v))
+        assert _tier_rows(eng, u, 1 << 63, 1 << 64, v) == []
         for _ in range(4):  # sub-ranges that cross time buckets, and empty ones
             a = rng.randint(-(1 << 49), 0)
             b = a + rng.choice([0, -5, rng.randint(1 << 44, 1 << 49)])
@@ -136,14 +139,6 @@ def test_raw_tier_equals_spark(history):
     gone = [u for u in versions if not full[(u, None)]]
     assert len(gone) == 1 and not any(full[(gone[0], v)] for v in versions[gone[0]])
     assert any(len(set(rows)) < len(rows) for rows in full.values())  # duplicates kept
-
-
-def test_raw_tier_hands_reads_over_the_bound_to_spark(history, monkeypatch):
-    eng, _versions, reads, want = history
-    monkeypatch.setattr(store, "ARROW_MAX_ROWS", 3)
-    for read, rows in list(zip(reads, want))[:4]:
-        assert (eng._raw_arrow(*read) is None) == (len(rows) > 3), read
-        _assert_same(_tier_rows(eng, *read), rows, read)
 
 
 def test_raw_tier_declines_legacy_root_layout(spark, tmp_path):
@@ -161,6 +156,30 @@ def test_raw_tier_declines_legacy_root_layout(spark, tmp_path):
     eng.store.publish(eng.base, "points", gen, expected=cur)
     assert eng._raw_arrow(u, 0, 100, None) is None
     assert list(eng.raw_values_rows(u, 0, 100)) == want
+
+
+def test_raw_tier_skips_an_uncommitted_deletes_generation(spark, tmp_path):
+    """The first delete_range publishes an empty deletes generation before
+    its Spark write commits; until then the generation holds only
+    ``_temporary/`` staging. A raw read racing it must see no tombstones,
+    as the Spark plan does, not fail on an empty dataset."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9)
+    u = eng.create_stream("raw/racing")
+    eng.insert(u, [(i, float(i)) for i in range(20)], sync=True)
+    want = list(eng.raw_values_rows(u, 0, 100))
+    staged = tmp_path / "db" / "deletes.g0" / "_temporary" / "0" / "task_0"
+    staged.mkdir(parents=True)
+    eng.store.publish(eng.base, "deletes", str(tmp_path / "db" / "deletes.g0"))
+    pq.write_table(  # a task's staged tombstone over the whole stream
+        pa.table({"uuid": [u], "start": [0], "end": [100], "version": [1 << 40]}),
+        str(staged / "part-0.parquet"),
+    )
+    assert len(want) == 20 and list(eng.raw_values_rows(u, 0, 100)) == want
+    assert eng._scan_memo("deletes") is None and eng._dataset("deletes") is None
+    assert [r.asDict() for r in eng.raw_values(u, 0, 100).select("time", "value").collect()] == want
 
 
 def test_python_bucket_equals_spark(spark):
