@@ -1257,7 +1257,7 @@ def q_stream_correlations_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Sub-quadratic top-k partner search: sign-LSH over centered
     bucket-mean vectors prunes candidates before the exact Pearson —
     the plan that survives a 10x fleet where the all-pairs join cannot
-    (tools/prof_corr.py)."""
+    (ARCHITECTURE.md, "r9 fleet-correlation probe")."""
     from btrdb_spark.operators import correlate
 
     return correlate.stream_correlations_topk_lsh(

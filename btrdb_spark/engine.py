@@ -212,7 +212,7 @@ class BTrDBEngine:
         # pyarrow datasets of the raw tier: see store.memo_dataset
         self._ds_memo: dict[str, tuple[tuple, dict]] = {}
         os.makedirs(base_dir, exist_ok=True)
-        self._init_layout()
+        migrating_to = self._init_layout()
         # uuids tombstoned with defer_gc=True whose data the background
         # maintenance pass has not reaped yet; cached from the gc_pending
         # journal so the hot read path filters with a literal, never a job
@@ -222,16 +222,21 @@ class BTrDBEngine:
             from .plans.rollup import RollupLadder
 
             self.ladder = RollupLadder(spark, f"{base_dir}/rollups", backend=self.store)
+        if migrating_to is not None:
+            # a layout migration stopped between its publishes: finish it
+            self.compact_points(**migrating_to)
 
     # ---------- physical layout (persisted per store) ----------
 
-    def _init_layout(self) -> None:
+    def _init_layout(self) -> dict | None:
         """Load the store's persisted partition layout, or stamp the current
-        defaults into a new store. Bucket ids are baked into partition
-        directory names, so the modulus/shift a store was WRITTEN with must
-        drive all pruning and partition rewrites forever — a fanout constant
-        bump must never silently re-hash an existing store (it would make
-        queries miss rows and rewrites target the wrong directories).
+        defaults into a new store; return the target of a layout migration
+        that has not finished (see compact_points), or None. Bucket ids are
+        baked into partition directory names, so the modulus/shift a store
+        was WRITTEN with must drive all pruning and partition rewrites
+        forever — a fanout constant bump must never silently re-hash an
+        existing store (it would make queries miss rows and rewrites
+        target the wrong directories).
 
         Legacy stores (data written before LAYOUT.json existed) are
         validated on first open: a sample of the cold table is checked
@@ -245,27 +250,28 @@ class BTrDBEngine:
                 layout = json.load(f)
             self.n_uuid_buckets = int(layout["n_uuid_buckets"])
             self.time_partition_pw = int(layout["time_partition_pw"])
-            return
+            return layout.get("migrating_to")
         self.n_uuid_buckets = N_UUID_BUCKETS
         self.time_partition_pw = TIME_PARTITION_PW
         legacy = self.store.resolve(self.base, "points")
-        if legacy is not None and self._has_parquet(legacy):
+        if store.has_parquet(legacy):
             self._validate_legacy_layout(legacy)
         self._write_layout()
+        return None
 
-    def _write_layout(self) -> None:
+    def _write_layout(self, migrating_to: dict | None = None) -> None:
         import json
 
+        layout = {
+            "n_uuid_buckets": self.n_uuid_buckets,
+            "time_partition_pw": self.time_partition_pw,
+        }
+        if migrating_to is not None:
+            layout["migrating_to"] = migrating_to
         path = os.path.join(self.base, LAYOUT_FILE)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "n_uuid_buckets": self.n_uuid_buckets,
-                    "time_partition_pw": self.time_partition_pw,
-                },
-                f,
-            )
+            json.dump(layout, f)
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, path)
@@ -306,21 +312,6 @@ class BTrDBEngine:
         """Live generation directory for appends (created+published empty
         on first use)."""
         return self.store.current_dir(self.base, name, create=True)
-
-    @staticmethod
-    def _has_parquet(path: str | None) -> bool:
-        if path is None:
-            return False
-        for _root, _dirs, files in os.walk(path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    @staticmethod
-    def _legacy_root(path: str | None) -> bool:
-        """Whether a generation directory holds parquet files at its root:
-        the pre-partitioned layout, with no bucket directories."""
-        return path is not None and any(f.endswith(".parquet") for f in os.listdir(path))
 
     def _scan_memo(self, name: str) -> DataFrame | None:
         """Query-path table scan, memoized on the table's signature
@@ -375,20 +366,9 @@ class BTrDBEngine:
             df = df.filter(F.col("time_bucket") <= ((end - 1) >> self.time_partition_pw))
         return df.select("uuid", "time", "value", "version")
 
-    def stream_points(self, uuid: str) -> DataFrame:
-        """Single-stream cold points with partition pruning: the bucket
-        predicate hits the uuid_bucket=NN directories (PartitionFilters),
-        the uuid/time predicates hit parquet row groups (PushedFilters)."""
-        return self.points_pruned(uuid)
-
     @property
     def hot(self) -> DataFrame:
-        df = self._scan_memo("hot")
-        if df is None:
-            return self._empty(HOT_POINTS_SCHEMA)
-        if "ingest_ts" not in df.columns:  # pre-ingest_ts generation
-            df = df.withColumn("ingest_ts", F.lit(None).cast("long"))
-        return df.select(*[f.name for f in HOT_POINTS_SCHEMA.fields])
+        return self._read("hot", HOT_POINTS_SCHEMA)
 
     @property
     def deletes(self) -> DataFrame:
@@ -501,24 +481,13 @@ class BTrDBEngine:
             return
         sub = f"{bucket_col}={bucket}"
         gen = self.store.new_generation(self.base, name)
-        if self._legacy_root(cur):
-            # pre-partitioned layout: the transforms are keyed on uuid, so
-            # applying them to the whole (small, legacy) table is exact
-            rewrite(self.spark.read.parquet(cur)).write.mode("append").parquet(gen)
-        else:
-            self.store.link_unchanged_partitions(cur, gen, exclude_subdir=sub)
-            part = os.path.join(cur, sub)
-            if self._has_parquet(part):
-                # mergeSchema: a partition mixing pre- and post-ingest_ts
-                # files must surface the union schema deterministically,
-                # not whichever file's footer inference samples
-                out = rewrite(
-                    self.spark.read.option("mergeSchema", "true").parquet(part)
-                )
-                w = out.write.mode("append")
-                if child_partition is not None:
-                    w = w.partitionBy(child_partition)
-                w.parquet(os.path.join(gen, sub))
+        self.store.link_unchanged_partitions(cur, gen, exclude_subdir=sub)
+        part = os.path.join(cur, sub)
+        if store.has_parquet(part):
+            w = rewrite(self.spark.read.parquet(part)).write.mode("append")
+            if child_partition is not None:
+                w = w.partitionBy(child_partition)
+            w.parquet(os.path.join(gen, sub))
         # CAS on the generation we rebuilt from: a concurrent engine
         # process's commit surfaces as store.CommitConflict instead of
         # being silently superseded (in-process writers never conflict —
@@ -776,7 +745,7 @@ class BTrDBEngine:
 
         r12 note (VERDICT r11 #1): two single-pass alternatives were
         built and measured against this shape on the 20M-point probe,
-        alternated back-to-back in fresh JVMs (tools/prof_ingest_r12.py):
+        alternated back-to-back in fresh JVMs (OPTIMIZATION_r12.md §1):
         (a) localCheckpoint the shuffled batch and feed both sinks —
         16-90 s (materializing 20M rows as JVM objects costs more than
         the whole commit); (b) aggregate the ladder partials from the
@@ -864,57 +833,57 @@ class BTrDBEngine:
 
         Passing ``n_uuid_buckets`` / ``time_partition_pw`` MIGRATES the
         store to a new partition layout (e.g. widen the fanout as the
-        cluster grows): bucket columns are recomputed from uuid/time under
-        the new constants and LAYOUT.json is updated after the atomic flip.
+        cluster grows): bucket columns of points, streams and hot are
+        recomputed from uuid/time under the new constants, one table
+        publish each.
 
-        Crash-safe: the compacted copy is written to a NEW generation and
+        Crash-safe: each rewritten table is written to a NEW generation and
         published with one atomic pointer flip — the old table is never
-        removed before the replacement is complete. (A crash between
-        publish and the LAYOUT.json update during a migration is healed by
-        the legacy-validation probe on next open, which re-checks hashes.)"""
+        removed before the replacement is complete. A migration records
+        its target in LAYOUT.json (``migrating_to``) before its first
+        publish and clears it in the final write, so a crash between the
+        publishes leaves the target behind and the next engine opened on
+        the store re-runs the migration to completion. The re-run is
+        idempotent: bucket columns are recomputed from uuid/time, whichever
+        layout a table is in."""
         migrate = n_uuid_buckets is not None or time_partition_pw is not None
         new_nb = n_uuid_buckets if n_uuid_buckets is not None else self.n_uuid_buckets
         new_pw = (
             time_partition_pw if time_partition_pw is not None else self.time_partition_pw
         )
         path = self._data_dir("points")
-        if not self._has_parquet(path):
-            if migrate:
-                self.n_uuid_buckets, self.time_partition_pw = new_nb, new_pw
-                self._write_layout()
-            return
-        df = self.spark.read.parquet(path)
+        has_points = store.has_parquet(path)
         if migrate:
-            df = df.withColumn("uuid_bucket", uuid_bucket(F.col("uuid"), new_nb)).withColumn(
-                "time_bucket", time_bucket(F.col("time"), new_pw)
+            self._write_layout({"n_uuid_buckets": new_nb, "time_partition_pw": new_pw})
+        if has_points:
+            df = self.spark.read.parquet(path)
+            if migrate:
+                df = df.withColumn("uuid_bucket", uuid_bucket(F.col("uuid"), new_nb)).withColumn(
+                    "time_bucket", time_bucket(F.col("time"), new_pw)
+                )
+            gen = self.store.new_generation(self.base, "points")
+            (
+                df.repartition(new_nb, F.col("uuid_bucket"))
+                .sortWithinPartitions("uuid_bucket", "time_bucket", "uuid", "time")
+                .write.mode("append")
+                .partitionBy("uuid_bucket", "time_bucket")
+                .parquet(gen)
             )
-        gen = self.store.new_generation(self.base, "points")
-        (
-            df.repartition(new_nb, F.col("uuid_bucket"))
-            .sortWithinPartitions("uuid_bucket", "time_bucket", "uuid", "time")
-            .write.mode("append")
-            .partitionBy("uuid_bucket", "time_bucket")
-            .parquet(gen)
-        )
-        self.store.publish(self.base, "points", gen, expected=path)
+            self.store.publish(self.base, "points", gen, expected=path)
         if migrate:
             # streams/hot partition dirs use the same fanout: re-bucket them
             # too, or keyed partition rewrites would target wrong directories
-            for name, bcol, newb in (
-                ("streams", "meta_bucket", lambda d: uuid_bucket(F.col("uuid"), new_nb)),
-                ("hot", "uuid_bucket", lambda d: uuid_bucket(F.col("uuid"), new_nb)),
-            ):
+            for name, bcol in (("streams", "meta_bucket"), ("hot", "uuid_bucket")):
                 tpath = self._data_dir(name)
-                if self._has_parquet(tpath):
+                if store.has_parquet(tpath):
                     tgen = self.store.new_generation(self.base, name)
-                    tdf = self.spark.read.parquet(tpath)
-                    tdf.withColumn(bcol, newb(tdf)).write.mode("append").partitionBy(
-                        bcol
-                    ).parquet(tgen)
+                    self.spark.read.parquet(tpath).withColumn(
+                        bcol, uuid_bucket(F.col("uuid"), new_nb)
+                    ).write.mode("append").partitionBy(bcol).parquet(tgen)
                     self.store.publish(self.base, name, tgen, expected=tpath)
             self.n_uuid_buckets, self.time_partition_pw = new_nb, new_pw
             self._write_layout()
-        if self.ladder is not None:
+        if has_points and self.ladder is not None:
             self.ladder.compact()
 
     def maintain(self, keep: int = 2, compact: bool = False) -> dict:
@@ -956,8 +925,7 @@ class BTrDBEngine:
         gets a trickle-rate sensor's writes into cold storage and the
         rollup ladder — the 32,768-point size trigger may never fire for
         it. flush() resets the stream's minor version to 0, matching the
-        reference's age flush. Rows with NULL ingest_ts (pre-ingest_ts
-        generations) count as infinitely old. Returns flushed uuids.
+        reference's age flush. Returns flushed uuids.
 
         One bounded groupBy over the hot table (hot is small by
         construction — every stream is under the flush threshold), then a
@@ -969,9 +937,7 @@ class BTrDBEngine:
             r["uuid"]
             for r in (
                 self.hot.groupBy("uuid")
-                .agg(
-                    F.min(F.coalesce(F.col("ingest_ts"), F.lit(0))).alias("oldest")
-                )
+                .agg(F.min("ingest_ts").alias("oldest"))
                 .filter(F.col("oldest") <= cutoff_ms)
                 .collect()
             )
@@ -1008,11 +974,6 @@ class BTrDBEngine:
         cols = [f.name for f in HOT_POINTS_SCHEMA.fields]
 
         def xf(df: DataFrame) -> DataFrame:
-            # a pre-ingest_ts generation lacks the column — backfill like
-            # the `hot` property does, or the select below fails on first
-            # flush against an old store (ADVICE r5 #3)
-            if "ingest_ts" not in df.columns:
-                df = df.withColumn("ingest_ts", F.lit(None).cast("long"))
             return df.filter(F.col("uuid") != uuid).select(cols)
 
         self._rewrite_bucket_partition("hot", "uuid_bucket", self._bucket_of(uuid), xf)
@@ -1178,7 +1139,7 @@ class BTrDBEngine:
     def _drop_stream_data(self, uuid: str) -> None:
         """Reap one obliterated stream's storage: cold uuid_bucket
         partition, hot-buffer rows, every ladder level."""
-        if self._has_parquet(self._data_dir("points")):
+        if store.has_parquet(self._data_dir("points")):
             self._rewrite_bucket_partition(
                 "points",
                 "uuid_bucket",
@@ -1198,7 +1159,7 @@ class BTrDBEngine:
 
     def _load_pending_gc(self) -> set[str]:
         path = self._data_dir("gc_pending")
-        if not self._has_parquet(path):
+        if not store.has_parquet(path):
             return set()
         return {r["uuid"] for r in self.spark.read.parquet(path).select("uuid").distinct().collect()}
 
@@ -1265,31 +1226,19 @@ class BTrDBEngine:
         """S5 delivered to the driver: an iterator of row dicts
         ``(time, value)``, the rows raw_values returns in its order, for
         callers that consume the answer in this process (the service, the
-        client). The Arrow tier's table (read here, in this call; the
+        client). The Arrow tier's table is read here, in this call; the
         driver holds the whole result, as a table and as two Python lists
-        of its columns), else, on a legacy root-level layout, the
-        raw_values plan, built here and drained through toLocalIterator
-        as the iterator is consumed."""
+        of its columns."""
         tbl = self._raw_arrow(uuid, start, end, version)
-        if tbl is not None:
-            return (
-                {"time": t, "value": v}
-                for t, v in zip(tbl["time"].to_pylist(), tbl["value"].to_pylist())
-            )
-        df = self.raw_values(uuid, start, end, version=version).select("time", "value")
-
-        def drain():
-            for row in df.toLocalIterator():
-                yield row.asDict()
-
-        return drain()
+        return (
+            {"time": t, "value": v}
+            for t, v in zip(tbl["time"].to_pylist(), tbl["value"].to_pylist())
+        )
 
     def _raw_arrow(self, uuid: str, start: int, end: int, version: int | None):
         """The Arrow tier's answer to a single-stream raw read: a pyarrow
         Table ``(time, value)`` sorted by (time, value), read on the
-        driver with pyarrow.dataset and no Spark job, or None when a
-        points or hot table is in the legacy root-level layout (no bucket
-        directories to prune to), where the read must run on Spark.
+        driver with pyarrow.dataset and no Spark job.
 
         The answer is raw_values' over _queryable. Cold points come from
         the stream's uuid_bucket directory and the time_bucket range the
@@ -1311,8 +1260,6 @@ class BTrDBEngine:
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        if any(self._legacy_root(self._data_dir(n)) for n in ("points", "hot")):
-            return None
         empty = pa.table({"time": pa.array([], pa.int64()), "value": pa.array([], pa.float64())})
         # times are int64: clamp the half-open bounds to a closed int64 range
         lo, hi = max(start, -(1 << 63)), min(end - 1, (1 << 63) - 1)
@@ -1370,13 +1317,14 @@ class BTrDBEngine:
     def _ladder_gate(self, uuid: str, lvl: int | None) -> tuple[bool, bool]:
         """(routable, include_rebase) for ladder-serving one stream at
         ladder level ``lvl``. A stream with tombstones is routable only if
-        EVERY tombstone version has a rebase snapshot at that level — a
-        legacy store whose deletes were invalidated pre-rebase
-        (latest-collapse destroyed the per-version partials) fails this
-        and falls back to the exact raw path instead of silently serving
-        post-delete data at historical versions (ADVICE r5 #4). Delete-free
-        streams (the steady state) skip the rebase sidecar entirely, so
-        their ladder read plans zero joins (VERDICT r5 wrong #1)."""
+        EVERY tombstone version has a rebase snapshot at that level. A
+        delete commits its tombstones first and appends the rebase
+        snapshots after, so a crash between the two appends leaves
+        tombstones the ladder has not seen; this check sends such a
+        stream to the exact raw path instead of serving its pre-delete
+        partials (tests/test_delete_batch.py pins it). Delete-free streams
+        (the steady state) skip the rebase sidecar entirely, so their
+        ladder read plans zero joins (VERDICT r5 wrong #1)."""
         if lvl is None:
             return False, False
         dv = self._delete_versions(uuid)
@@ -1440,8 +1388,7 @@ class BTrDBEngine:
         no tombstones (no rebase resolution) and no hot-buffer merge (a
         pinned read, or no buffered rows: the merge's raw
         double-to-decimal casts stay in Spark). The ladder then declines
-        a level that is not in the additive format or a slice over its
-        row bound (RollupLadder.aligned_windows_arrow)."""
+        a slice over its row bound (RollupLadder.aligned_windows_arrow)."""
         if route is None or route[1] or route[2]:
             return None
         return self.ladder.aligned_windows_arrow(uuid, start, end, pw, version=version)

@@ -35,14 +35,14 @@ vectors touching only:
   and never the raw corpus table.
 
 ``retrain()`` closes the measured scale hole of a FIXED quantizer
-(tools/prof_ann_index.py: a 10x-grown corpus under the bootstrap
-centroids degrades the 1k-vec probe ~3x because per-cell posting mass
-grows 10x): it re-trains the coarse quantizer from the indexed postings
-themselves (driver-bounded spherical k-means — the faiss ``train()``
-contract: k*dim floats on the driver, assignment at scale), rewrites
-every posting under the new cells, and publishes the whole thing as ONE
-atomic generation flip. ``cell_stats()`` / ``imbalance_factor()`` are
-the drift gauges that trigger it.
+(ARCHITECTURE.md "r10 retrain lifecycle": a 10x-grown corpus under the
+bootstrap centroids degrades the 1k-vec probe ~3x because per-cell
+posting mass grows 10x): it re-trains the coarse quantizer from the
+indexed postings themselves (driver-bounded spherical k-means — the
+faiss ``train()`` contract: k*dim floats on the driver, assignment at
+scale), rewrites every posting under the new cells, and publishes the
+whole thing as ONE atomic generation flip. ``cell_stats()`` /
+``imbalance_factor()`` are the drift gauges that trigger it.
 
 Equivalence contract (oracle-gated): ``probe(batch)`` over an index
 built incrementally from ``corpus`` (any update batching, retrained or
@@ -62,6 +62,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..store import has_parquet
 from .similarity import _dot, _norm, ivf_cells
 
 
@@ -126,20 +127,11 @@ class AnnIndex:
         consistent view of centroids + postings)."""
         return self.store.resolve(self.base, "state")
 
-    @staticmethod
-    def _has_parquet(path: str) -> bool:
-        import glob as _glob
-
-        return bool(
-            _glob.glob(os.path.join(path, "*.parquet"))
-            or _glob.glob(os.path.join(path, "*", "*.parquet"))
-        )
-
     def _read(self, snap: str | None, sub: str) -> DataFrame | None:
         if snap is None:
             return None
         path = os.path.join(snap, sub)
-        if not os.path.isdir(path) or not self._has_parquet(path):
+        if not has_parquet(path):
             return None
         return self.spark.read.parquet(path)
 
@@ -228,7 +220,7 @@ class AnnIndex:
         contract (ADVICE r10) — retrain() is the lifecycle verb that
         re-assigns and rewrites postings atomically."""
         cur = self._snapshot()
-        if cur is not None and self._has_parquet(os.path.join(cur, "cells")):
+        if cur is not None and has_parquet(os.path.join(cur, "cells")):
             raise RuntimeError(
                 "AnnIndex.set_centroids: index already has postings; "
                 "use retrain() to replace the quantizer (postings must "
@@ -290,7 +282,7 @@ class AnnIndex:
         # O(batch) agg (k rows on the driver), replacing the O(corpus)
         # cell_stats() scan the streaming sink used to pay per trigger
         meta = self._read_meta(cur) if cur is not None else None
-        if meta is not None or cur is None or not self._has_parquet(
+        if meta is not None or cur is None or not has_parquet(
             os.path.join(cur, "cells")
         ):
             counts = dict(meta["counts"]) if meta is not None else {}
@@ -613,8 +605,9 @@ class AnnIndex:
         """max(frac) * n_cells over the live postings — 1.0 is perfectly
         balanced. This is the SKEW alarm: it fires when one cell hoards
         the corpus. It deliberately does NOT fire under uniform growth
-        (measured, tools/prof_ann_index.py: a fixed 16-cell quantizer on
-        a 10x corpus probes ~5x slower with imbalance still ~1.1) —
+        (measured, ARCHITECTURE.md "r10 retrain lifecycle": a fixed
+        16-cell quantizer on a 10x corpus probes ~5x slower with
+        imbalance still ~1.1) —
         pair it with max_cell_mass() against the per-cell posting budget
         to catch that case."""
         rows = self.cell_stats().agg(

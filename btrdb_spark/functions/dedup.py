@@ -88,13 +88,26 @@ def _spread(df: DataFrame) -> DataFrame:
     the sort-before-repartition pass each task pays so retries stay
     deterministic) — at real corpus scale, where the scan already has
     thousands of splits, that is terabytes of text moved for zero
-    parallelism gain. The partition-count probe is driver-side plan
-    inspection (no job); every downstream consumer aggregates by
-    content-derived keys, so the output is identical either way."""
+    parallelism gain. Every downstream consumer aggregates by
+    content-derived keys, so the output is identical either way.
+
+    The partition count is read without a job, from the optimized plan
+    under any Project/Filter: a ``Repartition`` node states it, and a
+    leaf (a scan) builds its RDD's splits on the driver. Any other input
+    (a groupBy, a join) is repartitioned without a probe: under AQE,
+    ``df.rdd`` of a plan with an exchange runs the upstream shuffle at
+    build time, and the action would run it again."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par)
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition":
+        n = node.numPartitions()
+    elif node.children().isEmpty():
+        n = df.rdd.getNumPartitions()
+    else:
+        n = 0
+    return df if n >= par else df.repartition(par)
 
 
 def shingle_edges(documents: DataFrame, n: int, text_col: str = "text") -> DataFrame:

@@ -57,6 +57,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..store import has_parquet
 from .dedup import band_rows_of, minhash_signatures
 
 
@@ -142,20 +143,11 @@ class DedupIndex:
     def _snapshot(self) -> str | None:
         return self.store.resolve(self.base, "state")
 
-    @staticmethod
-    def _has_parquet(path: str) -> bool:
-        import glob as _glob
-
-        return bool(
-            _glob.glob(os.path.join(path, "*.parquet"))
-            or _glob.glob(os.path.join(path, "*", "*.parquet"))
-        )
-
     def _read(self, snap: str | None, sub: str) -> DataFrame | None:
         if snap is None:
             return None
         path = os.path.join(snap, sub)
-        if not os.path.isdir(path) or not self._has_parquet(path):
+        if not has_parquet(path):
             return None
         return self.spark.read.schema(self._SCHEMAS[sub]).parquet(path)
 

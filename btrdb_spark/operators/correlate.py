@@ -255,8 +255,9 @@ def stream_correlations_topk_lsh(
 ) -> DataFrame:
     """Sub-quadratic top-k correlated partners via sign-LSH candidate
     pruning — the escape hatch from the S^2 pair fan-out that the exact
-    variants cannot avoid (measured in tools/prof_corr.py: pair rows
-    scale ~S^2, ~7.6M at the sf0.1 fleet, ~100x that at 10x streams).
+    variants cannot avoid (measured, ARCHITECTURE.md "r9 fleet-correlation
+    probe": pair rows scale ~S^2, ~7.6M at the sf0.1 fleet, ~100x that at
+    10x streams).
 
     Key identity: Pearson correlation of two streams' bucket-mean series
     IS the cosine of their mean-centered vectors over the global bucket
@@ -288,9 +289,9 @@ def stream_correlations_topk_lsh(
     candidate generation bit-for-bit (md5 coefficients, same double
     centering), so the gate certifies the whole plan.
 
-    OPERATING ENVELOPE (measured, tools/prof_corr.py): the cosine
-    identity holds on the GLOBAL bucket axis with missing buckets
-    imputed at the stream mean, while pairwise Pearson uses each pair's
+    OPERATING ENVELOPE (measured, ARCHITECTURE.md "r9 fleet-correlation
+    probe"): the cosine identity holds on the GLOBAL bucket axis with
+    missing buckets imputed at the stream mean, while pairwise Pearson uses each pair's
     COMMON buckets only. On truly coupled streams — shared bucket
     support, correlated everywhere, the coupled-feeder shape this
     operator exists to find — recall is measured PERFECT: 6000 planted
@@ -418,7 +419,7 @@ def _topk_lsh_from_bucket_means(
     # Same md5 evaluations, zero crossJoin, one Exchange removed from the
     # coefficient leg; outputs proven row-identical (exceptAll 0/0 both
     # ways) and A/B-measured faster despite transform being interpreted
-    # (0.20 s vs 0.30/0.38 s bracketed — tools/prof_corr_coef_r13.py).
+    # (0.20 s vs 0.30/0.38 s bracketed — OPTIMIZATION_r13.md §9a).
     coefs_arr = m.select("bucket").distinct().select(
         "bucket",
         F.transform(

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..store import has_parquet
+
 STATE_SCHEMA = "distillate string, input_uuid string, processed_version long"
 
 
@@ -136,9 +138,7 @@ def _state_dir(engine) -> str:
 
 def _read_state(engine, name: str) -> dict[str, int]:
     path = _state_dir(engine)
-    if not os.path.isdir(path) or not any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-    ):
+    if not has_parquet(path):
         return {}
     df = engine.spark.read.schema(STATE_SCHEMA).parquet(path)
     rows = (

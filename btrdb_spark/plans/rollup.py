@@ -49,8 +49,6 @@ from ..schemas import PWFACTOR
 LEVELS = (20, 26, 32, 38, 44, 50, 56)
 DEC = "decimal(38,6)"
 
-ROLLUP_COLS = ["uuid", "bucket_start", "cnt", "vmin", "vmax", "vsum"]
-
 # Rebase-sentinel bucket: every versioned delete appends one cnt=0 row at
 # this bucket to the level's REBASE SIDECAR, so readers can prove "this
 # stream's deletes all have ladder snapshots" (engine routing gate) even
@@ -65,10 +63,6 @@ REBASE_SENTINEL_BUCKET = -(1 << 62)
 # Spark. It bounds driver memory (about 60 B a row in Arrow); it is not a
 # knob.
 ARROW_MAX_ROWS = 1 << 18
-# Columns of the additive (r6) level format, the only one the Arrow read
-# serves; a file with an inline ``rebase`` column, or without ``version``,
-# keeps its read on Spark.
-_ADDITIVE_COLS = {*ROLLUP_COLS, "version"}
 
 
 def rollup_points(points: DataFrame, pw: int, versioned: bool = False) -> DataFrame:
@@ -110,11 +104,8 @@ def rollup_points(points: DataFrame, pw: int, versioned: bool = False) -> DataFr
 def combine(rollup: DataFrame) -> DataFrame:
     """Fold partial rollup rows per bucket — the OpReduce combine. A
     `version` column, when present, stays a grouping key (compaction must
-    not erase version granularity or historical reads lose their source);
-    likewise `rebase` (a snapshot row must never merge into additive
-    partials)."""
+    not erase version granularity or historical reads lose their source)."""
     keys = ["uuid", "bucket_start"] + (["version"] if "version" in rollup.columns else [])
-    keys += ["rebase"] if "rebase" in rollup.columns else []
     return rollup.groupBy(*keys).agg(
         F.sum("cnt").alias("cnt"),
         F.min("vmin").alias("vmin"),
@@ -456,8 +447,7 @@ class RollupLadder:
 
     def level(self, pw: int) -> DataFrame:
         """Main level: ADDITIVE version-stamped partials only (no rebase
-        column — r6 format; an r5-era store with inline rebase rows keeps
-        its column and still resolves through apply_rebase's auto-detect)."""
+        column; snapshot rows live in the rebase sidecar)."""
         df = self._read_memo(self._name(pw))
         if df is None:
             return self.spark.createDataFrame(
@@ -486,17 +476,15 @@ class RollupLadder:
         rb = self.rebase_level(pw)
         if rb is None:
             return main
-        if "rebase" not in main.columns:
-            main = main.withColumn("rebase", F.lit(False))
-        return main.unionByName(rb)
+        return main.withColumn("rebase", F.lit(False)).unionByName(rb)
 
     def rebase_versions(self, uuid: str, pw: int) -> set[int]:
         """Delete versions with a rebase snapshot at level pw for one
         stream (the sentinel row guarantees a no-op delete still records
         its version). The engine gates ladder routing for deleted streams
-        on this covering the stream's tombstone versions — a legacy store
-        whose deletes were invalidated pre-rebase (latest-collapse) fails
-        the check and falls back to the exact raw path (ADVICE r5 #4)."""
+        on this covering the stream's tombstone versions: a crash between
+        a delete's tombstone append and its rebase append leaves a version
+        uncovered, and such a stream falls back to the exact raw path."""
         rb = self.rebase_level(pw)
         if rb is None:
             return set()
@@ -671,10 +659,9 @@ class RollupLadder:
         Arrow's decimal cast is not. Returns a Table
         ``(bucket_start, cnt, vmin, vmean, vmax)`` sorted by bucket, or
         None when the read must stay on Spark: pw finer than the ladder
-        or past the int64 grid, a level never written, a level file not
-        in the additive format, or a slice of more than ARROW_MAX_ROWS
-        level rows (counted as the filtered scan streams in, which stops at
-        the first batch past the bound)."""
+        or past the int64 grid, a level never written, or a slice of more
+        than ARROW_MAX_ROWS level rows (counted as the filtered scan
+        streams in, which stops at the first batch past the bound)."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
@@ -694,10 +681,6 @@ class RollupLadder:
         level = self._arrow_level(lvl)
         if level is None:
             return None
-        for frag in level.get_fragments():
-            names = set(frag.physical_schema.names)
-            if not _ADDITIVE_COLS <= names or "rebase" in names:
-                return None
         # footer statistics skip row groups; the bound counts the rows
         # the filter keeps, i.e. what the driver holds for this slice
         scan = level.scanner(
@@ -800,76 +783,6 @@ def rebase_snapshot_rows(
     )
 
 
-def invalidate_buckets(
-    ladder: RollupLadder,
-    points: DataFrame,
-    uuid: str,
-    start: int,
-    end: int,
-    version: int | None = None,
-) -> None:
-    """Invalidate ladder buckets overlapping [start, end) for one stream —
-    the DeleteRange maintenance path (SURVEY.md §7 watch-list #5).
-
-    ``version`` (the delete's commit version — the CGeneration analog):
-    APPEND one rebase snapshot row per previously-populated touched
-    bucket, holding the complete post-delete bucket content stamped
-    (version, rebase=true); buckets left empty get a cnt=0 placeholder so
-    reads at or after ``version`` stop seeing their stale partials. The
-    older additive partials are PRESERVED, which is what keeps
-    query-at-version rollup-fast after deletes (VERDICT r4 #7): a read at
-    v < version still combines the original partials; a read at
-    v >= version starts from the snapshot (plans/rollup.py apply_rebase).
-    O(touched buckets) appended rows per level, no level rewrite at all.
-
-    Snapshot rows land in the level's REBASE SIDECAR table (plus one
-    cnt=0 sentinel row recording the delete version even when the delete
-    touched no populated bucket) — the main level stays purely additive,
-    so every delete-free ladder read plans zero rebase joins (VERDICT r5
-    wrong #1).
-
-    ``version=None`` is the legacy latest-collapse: replace the touched
-    buckets with a latest-state recomputation (destroys per-version
-    history for them).
-    """
-    for pw in ladder.levels:
-        width = 1 << pw
-        lo = start - (start % width + width) % width
-        hi = end - (end % width + width) % width + width
-        in_range = (
-            (F.col("uuid") == uuid)
-            & (F.col("bucket_start") >= F.lit(lo))
-            & (F.col("bucket_start") < F.lit(hi))
-        )
-        src = points.filter(
-            (F.col("uuid") == uuid)
-            & (F.col("time") >= F.lit(lo))
-            & (F.col("time") < F.lit(hi))
-        )
-        if version is not None:
-            # existing = main ∪ sidecar keys (a bucket may live only as a
-            # prior snapshot on a legacy-collapsed level)
-            existing = ladder.read_level(pw).filter(in_range)
-            full = rebase_snapshot_rows(existing, src, pw, version)
-            sentinel = ladder.spark.createDataFrame(
-                [(uuid, REBASE_SENTINEL_BUCKET, int(version), 0, None, None, None, True)],
-                f"uuid string, bucket_start long, version long, cnt long, "
-                f"vmin double, vmax double, vsum {DEC}, rebase boolean",
-            ).withColumn("vsum", F.coalesce(F.col("vsum"), F.lit(0).cast(DEC)))
-            full.unionByName(sentinel).coalesce(1).write.mode("append").parquet(
-                ladder.store.current_dir(ladder.base, ladder._rb_name(pw), create=True)
-            )
-            store_mod.bump_stamp(ladder.base, ladder._rb_name(pw))
-            continue
-        keep = ladder.level(pw).filter(~in_range)
-        if "version" not in src.columns:
-            src = src.withColumn("version", F.lit(1 << 62).cast("long"))
-        recomputed = rollup_points(src, pw, versioned=True)
-        if "rebase" in keep.columns:  # r5-era level with inline rebase rows
-            recomputed = recomputed.withColumn("rebase", F.lit(False))
-        ladder.rewrite_level(pw, lambda df: keep.unionByName(recomputed))
-
-
 def _merged_bucket_windows(
     ranges: list[tuple[str, int, int]], width: int
 ) -> list[tuple[str, int, int]]:
@@ -903,20 +816,28 @@ def invalidate_buckets_multi(
     ranges: list[tuple[str, int, int]],
     versions: dict[str, int],
 ) -> None:
-    """Batched `invalidate_buckets` — the compliance-delete path (verdict
-    r7 ask #2): GDPR/erasure deletes arrive as a batch of (uuid, range)
-    pairs, and the per-commit fixed cost (one snapshot job + one sidecar
-    append PER LADDER LEVEL) must be paid once per batch, not once per
-    stream. Reference semantics are preserved: each stream still gets its
-    OWN new version (quasar.go:481-514), carried in ``versions`` and
-    stamped per-uuid via a broadcast join instead of a literal.
+    """Invalidate the ladder buckets a batch of DeleteRange tombstones
+    touches — the DeleteRange maintenance path (SURVEY.md §7 watch-list
+    #5), batched for the compliance-delete shape (verdict r7 ask #2):
+    GDPR/erasure deletes arrive as a batch of (uuid, range) pairs, and
+    the per-commit fixed cost (one snapshot job + one sidecar append PER
+    LADDER LEVEL) is paid once per batch, not once per stream. Each
+    stream gets its OWN new version (quasar.go:481-514), carried in
+    ``versions`` and stamped per-uuid via a broadcast join.
 
     ``points`` is the post-delete live view of ALL touched streams (the
-    caller composes apply_deletes over a multi-stream pruned read); the
-    per-level work is identical to the single-stream path — one rebase
-    snapshot row per previously-populated touched (uuid, bucket), cnt=0
-    placeholders for emptied buckets, one cnt=0 sentinel per stream — so
-    per-stream marginal cost is the touched-bucket work only.
+    caller composes apply_deletes over a multi-stream pruned read). Per
+    level, the batch APPENDS one rebase snapshot row per previously-
+    populated touched (uuid, bucket), holding the complete post-delete
+    bucket content stamped (version, rebase=true); buckets the delete
+    emptied get a cnt=0 placeholder, and every stream gets one cnt=0
+    sentinel row that records the delete version even when it touched
+    no populated bucket. The older additive partials are PRESERVED: a
+    read at v < version still combines them, a read at v >= version
+    starts from the snapshot (apply_rebase), so query-at-version stays
+    rollup-fast after deletes (VERDICT r4 #7). Snapshot rows land in the
+    level's REBASE SIDECAR, never the main level, so every delete-free
+    ladder read plans zero rebase joins (VERDICT r5 wrong #1).
     """
     if not ranges:
         return

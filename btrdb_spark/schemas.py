@@ -52,8 +52,7 @@ HOT_POINTS_SCHEMA = StructType(
         StructField("value", DoubleType(), False),
         StructField("seq", LongType(), False),  # insert order within buffer
         # wall-clock ms at append; drives the age-triggered flush
-        # (pqm.go:29-35 MaxPQMBufferAge). Nullable: rows from a pre-ingest_ts
-        # store read as NULL and count as infinitely old (flush eagerly).
+        # (pqm.go:29-35 MaxPQMBufferAge). append_hot stamps every row.
         StructField("ingest_ts", LongType(), True),
     ]
 )

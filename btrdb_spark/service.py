@@ -27,9 +27,8 @@ tombstones with pyarrow, and holds the whole finished, sorted result (an
 Arrow table plus Python lists of its two columns) while the batches go
 out. The read has no row bound: a single-stream Spark result is ONE
 partition (operators/raw.py sorts it without a range shuffle), which this
-process would fetch whole as well, and more slowly. Only a legacy
-root-level layout drains the raw_values plan instead. Either way the
-response goes out in bounded batches.
+process would fetch whole as well, and more slowly. The response goes
+out in bounded batches.
 
 AlignedWindows takes its rows from BTrDBEngine.aligned_windows_rows. A
 committed stream without tombstones is answered there on the driver,

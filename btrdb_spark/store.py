@@ -246,14 +246,11 @@ class PosixStore(StoreBackend):
 
     def resolve(self, base: str, name: str) -> str | None:
         ptr = self._pointer(base, name)
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                gen = f.read().strip()
-            path = os.path.join(base, gen)
-            return path if os.path.exists(path) else None
-        # legacy bare ``{name}`` directory (pre-pointer layout)
-        legacy = os.path.join(base, name)
-        return legacy if os.path.exists(legacy) else None
+        if not os.path.exists(ptr):
+            return None
+        with open(ptr) as f:
+            path = os.path.join(base, f.read().strip())
+        return path if os.path.exists(path) else None
 
     def _flip(self, base: str, name: str, gen_path: str) -> None:
         tmp = self._pointer(base, name) + ".tmp"
@@ -629,33 +626,38 @@ class ManifestLogStore(StoreBackend):
 DEFAULT = PosixStore()
 
 
+def _parquet_files(path: str):
+    """(directory, file name) of every parquet file under ``path`` that
+    Spark's FileIndex will actually read: Spark's visibility rule hides
+    any path component starting with ``_`` or ``.``, which includes the
+    parquet writer's ``_temporary/`` staging tree and ``_SUCCESS``/``.crc``
+    markers, so the walk never descends into such a directory."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield root, f
+
+
+def has_parquet(path: str | None) -> bool:
+    """Whether ``path`` holds a parquet file Spark would read (the
+    visibility rule of parquet_signature), stopping at the first one. A
+    tree that holds only ``_temporary/`` staging reads as empty: Spark
+    would find no footer there and throw UNABLE_TO_INFER_SCHEMA."""
+    return path is not None and next(_parquet_files(path), None) is not None
+
+
 def parquet_signature(path: str) -> tuple:
     """(relative path, size) of every parquet file under ``path`` that
-    Spark's FileIndex will actually read — applying Spark's visibility
-    rule (any path component starting with ``_`` or ``.`` is hidden,
-    which includes the parquet writer's ``_temporary/`` staging tree and
-    ``_SUCCESS``/``.crc`` markers). The DataFrame memos key on this
-    signature; counting staging files would let a concurrent writer's
-    half-committed batch make the signature claim "table has data" while
-    ``read.parquet`` sees zero footers and throws UNABLE_TO_INFER_SCHEMA
-    (raced for real by streaming-sink polls)."""
-
-    def _visible(root: str) -> bool:
-        rel = os.path.relpath(root, path)
-        return rel == "." or not any(
-            p.startswith(("_", ".")) for p in rel.split(os.sep)
-        )
-
+    Spark's FileIndex will actually read (_parquet_files). A memo miss
+    names its files with this walk; counting staging files would let a
+    concurrent writer's half-committed batch make the table claim "has
+    data" while ``read.parquet`` sees zero footers and throws
+    UNABLE_TO_INFER_SCHEMA (raced for real by streaming-sink polls)."""
     return tuple(
         sorted(
-            (
-                os.path.join(os.path.relpath(r, path), f),
-                os.path.getsize(os.path.join(r, f)),
-            )
-            for r, _d, fs in os.walk(path)
-            if _visible(r)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
+            (os.path.relpath(os.path.join(r, f), path), os.path.getsize(os.path.join(r, f)))
+            for r, f in _parquet_files(path)
         )
     )
 
@@ -665,22 +667,21 @@ def bump_stamp(base: str, name: str) -> None:
     write (``{name}.SIG``, write-tmp + rename) next to the generation
     dirs.
 
-    Contract (VERDICT r12 #3): every in-repo writer that APPENDS into a
-    table's live generation bumps the stamp after the append is durable
-    (the parquet job committed); generation REWRITES need no bump
-    because the DataFrame memos key on the generation path, which a
-    publish flips. Readers then sign an unchanged table as (generation
-    path, stamp) in O(1) per access instead of walking O(#files)
-    parquet names/sizes on the driver before any Spark job starts — at
-    100 TB a generation dir holds 1e5-1e7 files and that walk was the
-    query path's serial driver-side prefix. A reader that races the
-    append may serve the pre-append handle (the append is not yet
-    acked — same window the walk had while files moved out of
-    _temporary/); any read after the append call returns sees the new
-    stamp. Code-version skew caveat: a writer that appends WITHOUT
-    bumping into a store that already has a stamp leaves readers stale
-    until the next bump — all writers in this repo bump; stampless
-    (legacy/external) stores keep the full-walk fallback."""
+    Contract (VERDICT r12 #3): every writer that APPENDS into a table's
+    live generation bumps the stamp after the append is durable (the
+    parquet job committed); generation REWRITES need no bump because
+    the memos key on the generation path, which a publish flips.
+    Readers then sign a table as (generation path, stamp) in O(1) per
+    access instead of walking O(#files) parquet names/sizes on the
+    driver before any Spark job starts — at 100 TB a generation dir
+    holds 1e5-1e7 files and that walk was the query path's serial
+    driver-side prefix. A reader that races the append may serve the
+    pre-append handle (the append is not yet acked — same window the
+    walk had while files moved out of _temporary/); any read after the
+    append call returns sees the new stamp. An append that does not
+    bump leaves readers on the pre-append handle until the next bump or
+    publish, so every append into a table read through the memos
+    bumps."""
     import uuid as _uuid
 
     path = os.path.join(base, f"{name}.SIG")
@@ -691,9 +692,9 @@ def bump_stamp(base: str, name: str) -> None:
 
 
 def read_stamp(base: str, name: str) -> str | None:
-    """Current mutation stamp of table ``name``, or None when no
-    stamped writer ever appended (legacy store) — callers must then
-    fall back to the parquet_signature walk."""
+    """Current mutation stamp of table ``name``, or None when nothing
+    has appended to it yet (a table written only by generation
+    rewrites, or never written)."""
     try:
         with open(os.path.join(base, f"{name}.SIG")) as f:
             return f.read()
@@ -702,27 +703,24 @@ def read_stamp(base: str, name: str) -> str | None:
 
 
 def table_signature(backend: StoreBackend, base: str, name: str) -> tuple | None:
-    """(generation path, change marker) of table ``name``, or None when
-    the table was never written. The marker is the mutation stamp — O(1)
-    — or, for a stampless legacy store, the full parquet_signature walk.
-    Appends bump the stamp and rewrites flip the path, so two equal
-    signatures name the same table contents: every query-path memo keys
-    on this."""
+    """(generation path, mutation stamp) of table ``name``, or None when
+    the table was never written; O(1), no directory walk. Appends bump
+    the stamp and rewrites flip the path, so two equal signatures name
+    the same table contents: every query-path memo keys on this."""
     path = backend.resolve(base, name)
     if path is None:
         return None
-    stamp = read_stamp(base, name)
-    return (path, stamp if stamp is not None else parquet_signature(path))
+    return (path, read_stamp(base, name))
 
 
 def memo_scan(spark, backend: StoreBackend, memo: dict, base: str, name: str):
     """``spark.read.parquet`` of table ``name``, memoized in ``memo`` on
     its table_signature: a read costs ~0.1-0.2 s of JVM listing and
     schema inference, which dominated short-query latency. None = no
-    parquet yet. On a miss the parquet walk is the emptiness check: a
-    stamped tree that holds only ``_temporary/`` staging files must read
-    as absent, not throw UNABLE_TO_INFER_SCHEMA. Mutation paths stay
-    unmemoized — they must read the precise generation they CAS
+    parquet yet. On a miss the parquet_signature walk is the emptiness
+    check: a tree that holds only ``_temporary/`` staging files must
+    read as absent, not throw UNABLE_TO_INFER_SCHEMA. Mutation paths
+    stay unmemoized — they must read the precise generation they CAS
     against.
 
     A miss runs no Spark job either: Spark infers a parquet schema from
@@ -735,8 +733,8 @@ def memo_scan(spark, backend: StoreBackend, memo: dict, base: str, name: str):
     hit = memo.get(name)
     if hit is not None and hit[0] == sig:
         return hit[1]
-    path, marker = sig
-    files = marker if isinstance(marker, tuple) else parquet_signature(path)
+    path = sig[0]
+    files = parquet_signature(path)
     df = None
     if files:
         schema = _spark_footer_schema(os.path.join(path, files[0][0]))

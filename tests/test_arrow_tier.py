@@ -105,9 +105,8 @@ def test_arrow_tier_equals_spark_ladder(history, lvl):
 
 def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
     """Reads the tier must leave on Spark: pending GC, buffered at latest,
-    pw finer than the ladder, a slice over the row bound, and a level with
-    an inline rebase column. The pinned read of a buffered stream is the
-    tier's."""
+    pw finer than the ladder, and a slice over the row bound. The pinned
+    read of a buffered stream is the tier's."""
     eng = _engine(spark, tmp_path / "db", levels=(20, 26))
     plain, hot, gone = (eng.create_stream(f"decline/{i}") for i in range(3))
     rows = [(u, i << 22, float(i % 17)) for u in (plain, hot, gone) for i in range(400)]
@@ -132,11 +131,6 @@ def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
     assert _tier(eng, plain, LO, HI, 20) is None
     assert _tier(eng, plain, 0, 10 << 22, 20) is not None
     monkeypatch.undo()
-
-    # an r5-era level keeps its rebase rows inline: only Spark resolves them
-    eng.ladder.rewrite_level(26, lambda df: df.withColumn("rebase", F.lit(False)))
-    assert _tier(eng, plain, LO, HI, 26) is None
-    assert _tier(eng, plain, LO, HI, 20) is not None
 
 
 def test_arrow_tier_declines_deleted_stream(spark, tmp_path):

@@ -447,3 +447,26 @@ def test_spread_skips_payload_shuffle_when_parallel_enough(spark):
     a = dedup.minhash_signatures(narrow, n=2, num_hashes=8).orderBy("doc_id").collect()
     b = dedup.minhash_signatures(wide, n=2, num_hashes=8).orderBy("doc_id").collect()
     assert a == b
+
+
+def test_spread_runs_no_job_on_a_shuffled_input(spark):
+    """Building _spread over a groupBy-derived frame submits no Spark job:
+    under AQE, probing ``df.rdd`` of a plan with an exchange would run the
+    upstream shuffle at build time and again at action time. Such an
+    input is spread to the session parallelism with its rows unchanged.
+    Jobs are counted as deltas of the DAG scheduler's job id counter."""
+    from pyspark.sql import functions as F
+
+    par = spark.sparkContext.defaultParallelism
+    rows = [(i, f"doc {i % 7} alpha beta") for i in range(40)]
+    grouped = (
+        spark.createDataFrame(rows, "doc_id long, text string")
+        .groupBy("text")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    spread = dedup._spread(grouped)
+    assert dag.nextJobId() - j0 == 0
+    assert spread.rdd.getNumPartitions() == par
+    assert sorted(spread.collect()) == sorted(grouped.collect())

@@ -6,9 +6,7 @@ with pyarrow (BTrDBEngine._raw_arrow): cold points pruned to the stream's
 partition directories, the hot overlay at latest, tombstones and pending
 GC applied, sorted by (time, value). Its rows must equal
 ``raw_values(...).collect()`` in order, at latest and at every committed
-version, over random insert/flush/delete_range/re-insert histories, and a
-read of a legacy root-level layout must drain the Spark plan with the same
-answer.
+version, over random insert/flush/delete_range/re-insert histories.
 The partition bucket it reads is computed by a driver-side XXH64, which
 must equal Spark's ``pmod(xxhash64(uuid), n)``.
 """
@@ -139,23 +137,6 @@ def test_raw_tier_equals_spark(history):
     gone = [u for u in versions if not full[(u, None)]]
     assert len(gone) == 1 and not any(full[(gone[0], v)] for v in versions[gone[0]])
     assert any(len(set(rows)) < len(rows) for rows in full.values())  # duplicates kept
-
-
-def test_raw_tier_declines_legacy_root_layout(spark, tmp_path):
-    """A points table whose files sit at the generation root (the
-    pre-partitioned layout) has no uuid_bucket directories to prune to:
-    the read stays on Spark."""
-    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9)
-    u = eng.create_stream("raw/legacy")
-    eng.insert(u, [(i, float(i)) for i in range(20)], sync=True)
-    want = list(eng.raw_values_rows(u, 0, 100))
-    assert eng._raw_arrow(u, 0, 100, None) is not None and len(want) == 20
-    cur = eng._data_dir("points")
-    gen = eng.store.new_generation(eng.base, "points")
-    spark.read.parquet(cur).write.mode("append").parquet(gen)  # bucket columns in the files
-    eng.store.publish(eng.base, "points", gen, expected=cur)
-    assert eng._raw_arrow(u, 0, 100, None) is None
-    assert list(eng.raw_values_rows(u, 0, 100)) == want
 
 
 def test_raw_tier_skips_an_uncommitted_deletes_generation(spark, tmp_path):

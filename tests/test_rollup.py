@@ -66,17 +66,22 @@ def test_route_level():
 
 def test_invalidate_buckets_after_delete(pts, spark, tmp_path):
     ladder = ru.RollupLadder(spark, str(tmp_path / "ladder3"), levels=(38, 44))
-    ladder.ingest_batch(pts)
-    # delete a middle range, then recompute touched buckets from the
-    # delete-filtered points
+    ladder.ingest_batch(pts.withColumn("version", F.lit(1).cast("long")))
+    # delete a middle range of every stream at version 2, then append the
+    # touched buckets' snapshots from the delete-filtered points
     dlo, dhi = 1 << 40, 1 << 42
     remaining = pts.filter(~((F.col("time") >= dlo) & (F.col("time") < dhi)))
-    ru.invalidate_buckets(ladder, remaining, "a", dlo, dhi)
-    ru.invalidate_buckets(ladder, remaining, "b", dlo, dhi)
-    ru.invalidate_buckets(ladder, remaining, "n", dlo, dhi)
-    got = ladder.aligned_windows(None, -(1 << 42), 1 << 44, 44)
-    want = aligned_windows(remaining, None, -(1 << 42), 1 << 44, 44)
+    ru.invalidate_buckets_multi(
+        ladder, remaining, [(u, dlo, dhi) for u in "abn"], {u: 2 for u in "abn"}
+    )
+    lo, hi = -(1 << 42), 1 << 44
+    got = ladder.aligned_windows(None, lo, hi, 44)
+    want = aligned_windows(remaining, None, lo, hi, 44)
     assert _key(got) == _key(want)
+    # a read pinned before the delete still combines the original partials
+    before = ladder.aligned_windows(None, lo, hi, 44, version=1)
+    assert _key(before) == _key(aligned_windows(pts, None, lo, hi, 44))
+    assert _key(before) != _key(want)
 
 @pytest.mark.parametrize(
     "start,width",
@@ -130,8 +135,8 @@ def test_windows_approx_depth_knob(pts, spark, tmp_path):
 
 
 def test_hybrid_windows_after_delete_invalidation(spark, make_points, tmp_path):
-    """DeleteRange -> invalidate_buckets -> hybrid windows answers match the
-    raw path over the delete-filtered points."""
+    """DeleteRange -> invalidate_buckets_multi -> hybrid windows answers
+    match the raw path over the delete-filtered points."""
     from btrdb_spark.engine import BTrDBEngine
     from btrdb_spark.operators.windows import windows
 

@@ -187,6 +187,27 @@ def test_parquet_signature_ignores_staging_and_hidden(tmp_path):
     assert sig == ((os.path.join("bucket=1", "part-2.parquet"), 16),)
 
 
+def test_engine_opens_over_a_staging_only_gc_pending(spark, tmp_path):
+    """A published gc_pending generation that holds only ``_temporary/``
+    staging (a deferred obliterate's journal append still running) reads
+    as empty, under the same visibility rule as parquet_signature: the
+    engine opens with nothing pending instead of failing to infer a
+    schema from zero footers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "db"
+    gen = base / "gc_pending.g0"
+    staged = gen / "_temporary" / "0" / "task_0"
+    staged.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"uuid": ["u-1"], "requested": [1]}), str(staged / "part-0.parquet")
+    )
+    store.publish(str(base), "gc_pending", str(gen))
+    assert BTrDBEngine(spark, str(base))._pending_gc == set()
+    assert not store.has_parquet(str(gen))
+
+
 def test_bump_and_read_stamp(tmp_path):
     base = str(tmp_path)
     assert store.read_stamp(base, "t") is None

@@ -95,24 +95,58 @@ def test_flush_clear_hot_crash_keeps_buffer(engine, monkeypatch):
     monkeypatch.undo()
 
 
-def test_legacy_flat_layout_still_mutable(spark, tmp_path):
-    """Tables written before the pointer layout (bare `streams/` dir, no
-    partitioning) must stay readable AND mutable: the rewrite path falls
-    back to a whole-table (dimension-sized) rewrite into a new
-    generation."""
-    from btrdb_spark.schemas import STREAMS_SCHEMA
+def test_layout_migration_crash_is_finished_on_reopen(spark, tmp_path, monkeypatch):
+    """compact_points(n_uuid_buckets=...) publishes points, then streams,
+    then hot. A crash after any publish leaves the target in LAYOUT.json,
+    and the next engine opened on the store re-runs the migration to
+    completion: here the first run dies after the points publish, the
+    re-run at reopen dies after the hot publish, and the third open
+    finishes. Both read paths then return the rows from before."""
+    import json
 
-    base = str(tmp_path / "old")
-    os.makedirs(base)
-    spark.createDataFrame(
-        [("u-1", "c/legacy", {"unit": "kw"}, {}, 1, None)], STREAMS_SCHEMA
-    ).write.parquet(f"{base}/streams")
-    eng = BTrDBEngine(spark, base)
-    assert eng.streams.count() == 1
-    eng.set_annotations("u-1", 1, {"owner": "ops"})
-    row = eng.streams.first()
-    assert row["annotations"] == {"owner": "ops"} and row["annotation_version"] == 2
-    assert store.resolve(base, "streams").endswith(".g0")  # migrated
+    base = str(tmp_path / "db")
+    layout = os.path.join(base, "LAYOUT.json")
+    eng = BTrDBEngine(spark, base, flush_threshold=10_000)
+    us = [eng.create_stream(f"c/mig{i}") for i in range(6)]
+    for i, u in enumerate(us):
+        eng.insert(u, [(j * 1000 + i, float(j)) for j in range(10)], sync=True)
+    eng.insert(us[0], [(5, 0.5), (7, 0.7)])  # buffered: hot migrates too
+
+    def reads(e):
+        return {
+            u: (
+                list(e.raw_values_rows(u, 0, 10**9)),
+                [r.asDict() for r in e.raw_values(u, 0, 10**9).select("time", "value").collect()],
+            )
+            for u in us
+        }
+
+    before = reads(eng)
+    assert all(len(arrow) >= 10 and arrow == spark_ for arrow, spark_ in before.values())
+    real = store.PosixStore.publish
+
+    def crash_after(table):
+        def publish(self, base_, name, gen_path, expected=None):
+            real(self, base_, name, gen_path, expected)
+            if name == table:
+                raise Boom()
+
+        monkeypatch.setattr(store.PosixStore, "publish", publish)
+
+    crash_after("points")
+    with pytest.raises(Boom):
+        eng.compact_points(n_uuid_buckets=7)
+    with open(layout) as f:
+        assert json.load(f)["migrating_to"]["n_uuid_buckets"] == 7
+    crash_after("hot")
+    with pytest.raises(Boom):
+        BTrDBEngine(spark, base, flush_threshold=10_000)
+    monkeypatch.undo()
+    reopened = BTrDBEngine(spark, base, flush_threshold=10_000)
+    assert reopened.n_uuid_buckets == 7
+    with open(layout) as f:
+        assert "migrating_to" not in json.load(f)
+    assert reads(reopened) == before
 
 
 def test_vacuum_reaps_old_generations(engine):
