@@ -221,16 +221,27 @@ class Stream:
         depth: int | None = None,
         version: int | None = None,
     ) -> list[StatPoint]:
+        """Windows (A2): one StatPoint per width-ns window anchored at
+        start, empty windows included (count 0, null stats). Read through
+        BTrDBEngine.windows_rows: a latest read of a stream without
+        tombstones or buffered rows, whose width routes to a ladder level,
+        is answered on the driver by the Arrow tier with no Spark job;
+        other reads (pinned, ``depth``, deleted or buffered streams) run
+        the windows plan."""
         return [
             StatPoint(r["window_start"], r["vmin"], r["vmean"], r["vmax"], r["cnt"])
-            for r in self.engine.windows(
+            for r in self.engine.windows_rows(
                 self._uuid, start, end, width, version=version, depth=depth
-            ).collect()
+            )
         ]
 
     def nearest(
         self, time: int, version: int | None = None, backward: bool = False
     ) -> RawPoint | None:
+        """Nearest (J3): the point just before ``time`` (backward) or at or
+        after it (forward), or None. Answered on the driver by the Arrow
+        tier (BTrDBEngine.nearest), pinned or at latest with the hot
+        buffer: no Spark job, one time bucket read in the common case."""
         got = self.engine.nearest(self._uuid, time, backward, version=version)
         return RawPoint(*got) if got is not None else None
 

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import metadata as md
-from . import store
+from . import store, tier
 from .operators import raw as raw_ops
 from .operators import windows as win_ops
 from .operators import changes as chg_ops
@@ -161,6 +161,18 @@ class NoSuchStream(KeyError):
     """The uuid names no live stream (never created, or obliterated)."""
 
 
+def _drain(df: DataFrame, cols: list[str]) -> Iterator[dict]:
+    """Row dicts of ``df``'s ``cols``, fetched partition-at-a-time through
+    toLocalIterator as the iterator is consumed."""
+    df = df.select(*cols)
+
+    def rows():
+        for row in df.toLocalIterator():
+            yield row.asDict()
+
+    return rows()
+
+
 def _locked(fn):
     """Serialize a mutating engine method on the per-engine write lock
     (see __init__) — required once a MaintenanceLoop runs off-thread."""
@@ -205,8 +217,9 @@ class BTrDBEngine:
         self._write_lock = threading.RLock()
         # query-path DataFrame memo: see _scan_memo
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
-        # stream_version memo: (table signatures, {uuid: (major, minor)})
+        # stream_version memos: (signatures, {uuid: major}), (hot's, {uuid: minor})
         self._version_memo: tuple[tuple | None, dict] = (None, {})
+        self._minor_memo: tuple[tuple | None, dict] = (None, {})
         # stream_row memo: (streams signature, {uuid: catalog Row})
         self._row_memo: tuple[tuple | None, dict] = (None, {})
         # pyarrow datasets of the raw tier: see store.memo_dataset
@@ -396,28 +409,9 @@ class BTrDBEngine:
         md.validate_kv(tags, md.MAX_TAGS, "tag")
         md.validate_kv(annotations, md.MAX_ANNOTATIONS, "annotation")
         uuid = uuid or str(uuidlib.uuid4())
-        existing = self.streams
-        clash = existing.filter(F.col("uuid") == uuid).count()
-        if clash:
-            raise ValueError(f"uuid already used (possibly tombstoned): {uuid}")
-        # MapType columns don't support equality — compare a canonical
-        # sorted "k=v,..." rendering (the reference canonicalizes tagsets
-        # the same way for its uniqueness index, metaprovider.go:288-307).
-        canon = F.array_join(
-            F.transform(
-                F.array_sort(F.map_entries(F.col("tags"))),
-                lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-            ),
-            ",",
-        )
-        tagset_clash = (
-            md.live(existing)
-            .filter(F.col("collection") == collection)
-            .filter(canon == F.lit(",".join(f"{k}={v}" for k, v in sorted(tags.items()))))
-            .count()
-        )
-        if tagset_clash:
-            raise ValueError(f"duplicate (collection, tagset): {collection} {tags}")
+        clash = self._clash(uuid, collection, tags)
+        if clash is not None:
+            raise ValueError(clash)
         row = self.spark.createDataFrame(
             [(uuid, collection, tags, annotations, 1, None)], STREAMS_SCHEMA
         )
@@ -429,6 +423,37 @@ class BTrDBEngine:
         )
         store.bump_stamp(self.base, "streams")
         return uuid
+
+    def _clash(self, uuid: str, collection: str, tags: Mapping[str, str | None]) -> str | None:
+        """Why a new stream would clash with the catalog, or None: ``uuid``
+        names a stream (tombstoned ones too), or a live stream of
+        ``collection`` has the same tagset. One Arrow read of the catalog
+        rows that match either key, no Spark job.
+
+        Tagsets compare as a canonical "k=v,..." rendering sorted by key,
+        the reference's uniqueness index (metaprovider.go:288-307); the
+        catalog side drops an entry whose value is null, as Spark's
+        ``array_join`` of ``concat(key, "=", value)`` does. Python's
+        code-point order of the keys is Spark's UTF-8 byte order."""
+        import pyarrow.dataset as ds
+
+        cat = self._dataset("streams")
+        if cat is None:
+            return None
+        rows = cat.to_table(
+            columns=["uuid", "collection", "tags", "tombstoned"],
+            filter=(ds.field("uuid") == uuid) | (ds.field("collection") == collection),
+        ).to_pylist()
+        if any(r["uuid"] == uuid for r in rows):
+            return f"uuid already used (possibly tombstoned): {uuid}"
+        want = ",".join(f"{k}={v}" for k, v in sorted(tags.items()))
+        if any(
+            r["tombstoned"] is None and r["collection"] == collection and r["tags"] is not None
+            and ",".join(f"{k}={v}" for k, v in sorted(r["tags"]) if v is not None) == want
+            for r in rows
+        ):
+            return f"duplicate (collection, tagset): {collection} {dict(tags)}"
+        return None
 
     @_locked
     def set_annotations(
@@ -518,29 +543,33 @@ class BTrDBEngine:
         """(major, minor): major from committed data/deletes, minor = hot rows
         (pqm.go:337-355).
 
-        Memoized on the signatures of the four tables the answer reads
-        (streams, points, deletes, hot — store.table_signature, the key
-        the scan memo trusts). Every write either appends and bumps the
-        table's stamp or publishes a new generation path, in this engine
-        or in another one on the same base dir, so any write that can
-        move a version changes the key, and a hit is the answer a fresh
-        read would give. The key is read BEFORE the tables, so a write
-        racing the miss can only make the memoized answer newer than its
-        key, never older. One (signature, {uuid: version}) pair is kept
-        and a changed signature drops it: memory is bounded by the
-        streams read since the last write, and a hit runs no Spark job."""
-        sig = tuple(
+        Memoized in two halves on store.table_signature (the scan memo's
+        key): the major (and liveness) on streams, points and deletes, the
+        minor on hot. Any write, by this engine or another on the base dir,
+        changes a key, which drops that half; keys are read BEFORE the
+        tables, so a racing write can only make an answer newer than its
+        key. A hit runs no Spark job; a major miss is one union+groupBy
+        (_stream_versions_multi) refilling both halves; a minor-only miss,
+        what an Insert leaves, counts the stream's hot rows with Arrow."""
+        sigs = [
             store.table_signature(self.store, self.base, n)
             for n in ("streams", "points", "deletes", "hot")
-        )
-        memo_sig, memo = self._version_memo
-        if memo_sig != sig:
-            memo = {}
-            self._version_memo = (sig, memo)
-        hit = memo.get(uuid)
-        if hit is None:
-            hit = memo[uuid] = self._stream_versions_multi([uuid])[uuid]
-        return hit
+        ]
+        (cold_sig, majors), (hot_sig, minors) = self._version_memo, self._minor_memo
+        if cold_sig != tuple(sigs[:3]):
+            majors = {}
+            self._version_memo = (tuple(sigs[:3]), majors)
+        if hot_sig != sigs[3]:
+            minors = {}
+            self._minor_memo = (sigs[3], minors)
+        if uuid not in majors:
+            majors[uuid], minors[uuid] = self._stream_versions_multi([uuid])[uuid]
+        elif uuid not in minors:
+            import pyarrow.dataset as ds
+
+            hot = self._dataset("hot", f"uuid_bucket={self._bucket_of(uuid)}")
+            minors[uuid] = 0 if hot is None else hot.count_rows(filter=ds.field("uuid") == uuid)
+        return majors[uuid], minors[uuid]
 
     def stream_row(self, uuid: str):
         """The stream's catalog Row (STREAMS_SCHEMA; a tombstoned stream's
@@ -1229,71 +1258,10 @@ class BTrDBEngine:
         client). The Arrow tier's table is read here, in this call; the
         driver holds the whole result, as a table and as two Python lists
         of its columns."""
-        tbl = self._raw_arrow(uuid, start, end, version)
+        tbl = tier.raw(self, uuid, start, end, version)
         return (
             {"time": t, "value": v}
             for t, v in zip(tbl["time"].to_pylist(), tbl["value"].to_pylist())
-        )
-
-    def _raw_arrow(self, uuid: str, start: int, end: int, version: int | None):
-        """The Arrow tier's answer to a single-stream raw read: a pyarrow
-        Table ``(time, value)`` sorted by (time, value), read on the
-        driver with pyarrow.dataset and no Spark job.
-
-        The answer is raw_values' over _queryable. Cold points come from
-        the stream's uuid_bucket directory and the time_bucket range the
-        bounds allow, filtered on uuid, ``start <= time < end`` and, when
-        pinned, ``version <= v`` (footer statistics skip row groups). A
-        latest read adds the stream's hot rows in range. The stream's
-        tombstones (``version <= v`` when pinned) drop every cold point
-        with ``d_start <= time < d_end`` and ``version <= d_version``
-        (raw_ops.apply_deletes); hot rows are never deleted. A pending-GC
-        uuid has no rows. Duplicates are kept.
-
-        The result has no row bound. The Spark plan of a single-stream
-        read is one partition, which the driver fetches whole as well, and
-        it is slower at every size: on a 4-vCPU VM (local[4]) a warm
-        262 145-row read took 0.40 s here and 2.4 s on Spark, a
-        1 000 000-row read 1.7 s and 9.5 s (medians of 5, rows consumed as
-        dicts)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        empty = pa.table({"time": pa.array([], pa.int64()), "value": pa.array([], pa.float64())})
-        # times are int64: clamp the half-open bounds to a closed int64 range
-        lo, hi = max(start, -(1 << 63)), min(end - 1, (1 << 63) - 1)
-        if uuid in self._pending_gc or lo > hi:
-            return empty
-        sub = f"uuid_bucket={self._bucket_of(uuid)}"
-        span = (ds.field("uuid") == uuid) & (ds.field("time") >= lo) & (ds.field("time") <= hi)
-        pw = self.time_partition_pw
-        cold_f = span & (ds.field("time_bucket") >= (lo >> pw)) & (ds.field("time_bucket") <= (hi >> pw))
-        if version is not None:
-            cold_f = cold_f & (ds.field("version") <= version)
-        cold = self._dataset(
-            "points", sub, ds.partitioning(pa.schema([("time_bucket", pa.int64())]), flavor="hive")
-        )
-        hot = self._dataset("hot", sub) if version is None else None
-        tables = [empty]
-        if cold is not None:
-            pts = cold.to_table(columns=["time", "value", "version"], filter=cold_f)
-            dels = self._dataset("deletes")
-            if dels is not None and pts.num_rows:
-                d_f = ds.field("uuid") == uuid
-                if version is not None:
-                    d_f = d_f & (ds.field("version") <= version)
-                d = dels.to_table(columns=["start", "end", "version"], filter=d_f)
-                t, v = pts["time"].to_numpy(), pts["version"].to_numpy()
-                keep = np.ones(len(t), dtype=bool)
-                for d_s, d_e, d_v in zip(*(d[c].to_pylist() for c in ("start", "end", "version"))):
-                    keep &= ~((t >= d_s) & (t < d_e) & (v <= d_v))
-                pts = pts.filter(pa.array(keep))
-            tables.append(pts.select(["time", "value"]))
-        if hot is not None:
-            tables.append(hot.to_table(columns=["time", "value"], filter=span))
-        return pa.concat_tables([t.cast(empty.schema) for t in tables]).sort_by(
-            [("time", "ascending"), ("value", "ascending")]
         )
 
     def _dataset(self, name: str, subdir: str | None = None, partitioning=None):
@@ -1302,17 +1270,15 @@ class BTrDBEngine:
         return store.memo_dataset(self.store, self._ds_memo, self.base, name, subdir, partitioning)
 
     def _delete_versions(self, uuid: str) -> list[int]:
-        """Distinct tombstone versions of one stream (tiny table scan;
-        no job when no delete was ever committed)."""
-        if self._scan_memo("deletes") is None:
+        """Distinct tombstone versions of one stream, read with Arrow from
+        the deletes table (no Spark job)."""
+        import pyarrow.dataset as ds
+
+        dels = self._dataset("deletes")
+        if dels is None:
             return []
-        return sorted(
-            r["version"]
-            for r in self.deletes.filter(F.col("uuid") == uuid)
-            .select("version")
-            .distinct()
-            .collect()
-        )
+        got = dels.to_table(columns=["version"], filter=ds.field("uuid") == uuid)
+        return sorted(set(got["version"].to_pylist()))
 
     def _ladder_gate(self, uuid: str, lvl: int | None) -> tuple[bool, bool]:
         """(routable, include_rebase) for ladder-serving one stream at
@@ -1381,17 +1347,16 @@ class BTrDBEngine:
     ):
         """The Arrow tier's answer to a routed A1 read: a pyarrow Table
         ``(bucket_start, cnt, vmin, vmean, vmax)`` computed on the driver
-        from committed ladder partials without a Spark job, or None when
-        the read must run on Spark.
+        from ladder partials, plus the hot rows as unit partials for a
+        buffered stream at latest, without a Spark job; or None when the
+        read must run on Spark.
 
-        The tier takes a read only when the route found a ladder level,
-        no tombstones (no rebase resolution) and no hot-buffer merge (a
-        pinned read, or no buffered rows: the merge's raw
-        double-to-decimal casts stay in Spark). The ladder then declines
-        a slice over its row bound (RollupLadder.aligned_windows_arrow)."""
-        if route is None or route[1] or route[2]:
+        The tier takes a read only when the route found a ladder level and
+        no tombstones (no rebase resolution); tier.aligned_windows then
+        declines a slice over its row bound."""
+        if route is None or route[1]:
             return None
-        return self.ladder.aligned_windows_arrow(uuid, start, end, pw, version=version)
+        return tier.aligned_windows(self, uuid, start, end, pw, version, hot=route[2])
 
     def _aligned_windows_plan(
         self, route, uuid: str, start: int, end: int, pw: int, version: int | None
@@ -1439,15 +1404,30 @@ class BTrDBEngine:
         tbl = self._arrow_tier(route, uuid, start, end, pw, version)
         if tbl is not None:
             return (row for batch in tbl.to_batches() for row in batch.to_pylist())
-        df = self._aligned_windows_plan(route, uuid, start, end, pw, version).select(
-            "bucket_start", "cnt", "vmin", "vmean", "vmax"
+        return _drain(
+            self._aligned_windows_plan(route, uuid, start, end, pw, version),
+            ["bucket_start", "cnt", "vmin", "vmean", "vmax"],
         )
 
-        def drain():
-            for row in df.toLocalIterator():
-                yield row.asDict()
+    def _windows_route(self, uuid: str, width: int, version: int | None) -> bool | None:
+        """The routing decision for a single-stream A2 read: None when the
+        raw plan answers it, else ``include_rebase`` for the ladder's
+        hybrid plan. Only a latest read of a stream with no buffered rows
+        routes (the ladder holds committed data only); a deleted stream
+        routes when its tombstones have rebase snapshots (_ladder_gate)."""
+        if (
+            self.ladder is None
+            or version is not None
+            or uuid in self._pending_gc
+            or self._buffered(uuid)
+        ):
+            return None
+        from .plans.rollup import route_level_width
 
-        return drain()
+        routable, include_rebase = self._ladder_gate(
+            uuid, route_level_width(width, self.ladder.levels)
+        )
+        return include_rebase if routable else None
 
     def windows(
         self,
@@ -1459,38 +1439,55 @@ class BTrDBEngine:
         depth: int | None = None,
     ) -> DataFrame:
         pts, dels = self._queryable(version, uuid, start, end)
-        if (
-            self.ladder is not None
-            and version is None
-            and uuid not in self._pending_gc
-            and not self._buffered(uuid)
-        ):
-            from .plans.rollup import route_level_width
-
-            # deleted streams route too (the r5 guard was vestigial —
-            # ladder.windows resolves rebase snapshots): interior from the
-            # rebase-resolved ladder, edges from the delete-filtered raw
-            # scan; `depth` opts into the reference's approximate
-            # whole-bucket attribution
-            lvl = route_level_width(width, self.ladder.levels)
-            routable, include_rebase = self._ladder_gate(uuid, lvl)
-            if routable:
-                live = raw_ops.apply_deletes(pts, dels) if include_rebase else pts
-                routed = self.ladder.windows(
-                    live, uuid, start, end, width, depth=depth,
-                    include_rebase=include_rebase,
-                )
-                if routed is not None:
-                    return routed
+        include_rebase = self._windows_route(uuid, width, version)
+        if include_rebase is not None:
+            # interior from the rebase-resolved ladder, edges from the
+            # delete-filtered raw scan; `depth` opts into the reference's
+            # approximate whole-bucket attribution
+            live = raw_ops.apply_deletes(pts, dels) if include_rebase else pts
+            routed = self.ladder.windows(
+                live, uuid, start, end, width, depth=depth, include_rebase=include_rebase,
+            )
+            if routed is not None:
+                return routed
         return win_ops.windows(pts, uuid, start, end, width, version=version, deletes=dels)
 
-    def nearest(self, uuid: str, t: int, backward: bool, version: int | None = None):
-        # one-sided prune: backward needs time < t, forward time >= t
-        pts, dels = self._queryable(
-            version, uuid, start=None if backward else t, end=t if backward else None
+    def windows_rows(
+        self,
+        uuid: str,
+        start: int,
+        end: int,
+        width: int,
+        version: int | None = None,
+        depth: int | None = None,
+    ) -> Iterator[dict]:
+        """A2 delivered to the driver: an iterator of row dicts
+        ``(window_start, cnt, vmin, vmean, vmax)`` in window order, for
+        callers that consume the answer in this process (the service, the
+        client). A read that windows() routes to the ladder's exact hybrid
+        plan, of a stream without tombstones, is answered by the Arrow
+        tier (tier.windows: read here, the driver holds the finished
+        result, one row per window); every other read builds the windows
+        plan here and drains it partition-at-a-time through
+        toLocalIterator as the iterator is consumed. Raises ValueError for
+        a width <= 0 or an empty window range, as windows() does."""
+        tbl = None
+        if depth is None and self._windows_route(uuid, width, version) is False:
+            tbl = tier.windows(self, uuid, start, end, width)
+        if tbl is not None:
+            return (row for batch in tbl.to_batches() for row in batch.to_pylist())
+        return _drain(
+            self.windows(uuid, start, end, width, version=version, depth=depth),
+            ["window_start", "cnt", "vmin", "vmean", "vmax"],
         )
-        row = raw_ops.nearest(pts, t, backward, version=version, deletes=dels).collect()[0]
-        return None if row["time"] is None else (row["time"], row["value"])
+
+    def nearest(self, uuid: str, t: int, backward: bool, version: int | None = None):
+        """J3 for one stream: ``(time, value)`` of the nearest point before
+        t (backward, time < t) or at-or-after t (forward), or None. Read on
+        the driver by the Arrow tier (tier.nearest), pinned or at latest
+        (with the hot rows), tombstones and pending GC applied: no Spark
+        job, and the same pick and tie rule as operators.raw.nearest_all."""
+        return tier.nearest(self, uuid, t, backward, version)
 
     def aligned_windows_collection(
         self,

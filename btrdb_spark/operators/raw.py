@@ -17,10 +17,10 @@ process that drains it, hold that stream's whole range result. The engine's
 service and client path (BTrDBEngine.raw_values_rows) answers a
 single-stream read on the driver with pyarrow instead, with the same
 filter, delete rule and order, and no Spark job; the driver holds the
-whole result either way. A multi-stream result keeps the range-partitioned orderBy. The set-oriented
-nearest over *all* streams is one shuffle (groupBy uuid); single-stream
-nearest is one global aggregate: partial picks in parallel, then one
-single-row-per-partition exchange, with no groupBy and no sort.
+whole result either way. A multi-stream result keeps the range-partitioned
+orderBy. The set-oriented nearest over *all* streams is one shuffle
+(groupBy uuid); the engine answers a single-stream nearest on the driver
+(btrdb_spark/tier.py nearest) with the same pick and tie rule.
 """
 
 from __future__ import annotations
@@ -118,24 +118,6 @@ def nearest_all(
     df, pick, val = _nearest_pick(df, t, backward)
     out = df.groupBy("uuid").agg(pick)
     return out.select("uuid", F.col("p.time").alias("time"), val.alias("value")).orderBy("uuid")
-
-
-def nearest(
-    points: DataFrame,
-    t: int,
-    backward: bool,
-    version: int | None = None,
-    deletes: DataFrame | None = None,
-) -> DataFrame:
-    """J3 for one stream (``points`` holds only that stream): the same
-    pick as nearest_all, as one global aggregate. Each input partition
-    computes a partial pick in parallel and the exchange carries one row
-    per partition; there is no groupBy and no sort. Returns one row
-    ``(time, value)``, both null when no point lies on the query's side
-    of t."""
-    df = apply_deletes(at_version(points, version), deletes, version)
-    df, pick, val = _nearest_pick(df, t, backward)
-    return df.agg(pick).select(F.col("p.time").alias("time"), val.alias("value"))
 
 
 def snapshot(points: DataFrame, at: int, lookback: int | None = None) -> DataFrame:

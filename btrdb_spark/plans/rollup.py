@@ -27,8 +27,8 @@ Design:
   one re-bucketing groupBy. Levels divide evenly (step 6), so bucket
   edges always align. pw finer than the finest level -> raw points.
 - **Driver-side read**: a single-stream, delete-free slice of at most
-  ARROW_MAX_ROWS level rows is answered with pyarrow on the driver
-  (RollupLadder.aligned_windows_arrow), without a Spark job.
+  tier.ARROW_MAX_ROWS rows is answered with pyarrow on the driver
+  (btrdb_spark/tier.py), without a Spark job.
 
 Scale: each coarser level is 64x smaller; the whole ladder costs ~1.6%
 extra storage (sum of 64^-k). A year of 1 ns data at pw=20 is ~31M
@@ -56,13 +56,6 @@ DEC = "decimal(38,6)"
 # bucket_start (points are bounded by schemas.MIN_TIME); if a widest-range
 # query ever admits it, apply_rebase's trailing cnt>0 filter drops it.
 REBASE_SENTINEL_BUCKET = -(1 << 62)
-
-# Largest ladder slice, in rows, that RollupLadder.aligned_windows_arrow
-# loads on the driver: the level rows that pass the read's filter (uuid,
-# bucket range, version) must number at most this, or the read stays on
-# Spark. It bounds driver memory (about 60 B a row in Arrow); it is not a
-# knob.
-ARROW_MAX_ROWS = 1 << 18
 
 
 def rollup_points(points: DataFrame, pw: int, versioned: bool = False) -> DataFrame:
@@ -424,8 +417,8 @@ class RollupLadder:
         # path). A changed signature is exactly a changed table — a hit
         # can never serve stale data.
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
-        # pyarrow datasets of the levels, keyed the same way
-        # (store.memo_dataset)
+        # pyarrow datasets of the levels and their rebase sidecars, keyed
+        # the same way (store.memo_dataset; the driver tier reads them)
         self._ds_memo: dict[str, tuple[tuple, dict]] = {}
 
     def _read_memo(self, name: str) -> DataFrame | None:
@@ -484,17 +477,14 @@ class RollupLadder:
         its version). The engine gates ladder routing for deleted streams
         on this covering the stream's tombstone versions: a crash between
         a delete's tombstone append and its rebase append leaves a version
-        uncovered, and such a stream falls back to the exact raw path."""
-        rb = self.rebase_level(pw)
+        uncovered, and such a stream falls back to the exact raw path.
+        Read with Arrow (no Spark job)."""
+        import pyarrow.dataset as ds
+
+        rb = store_mod.memo_dataset(self.store, self._ds_memo, self.base, self._rb_name(pw))
         if rb is None:
             return set()
-        return {
-            r["version"]
-            for r in rb.filter(F.col("uuid") == F.lit(uuid))
-            .select("version")
-            .distinct()
-            .collect()
-        }
+        return set(rb.to_table(columns=["version"], filter=ds.field("uuid") == uuid)["version"].to_pylist())
 
     # ---- streaming exactly-once bookkeeping (pqm.go:152-188 analog) ----
 
@@ -637,80 +627,6 @@ class RollupLadder:
             uuid, start, end, pw, version=version, include_rebase=include_rebase
         )
         return None if partials is None else finalize_stats(partials)
-
-    def _arrow_level(self, pw: int):
-        """pyarrow dataset over level pw's live generation
-        (store.memo_dataset); None = never written."""
-        return store_mod.memo_dataset(self.store, self._ds_memo, self.base, self._name(pw))
-
-    def aligned_windows_arrow(
-        self, uuid: str, start: int, end: int, pw: int, version: int | None = None
-    ):
-        """A1 for one stream from the main (additive) level, computed on
-        the driver with Arrow: no Spark job. The caller must know the
-        stream has no tombstones, so the rebase sidecar is not read (the
-        ``include_rebase=False`` case of aligned_windows, whose answer
-        this equals exactly).
-
-        Same filter as partials_from_rollup (uuid, snapped bucket range,
-        and ``version <= v`` when pinned), same pw re-bucketing, exact
-        decimal128 sums, and ``vmean = float(vsum) / cnt``: Python's
-        Decimal-to-float is correctly rounded like Spark's cast, which
-        Arrow's decimal cast is not. Returns a Table
-        ``(bucket_start, cnt, vmin, vmean, vmax)`` sorted by bucket, or
-        None when the read must stay on Spark: pw finer than the ladder
-        or past the int64 grid, a level never written, or a slice of more
-        than ARROW_MAX_ROWS level rows (counted as the filtered scan
-        streams in, which stops at the first batch past the bound)."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        lvl = route_level(pw, self.levels)
-        if lvl is None or pw > 62:
-            return None
-        width = 1 << pw
-        snap_s = start - (start % width + width) % width
-        snap_e = end - (end % width + width) % width
-        cond = (
-            (ds.field("uuid") == uuid)
-            & (ds.field("bucket_start") >= snap_s)
-            & (ds.field("bucket_start") < snap_e)
-        )
-        if version is not None:
-            cond = cond & (ds.field("version") <= version)
-        level = self._arrow_level(lvl)
-        if level is None:
-            return None
-        # footer statistics skip row groups; the bound counts the rows
-        # the filter keeps, i.e. what the driver holds for this slice
-        scan = level.scanner(
-            columns=["bucket_start", "cnt", "vmin", "vmax", "vsum"], filter=cond
-        )
-        batches, rows = [], 0
-        for batch in scan.to_batches():
-            rows += batch.num_rows
-            if rows > ARROW_MAX_ROWS:
-                return None
-            batches.append(batch)
-        tbl = pa.Table.from_batches(batches, scan.projected_schema)
-        b = tbl["bucket_start"].to_numpy()
-        g = (
-            tbl.set_column(0, "bucket_start", pa.array((b >> pw) << pw, pa.int64()))
-            .group_by("bucket_start")
-            .aggregate([("cnt", "sum"), ("vmin", "min"), ("vmax", "max"), ("vsum", "sum")])
-            .sort_by("bucket_start")
-        )
-        vmean = [
-            float(s) / c
-            for s, c in zip(g["vsum_sum"].to_pylist(), g["cnt_sum"].to_pylist())
-        ]
-        return pa.table({
-            "bucket_start": g["bucket_start"],
-            "cnt": g["cnt_sum"],
-            "vmin": g["vmin_min"],
-            "vmean": pa.array(vmean, pa.float64()),
-            "vmax": g["vmax_max"],
-        })
 
     def windows(
         self,

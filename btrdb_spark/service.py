@@ -30,14 +30,25 @@ partition (operators/raw.py sorts it without a range shuffle), which this
 process would fetch whole as well, and more slowly. The response goes
 out in bounded batches.
 
-AlignedWindows takes its rows from BTrDBEngine.aligned_windows_rows. A
-committed stream without tombstones is answered there on the driver,
-without a Spark job, when the engine's Arrow tier serves it: this process
-loads at most plans/rollup.py ARROW_MAX_ROWS ladder rows of the stream's
-slice with pyarrow and holds the finished result, one row per bucket, as
-an Arrow table while the batches go out. Every other stat read drains
-its DataFrame through ``toLocalIterator()`` as above. StreamInfo reads
-the engine's memoized catalog row and version: no Spark job when warm.
+AlignedWindows and Windows take their rows from
+BTrDBEngine.aligned_windows_rows and windows_rows, and Nearest its point
+from BTrDBEngine.nearest. The engine's Arrow tier (btrdb_spark/tier.py)
+answers these on the driver, without a Spark job:
+
+- AlignedWindows of a stream without tombstones, pinned or at latest
+  (the hot rows of a buffered stream fold in as unit partials);
+- Windows at latest of a committed stream without tombstones whose width
+  routes to a ladder level (ladder interior plus raw edge points);
+- every Nearest: the time_bucket directories that hold files are read
+  outward from the query time, stopping at the first with a live point.
+
+For the two stat reads this process loads at most tier.ARROW_MAX_ROWS
+rows of the stream's slice (level rows plus raw rows, and at most that
+many windows) and holds the finished result, one row per bucket or
+window, as an Arrow table while the batches go out; Nearest holds one
+time bucket of the stream. Every other stat read drains its DataFrame
+through ``toLocalIterator()`` as above. StreamInfo reads the engine's
+memoized catalog row and version: no Spark job when warm.
 
 Concurrency: ThreadingHTTPServer gives one thread per request; reads are
 lock-free (generation-pointer MVCC), mutations serialize on the engine's
@@ -228,16 +239,16 @@ class BTrDBService:
 
     def rpc_Windows(self, req: dict):
         version = req.get("versionMajor")
-        df = self.engine.windows(
-            req["uuid"], int(req["start"]), int(req["end"]), int(req["width"]),
-            version=version, depth=req.get("depth"),
-        )
+        args = (req["uuid"], int(req["start"]), int(req["end"]), int(req["width"]))
+        # the label is read before the data (the Arrow tier reads it
+        # right away), so a racing commit can only make the data newer
+        # than its versionMajor, never older
         major = version if version is not None else self._latest_major(req["uuid"])
-        out = df.withColumnRenamed("window_start", "time").withColumnRenamed(
-            "cnt", "count"
-        )
-        return {"versionMajor": major}, _batches(
-            out, ["time", "count", "vmin", "vmean", "vmax"]
+        rows = self.engine.windows_rows(*args, version=version, depth=req.get("depth"))
+        return {"versionMajor": major}, _chunked(
+            {"time": r["window_start"], "count": r["cnt"], "vmin": r["vmin"],
+             "vmean": r["vmean"], "vmax": r["vmax"]}
+            for r in rows
         )
 
     def rpc_Nearest(self, req: dict):

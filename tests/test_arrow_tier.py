@@ -1,12 +1,13 @@
 """The driver-side Arrow tier for AlignedWindows against the Spark ladder
 path it replaces.
 
-The tier (BTrDBEngine._arrow_tier over RollupLadder.aligned_windows_arrow)
-answers a single-stream AlignedWindows from committed ladder partials with
-pyarrow, without a Spark job. Its answer must equal
-RollupLadder.aligned_windows exactly (time, count, vmin, vmean, vmax) at
-every ladder level, at latest and at pinned versions, and every read the
-tier does not serve must come back None so that it keeps its Spark plan.
+The tier (BTrDBEngine._arrow_tier over btrdb_spark/tier.py
+aligned_windows) answers a single-stream AlignedWindows from ladder
+partials, plus the hot rows of a buffered stream at latest, with pyarrow,
+without a Spark job. Its answer must equal RollupLadder.aligned_windows
+(or the hot merge) exactly (time, count, vmin, vmean, vmax) at every
+ladder level, at latest and at pinned versions, and every read the tier
+does not serve must come back None so that it keeps its Spark plan.
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from btrdb_spark import tier
 from btrdb_spark.engine import BTrDBEngine
-from btrdb_spark.plans import rollup
 from btrdb_spark.plans.rollup import LEVELS, RollupLadder
 from btrdb_spark.service import BTrDBHttpClient, BTrDBService, RpcError
 
@@ -104,9 +105,10 @@ def test_arrow_tier_equals_spark_ladder(history, lvl):
 
 
 def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
-    """Reads the tier must leave on Spark: pending GC, buffered at latest,
-    pw finer than the ladder, and a slice over the row bound. The pinned
-    read of a buffered stream is the tier's."""
+    """Reads the tier must leave on Spark: pending GC, pw finer than the
+    ladder, and a slice over the row bound. A buffered stream's read is
+    the tier's, pinned and at latest; at latest it equals the Spark hot
+    merge."""
     eng = _engine(spark, tmp_path / "db", levels=(20, 26))
     plain, hot, gone = (eng.create_stream(f"decline/{i}") for i in range(3))
     rows = [(u, i << 22, float(i % 17)) for u in (plain, hot, gone) for i in range(400)]
@@ -115,7 +117,11 @@ def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
     eng.obliterate(gone, defer_gc=True)
 
     assert _tier(eng, plain, LO, HI, 26) is not None
-    assert _tier(eng, hot, LO, HI, 26) is None
+    route = eng._ladder_route(hot, 26, None)
+    assert route[2]  # buffered at latest: the hot merge
+    merged = [tuple(r[c] for c in COLS) for r in eng._aligned_windows_plan(
+        route, hot, LO, HI, 26, None).collect()]
+    assert [tuple(r[c] for c in COLS) for r in _tier(eng, hot, LO, HI, 26).to_pylist()] == merged
     assert _tier(eng, hot, LO, HI, 26, 10) is not None
     assert _tier(eng, gone, LO, HI, 26) is None
     assert _tier(eng, gone, LO, HI, 26, 10) is None
@@ -125,9 +131,9 @@ def test_arrow_tier_declines_spark_only_reads(spark, tmp_path, monkeypatch):
     # counts only the rows the read's filter keeps (plain's 400, or the
     # 10 of a sub-range)
     assert eng.ladder.level(20).count() == 1200
-    monkeypatch.setattr(rollup, "ARROW_MAX_ROWS", 400)
+    monkeypatch.setattr(tier, "ARROW_MAX_ROWS", 400)
     assert _tier(eng, plain, LO, HI, 20) is not None
-    monkeypatch.setattr(rollup, "ARROW_MAX_ROWS", 399)
+    monkeypatch.setattr(tier, "ARROW_MAX_ROWS", 399)
     assert _tier(eng, plain, LO, HI, 20) is None
     assert _tier(eng, plain, 0, 10 << 22, 20) is not None
     monkeypatch.undo()

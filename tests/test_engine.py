@@ -183,3 +183,65 @@ def test_aligned_windows_collection(spark, tmp_path):
     # tag predicate narrows further
     kw_only = eng.aligned_windows_collection("campus", 0, 10**9, pw=25, tags={"unit": "kw"})
     assert {r["uuid"] for r in kw_only.collect()} == {us[1], us[3]}
+
+
+def test_create_clash_check_equals_spark_and_runs_no_job(engine, spark):
+    """create_stream's clash check (one Arrow read of the catalog) gives
+    the answer of the Spark check it replaced, with no Spark job: a uuid
+    clashes with a live or a tombstoned stream, a tagset clashes with a
+    live stream of the collection whatever the insertion order of its
+    tags, a tombstoned stream's tagset can be reused, and non-ASCII
+    collections and values compare as Spark compares them. Tag keys are
+    ASCII by validation; a null-valued tag drops out of the catalog
+    side's canonical form, as Spark's array_join drops it."""
+    from pyspark.sql import functions as F
+
+    from btrdb_spark import metadata as md
+
+    live = engine.create_stream("campus/ü", tags={"b": "ß", "a.b": "1", "a_b": "2"}, uuid="u-live")
+    dead = engine.create_stream("campus/dead", tags={"k": "v"})
+    engine.create_stream("campus/null", tags={"n": None, "k": "v"})
+    engine.obliterate(dead, defer_gc=True)
+
+    def spark_check(uuid, collection, tags):
+        existing = engine.streams
+        if existing.filter(F.col("uuid") == uuid).count():
+            return "uuid"
+        canon = F.array_join(
+            F.transform(
+                F.array_sort(F.map_entries(F.col("tags"))),
+                lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+            ),
+            ",",
+        )
+        clash = (
+            md.live(existing).filter(F.col("collection") == collection)
+            .filter(canon == F.lit(",".join(f"{k}={v}" for k, v in sorted(tags.items()))))
+            .count()
+        )
+        return "tagset" if clash else None
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    cases = [
+        (live, "elsewhere", {}), (dead, "elsewhere", {}),
+        ("n1", "campus/ü", {"a_b": "2", "a.b": "1", "b": "ß"}),
+        ("n1", "campus/ü", {"a.b": "1", "a_b": "2", "b": "ss"}),
+        ("n1", "campus/ü", {"a.b": "1", "a_b": "2"}),
+        ("n1", "campus/u", {"a_b": "2", "a.b": "1", "b": "ß"}),
+        ("n1", "campus/dead", {"k": "v"}),
+        ("n1", "campus/null", {"k": "v"}), ("n1", "campus/null", {"n": None, "k": "v"}),
+    ]
+    got = []
+    for case in cases:
+        j0 = dag.nextJobId()
+        msg = engine._clash(*case)
+        assert dag.nextJobId() == j0, case
+        got.append(None if msg is None else msg.split()[0].strip("(,"))
+    want = [spark_check(*case) for case in cases]
+    assert [{"uuid": "uuid", "duplicate": "tagset"}.get(g) for g in got] == want
+    assert want == ["uuid", "uuid", "tagset", None, None, None, None, "tagset", None]
+    assert engine.create_stream("campus/dead", tags={"k": "v"})  # tombstoned tagset reused
+    with pytest.raises(ValueError):
+        engine.create_stream("campus/ü", tags={"a_b": "2", "b": "ß", "a.b": "1"})
+    with pytest.raises(ValueError):
+        engine.create_stream("campus/ü", tags={"ä": "1"})

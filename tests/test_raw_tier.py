@@ -2,7 +2,7 @@
 replaces.
 
 BTrDBEngine.raw_values_rows answers a single-stream raw read on the driver
-with pyarrow (BTrDBEngine._raw_arrow): cold points pruned to the stream's
+with pyarrow (btrdb_spark/tier.py raw): cold points pruned to the stream's
 partition directories, the hot overlay at latest, tombstones and pending
 GC applied, sorted by (time, value). Its rows must equal
 ``raw_values(...).collect()`` in order, at latest and at every committed
@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from btrdb_spark import tier
 from btrdb_spark.engine import BTrDBEngine, uuid_bucket, uuid_bucket_of
 from btrdb_spark.service import BTrDBService
 
@@ -122,7 +123,7 @@ def _assert_same(got, want, read):
 def test_raw_tier_equals_spark(history):
     eng, versions, reads, want = history
     for read, rows in zip(reads, want):
-        assert eng._raw_arrow(*read) is not None, read
+        assert tier.raw(eng, *read) is not None, read
         _assert_same(_tier_rows(eng, *read), rows, read)
     full = {(u, v): rows for (u, s, e, v), rows in zip(reads, want) if (s, e) == (LO, HI)}
     rng = random.Random(len(reads))

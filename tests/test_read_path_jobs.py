@@ -96,17 +96,34 @@ def test_version_memo_sees_every_write(spark, tmp_path, writer):
             assert fresh != before, name
 
 
-def test_rpc_job_counts(spark, tmp_path, monkeypatch):
-    """Through the service: a warm AlignedWindows, RawValues or StreamInfo
-    of a committed stream runs no Spark job (the first two are served by
-    the driver-side Arrow tiers, StreamInfo by the memoized catalog row),
-    and Nearest is two: the parallel partial picks, then the final pick
-    over one row per partition (no groupBy, no sort). On a buffered stream
-    the AlignedWindows tier's eligibility check runs no job and opens no
-    parquet file before handing the read to Spark."""
-    import pyarrow.dataset
-    import pyarrow.parquet
+@pytest.mark.parametrize("writer", ["same_engine", "other_engine"])
+def test_version_after_insert_runs_no_job(spark, tmp_path, writer):
+    """An Insert moves only the hot table's signature: the next
+    stream_version of the written stream, and of another stream, keeps
+    its memoized major and counts the hot rows with Arrow, with no Spark
+    job and the answer a fresh engine gives."""
+    base = str(tmp_path / "db")
+    a = BTrDBEngine(spark, base, flush_threshold=10**9)
+    u, o = a.create_stream("memo/u"), a.create_stream("memo/o")
+    a.insert(u, [(i * 10, float(i)) for i in range(100)], sync=True)
+    a.insert(o, [(i * 10, float(i)) for i in range(50)])
+    w = a if writer == "same_engine" else BTrDBEngine(spark, base, flush_threshold=10**9)
+    for n_rows in (7, 5):
+        a.stream_version(u), a.stream_version(o)  # warm both halves of the memo
+        w.insert(u, [(5000 + 10 * i + n_rows, 1.0) for i in range(n_rows)])
+        fresh = BTrDBEngine(spark, base, flush_threshold=10**9)
+        for s in (u, o):
+            assert _jobs(spark, lambda: a.stream_version(s)) == (0, fresh.stream_version(s))
+    assert a.stream_version(u) == (a.stream_version(u)[0], 12)
+    assert a.stream_version(o)[1] == 50
 
+
+def test_rpc_job_counts(spark, tmp_path):
+    """Through the service: a warm AlignedWindows, RawValues, Windows,
+    Nearest or StreamInfo of a committed stream runs no Spark job (the
+    driver-side Arrow tier serves the first four, the memoized catalog row
+    StreamInfo), and neither does a warm AlignedWindows of a buffered
+    stream at latest: the tier folds its hot rows in."""
     from btrdb_spark.service import BTrDBHttpClient, BTrDBService
 
     eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9, ladder=True)
@@ -133,21 +150,64 @@ def test_rpc_job_counts(spark, tmp_path, monkeypatch):
         assert n == 0 and (meta["collection"], meta["versionMajor"]) == ("jobs/0", 10)
         near = dict(uuid=u, time=1000 << 20, backward=True)
         n, (meta, _rows) = _jobs(spark, lambda: cli.rows("Nearest", **near))
-        assert n == 2 and (meta["time"], meta["value"]) == (999 << 20, float(999 % 13))
+        assert n == 0 and (meta["time"], meta["value"]) == (999 << 20, float(999 % 13))
+        win = dict(uuid=u, start=0, end=3000 << 20, width=100 << 20)
+        cli.rows("Windows", **win)
+        n, (meta, rows) = _jobs(spark, lambda: cli.rows("Windows", **win))
+        assert n == 0 and meta["versionMajor"] == 10
+        assert [r["count"] for r in rows] == [100] * 30
     finally:
         svc.stop()
 
     eng.stream_version(hot)  # warm the version memo
 
-    def no_parquet(*a, **kw):
-        raise AssertionError("the eligibility check opened parquet")
-
-    monkeypatch.setattr(pyarrow.dataset, "dataset", no_parquet)
-    monkeypatch.setattr(pyarrow.parquet, "read_schema", no_parquet)
-    monkeypatch.setattr(pyarrow.parquet, "ParquetFile", no_parquet)
-    def eligible():
+    def served():
         route = eng._ladder_route(hot, 26, None)
         assert route is not None and route[2]  # buffered at latest: the hot merge
         return eng._arrow_tier(route, hot, 0, 1 << 40, 26, None)
 
-    assert _jobs(spark, eligible) == (0, None)
+    n, tbl = _jobs(spark, served)
+    assert n == 0 and sum(tbl["cnt"].to_pylist()) == 3001
+
+
+def test_routing_gate_runs_no_job_on_a_store_with_tombstones(spark, tmp_path):
+    """Once stream A has a delete, warm AlignedWindows and Windows RPCs of
+    the delete-free stream B still run no Spark job, and the routing
+    decision for A runs none either: the tombstone versions and the
+    level's rebase versions are read with Arrow. The decision equals the
+    one the Spark reads of both tables give."""
+    from pyspark.sql import functions as F
+
+    from btrdb_spark.plans.rollup import RollupLadder
+    from btrdb_spark.service import BTrDBHttpClient, BTrDBService
+
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9, ladder=True)
+    eng.ladder = RollupLadder(spark, eng.ladder.base, levels=(26, 32), backend=eng.store)
+    a, b = (eng.create_stream(f"gate/{i}") for i in range(2))
+    rows = [(s, i << 20, float(i % 13)) for s in (a, b) for i in range(3000)]
+    eng.bulk_load(spark.createDataFrame(rows, "uuid string, time long, value double"))
+    v = eng.delete_range(a, 0, 100 << 20)
+    svc = BTrDBService(eng)
+    cli = BTrDBHttpClient("127.0.0.1", svc.start())
+    try:
+        for method, req in (
+            ("AlignedWindows", dict(uuid=b, start=0, end=1 << 40, pointWidth=26)),
+            ("Windows", dict(uuid=b, start=0, end=3000 << 20, width=100 << 20)),
+        ):
+            cli.rows(method, **req)
+            n, (_meta, rows) = _jobs(spark, lambda: cli.rows(method, **req))
+            assert n == 0 and sum(r["count"] for r in rows) == 3000, method
+    finally:
+        svc.stop()
+
+    eng.stream_version(a)  # warm the version memo
+    for lvl in (26, 32):
+        n, route = _jobs(spark, lambda: eng._ladder_route(a, lvl, None))
+        dv = {r["version"] for r in eng.deletes.filter(F.col("uuid") == a).select("version").collect()}
+        rb = {r["version"] for r in eng.ladder.rebase_level(lvl).filter(F.col("uuid") == a)
+              .select("version").collect()}
+        assert dv == {v} and dv <= rb
+        assert (n, route) == (0, (lvl, True, False))
+        assert _jobs(spark, lambda: eng._ladder_route(b, lvl, None)) == (0, (lvl, False, False))
+    counts = {r["bucket_start"]: r["cnt"] for r in eng.aligned_windows(a, 0, 1 << 40, 26).collect()}
+    assert sum(counts.values()) == 2900
