@@ -321,11 +321,6 @@ class BTrDBEngine:
         """Live generation directory for reads (None = never written)."""
         return self.store.resolve(self.base, name)
 
-    def _append_dir(self, name: str) -> str:
-        """Live generation directory for appends (created+published empty
-        on first use)."""
-        return self.store.current_dir(self.base, name, create=True)
-
     def _scan_memo(self, name: str) -> DataFrame | None:
         """Query-path table scan, memoized on the table's signature
         (store.memo_scan; the rollup ladder shares it). None = no
@@ -408,6 +403,11 @@ class BTrDBEngine:
         md.validate_collection(collection)
         md.validate_kv(tags, md.MAX_TAGS, "tag")
         md.validate_kv(annotations, md.MAX_ANNOTATIONS, "annotation")
+        nulls = sorted(k for k, v in tags.items() if v is None)
+        if nulls:
+            # tags are map[string]string (the reference's tagset): a null
+            # value names no tag
+            raise ValueError(f"tag values must be strings: {nulls}")
         uuid = uuid or str(uuidlib.uuid4())
         clash = self._clash(uuid, collection, tags)
         if clash is not None:
@@ -415,25 +415,24 @@ class BTrDBEngine:
         row = self.spark.createDataFrame(
             [(uuid, collection, tags, annotations, 1, None)], STREAMS_SCHEMA
         )
-        (
+        store.append(
+            self.store, self.base, "streams",
             row.withColumn("meta_bucket", self._ubucket(F.col("uuid")))
             .write.mode("append")
             .partitionBy("meta_bucket")
-            .parquet(self._append_dir("streams"))
+            .parquet,
         )
-        store.bump_stamp(self.base, "streams")
         return uuid
 
-    def _clash(self, uuid: str, collection: str, tags: Mapping[str, str | None]) -> str | None:
+    def _clash(self, uuid: str, collection: str, tags: Mapping[str, str]) -> str | None:
         """Why a new stream would clash with the catalog, or None: ``uuid``
         names a stream (tombstoned ones too), or a live stream of
         ``collection`` has the same tagset. One Arrow read of the catalog
         rows that match either key, no Spark job.
 
         Tagsets compare as a canonical "k=v,..." rendering sorted by key,
-        the reference's uniqueness index (metaprovider.go:288-307); the
-        catalog side drops an entry whose value is null, as Spark's
-        ``array_join`` of ``concat(key, "=", value)`` does. Python's
+        the reference's uniqueness index (metaprovider.go:288-307); tag
+        values are never null (create_stream refuses them). Python's
         code-point order of the keys is Spark's UTF-8 byte order."""
         import pyarrow.dataset as ds
 
@@ -449,7 +448,7 @@ class BTrDBEngine:
         want = ",".join(f"{k}={v}" for k, v in sorted(tags.items()))
         if any(
             r["tombstoned"] is None and r["collection"] == collection and r["tags"] is not None
-            and ",".join(f"{k}={v}" for k, v in sorted(r["tags"]) if v is not None) == want
+            and ",".join(f"{k}={v}" for k, v in sorted(r["tags"])) == want
             for r in rows
         ):
             return f"duplicate (collection, tagset): {collection} {dict(tags)}"
@@ -653,13 +652,13 @@ class BTrDBEngine:
             batch = batch.withColumn(
                 "ingest_ts", F.lit(int(timelib.time() * 1000)).cast("long")
             )
-        (
+        store.append(
+            self.store, self.base, "hot",
             batch.withColumn("uuid_bucket", self._ubucket(F.col("uuid")))
             .write.mode("append")
             .partitionBy("uuid_bucket")
-            .parquet(self._append_dir("hot"))
+            .parquet,
         )
-        store.bump_stamp(self.base, "hot")
 
     @_locked
     def _claim_version_slot(self, uuid: str, want: int) -> int:
@@ -720,7 +719,8 @@ class BTrDBEngine:
         new_major = VERSION_FIRST_DATA if major == VERSION_CREATED else major + 1
         new_major = self._claim_version_slot(uuid, new_major)
         mine = self.hot.filter(F.col("uuid") == uuid)
-        (
+        store.append(
+            self.store, self.base, "points",
             mine.select(
                 "uuid", "time", "value", F.lit(new_major).cast("long").alias("version")
             )
@@ -732,9 +732,8 @@ class BTrDBEngine:
             .sortWithinPartitions("uuid_bucket", "time_bucket", "time")
             .write.mode("append")
             .partitionBy("uuid_bucket", "time_bucket")
-            .parquet(self._append_dir("points"))
+            .parquet,
         )
-        store.bump_stamp(self.base, "points")
         if self.ladder is not None:
             # incremental rollup maintenance (A4) — O(batch) partial append,
             # stamped with the commit version (CGeneration analog) so the
@@ -810,7 +809,8 @@ class BTrDBEngine:
             # the shuffle payload — 24 fewer bytes/row ≈ 35% less shuffle
             # traffic on the commit path (measured 1.87s -> 1.2s on the
             # 20M-point probe; shuffle is the single largest commit cost).
-            (
+            store.append(
+                self.store, self.base, "points",
                 points.select("uuid", "time", "value")
                 .repartition(
                     n_bins, self._ubucket(F.col("uuid")), self._tbucket(F.col("time"))
@@ -826,9 +826,8 @@ class BTrDBEngine:
                 .sortWithinPartitions("uuid_bucket", "time_bucket", "uuid", "time")
                 .write.mode("append")
                 .partitionBy("uuid_bucket", "time_bucket")
-                .parquet(self._append_dir("points"))
+                .parquet,
             )
-            store.bump_stamp(self.base, "points")
 
         if self.ladder is None:
             _write_points()
@@ -1113,10 +1112,12 @@ class BTrDBEngine:
             versions[u] = self._claim_version_slot(
                 u, VERSION_FIRST_DATA if major == VERSION_CREATED else major + 1
             )
-        self.spark.createDataFrame(
-            [(u, s, e, versions[u]) for u, s, e in ranges], DELETES_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(self._append_dir("deletes"))
-        store.bump_stamp(self.base, "deletes")
+        store.append(
+            self.store, self.base, "deletes",
+            self.spark.createDataFrame(
+                [(u, s, e, versions[u]) for u, s, e in ranges], DELETES_SCHEMA
+            ).coalesce(1).write.mode("append").parquet,
+        )
         if self.ladder is not None:
             from .operators.raw import apply_deletes
             from .plans.rollup import invalidate_buckets_multi
@@ -1155,11 +1156,12 @@ class BTrDBEngine:
                 raise NoSuchStream(f"no such stream: {uuid}")
             self._rewrite_stream_row(uuid, tombstoned="deleted")
             if defer_gc:
-                self.spark.createDataFrame(
-                    [(uuid, int(timelib.time() * 1e9))],
-                    "uuid string, requested long",
-                ).coalesce(1).write.mode("append").parquet(
-                    self._append_dir("gc_pending")
+                store.append(
+                    self.store, self.base, "gc_pending",
+                    self.spark.createDataFrame(
+                        [(uuid, int(timelib.time() * 1e9))],
+                        "uuid string, requested long",
+                    ).coalesce(1).write.mode("append").parquet,
                 )
                 self._pending_gc.add(uuid)
                 return

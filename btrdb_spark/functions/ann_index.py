@@ -16,7 +16,8 @@ ONE store table named ``state``; each generation directory holds both
 Every mutation — ``set_centroids``, ``update``, ``retrain`` — builds a
 NEW generation (unchanged files carried by hardlink, O(#files) metadata
 ops, zero data copied) and flips the pointer with a store CAS
-(``EXPECT_ABSENT`` for the very first publish). Readers resolve the
+(``EXPECT_ABSENT`` for the very first publish; the lifecycle is
+store.SnapshotIndex, shared with DedupIndex). Readers resolve the
 pointer ONCE per query and read both subdirectories from that single
 generation, so a concurrent probe sees a whole committed batch or none
 of it — never centroids from one commit with postings from another, and
@@ -62,13 +63,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..store import has_parquet
+from .. import store
+from ..store import SnapshotIndex, has_parquet
 from .similarity import _dot, _norm, ivf_cells
 
 
-class AnnIndex:
+class AnnIndex(SnapshotIndex):
     """IVF index over an embedding corpus behind one atomic snapshot
-    pointer.
+    pointer (store.SnapshotIndex).
 
     Each ``state`` generation holds:
 
@@ -77,6 +79,7 @@ class AnnIndex:
       wholesale by ``retrain()``).
     - ``cells/``     : (vec_id long, cell, embedding) — posting table,
       written ``partitionBy("cell")`` so probes prune to their cells.
+    - ``cell_counts.json`` : the tracked cell-mass gauge (below).
 
     vec_ids must be unique across the corpus (ingest contract); crash
     replay of an epoch is guarded like DedupIndex.update.
@@ -87,75 +90,6 @@ class AnnIndex:
     # since the last one (ADVICE r10: residual k-means skew must not
     # become a rewrite-per-batch loop)
     RETRAIN_GROWTH_REFIRE = 1.2
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        backend=None,
-    ):
-        from .. import store as store_mod
-
-        self.spark = spark
-        self.base = base_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.store = backend if backend is not None else store_mod.DEFAULT
-        os.makedirs(base_dir, exist_ok=True)
-
-    # ---- epoch guard (identical contract to DedupIndex) ----
-
-    def committed_epoch(self) -> int | None:
-        path = os.path.join(self.base, "EPOCH")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return int(f.read().strip())
-
-    def _mark_epoch(self, epoch: int) -> None:
-        tmp = os.path.join(self.base, ".EPOCH.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(int(epoch)))
-        os.replace(tmp, os.path.join(self.base, "EPOCH"))
-
-    # ---- snapshot plumbing ----
-
-    def _snapshot(self) -> str | None:
-        """Path of the live index generation (one resolve = one
-        consistent view of centroids + postings)."""
-        return self.store.resolve(self.base, "state")
-
-    def _read(self, snap: str | None, sub: str) -> DataFrame | None:
-        if snap is None:
-            return None
-        path = os.path.join(snap, sub)
-        if not has_parquet(path):
-            return None
-        return self.spark.read.parquet(path)
-
-    def _new_gen_from(self, cur: str | None) -> str:
-        """Fresh generation carrying the live one's files by hardlink."""
-        from .. import store as store_mod
-
-        gen = self.store.new_generation(self.base, "state")
-        if cur is not None:
-            for sub in ("centroids", "cells"):
-                full = os.path.join(cur, sub)
-                if os.path.isdir(full):
-                    store_mod.link_tree(full, os.path.join(gen, sub))
-        return gen
-
-    def _publish(self, gen: str, cur: str | None) -> None:
-        from .. import store as store_mod
-
-        self.store.publish(
-            self.base,
-            "state",
-            gen,
-            expected=cur if cur is not None else store_mod.EXPECT_ABSENT,
-        )
 
     # ---- tracked cell-mass gauge (VERDICT r10 #3) ----
     #
@@ -169,18 +103,29 @@ class AnnIndex:
     # appended rows, so a crash-replayed batch (the epoch-guard residual
     # window) OVERcounts slightly: the gauge is an upper bound that can
     # only fire a retrain early, and the retrain rewrites exact counts.
+    # Every writer of a generation writes the tally (compact links it).
 
     _META = "cell_counts.json"
+    PLAN = {"centroids": "link", "cells": "partitioned", _META: "link"}
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        base_dir: str,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        backend=None,
+    ):
+        super().__init__(spark, base_dir, backend)
+        self.id_col = id_col
+        self.vec_col = vec_col
 
     def _read_meta(self, snap: str | None) -> dict | None:
         if snap is None:
             return None
-        path = os.path.join(snap, self._META)
-        if not os.path.exists(path):
-            return None
         import json
 
-        with open(path) as f:
+        with open(os.path.join(snap, self._META)) as f:
             raw = json.load(f)
         return {
             "counts": {int(k): int(v) for k, v in raw.get("counts", {}).items()},
@@ -203,8 +148,7 @@ class AnnIndex:
 
     def tracked_cell_counts(self) -> dict[int, int] | None:
         """The running per-cell posting tally of the live generation, or
-        None for a pre-tracking index (maintain() then falls back to the
-        exact cell_stats() scan)."""
+        None before the first generation."""
         meta = self._read_meta(self._snapshot())
         return None if meta is None else meta["counts"]
 
@@ -226,12 +170,8 @@ class AnnIndex:
                 "use retrain() to replace the quantizer (postings must "
                 "be re-assigned under the new cells)"
             )
-        gen = self._new_gen_from(cur)
-        import shutil
-
+        gen = self._new_gen_from(cur, carry=())
         cdir = os.path.join(gen, "centroids")
-        if os.path.isdir(cdir):
-            shutil.rmtree(cdir)
         centroids.select(
             F.col(self.id_col).alias("vec_id"),
             F.col(self.vec_col).cast("array<double>").alias("embedding"),
@@ -245,19 +185,19 @@ class AnnIndex:
             raise RuntimeError("AnnIndex: set_centroids() before use")
         return c
 
-    def update(self, new_vecs: DataFrame, epoch: int | None = None) -> None:
+    def update(
+        self, new_vecs: DataFrame, epoch: tuple[int, int] | None = None
+    ) -> None:
         """Append posting rows for ``new_vecs`` — O(batch) compute: one
         broadcast-centroid assignment of the batch, one partitioned
         append into a fresh generation (prior files hardlinked), one
-        atomic pointer flip. Epoch replay guard as in DedupIndex.update;
-        a replayed crash-window batch re-appends rows, and probe()
-        dedups posting rows on vec_id so replay degrades cost, never
-        correctness. A concurrent reader resolves either the old or the
+        atomic pointer flip. (query, epoch) replay guard as in
+        DedupIndex.update; a replayed crash-window batch re-appends
+        rows, and probe() dedups posting rows on vec_id so replay
+        degrades cost, never correctness. A concurrent reader resolves either the old or the
         new generation — whole batch or nothing."""
-        if epoch is not None:
-            done = self.committed_epoch()
-            if done is not None and done >= epoch:
-                return
+        if epoch is not None and store.epoch_done(self.store, self.base, "state", epoch):
+            return
         cur = self._snapshot()
         cents = self._read(cur, "centroids")
         if cents is None:
@@ -281,22 +221,15 @@ class AnnIndex:
         # fold the batch's cell masses into the running gauge — one tiny
         # O(batch) agg (k rows on the driver), replacing the O(corpus)
         # cell_stats() scan the streaming sink used to pay per trigger
-        meta = self._read_meta(cur) if cur is not None else None
-        if meta is not None or cur is None or not has_parquet(
-            os.path.join(cur, "cells")
-        ):
-            counts = dict(meta["counts"]) if meta is not None else {}
-            for r in assign.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect():
-                c = int(r["cell"])
-                counts[c] = counts.get(c, 0) + int(r["n"])
-            self._write_meta(
-                gen, counts, meta["n_at_retrain"] if meta else None
-            )
+        meta = self._read_meta(cur)
+        counts = dict(meta["counts"])
+        for r in assign.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect():
+            c = int(r["cell"])
+            counts[c] = counts.get(c, 0) + int(r["n"])
+        self._write_meta(gen, counts, meta["n_at_retrain"])
         self._publish(gen, cur)
         if epoch is not None:
-            self._mark_epoch(epoch)
+            store.mark_epoch(self.store, self.base, "state", epoch)
 
     def retrain(
         self,
@@ -341,13 +274,7 @@ class AnnIndex:
             emb, k=int(n_centroids), n_iter=n_iter, seed=seed
         )
         cdf = centroids_df(self.spark, cents).localCheckpoint()
-        gen = self._new_gen_from(cur)
-        import shutil
-
-        for sub in ("centroids", "cells"):
-            full = os.path.join(gen, sub)
-            if os.path.isdir(full):
-                shutil.rmtree(full)
+        gen = self._new_gen_from(cur, carry=())
         cdf.coalesce(1).write.parquet(os.path.join(gen, "centroids"))
         assign = ivf_cells(postings, cdf, "vec_id", "embedding", nprobe=1).select(
             "vec_id", "cell"
@@ -383,53 +310,6 @@ class AnnIndex:
                 counts[c] = counts.get(c, 0) + n
         return counts
 
-    def gc(self, keep: int = 2, min_age_s: float | None = None) -> list[str]:
-        """Drop superseded generations (hardlinked files shared with the
-        live one survive — only the directory entries go). With
-        ``min_age_s=None`` run only once no reader still holds plans
-        resolved against them; automated callers (the streaming sink
-        cadence) pass ``min_age_s`` >= the maximum expected probe
-        duration — condemn-then-reap age retention keeps a concurrent
-        cross-process prober's resolved snapshot on disk until it
-        finishes (VERDICT r11 #2)."""
-        return self.store.gc_generations(
-            self.base, "state", keep=keep, min_age_s=min_age_s
-        )
-
-    def compact(self, big_bytes: int = 128 << 20, max_small: int = 8) -> int:
-        """Merge accumulated per-batch small posting files into runs
-        (VERDICT r10 #2, same LSM tier as DedupIndex.compact): only cell
-        partitions holding more than ``max_small`` sub-``big_bytes``
-        files are rewritten (one Spark job; big runs link by reference),
-        published as one CAS generation flip. Carries centroids and the
-        tracked tally unchanged; returns the number of files merged."""
-        from .. import store as store_mod
-
-        cur = self._snapshot()
-        if cur is None or not os.path.isdir(os.path.join(cur, "cells")):
-            return 0
-        gen = self.store.new_generation(self.base, "state")
-        merged = store_mod.compact_partitioned(
-            self.spark,
-            os.path.join(cur, "cells"),
-            os.path.join(gen, "cells"),
-            big_bytes=big_bytes,
-            max_small=max_small,
-        )
-        if merged == 0:
-            import shutil
-
-            shutil.rmtree(gen, ignore_errors=True)
-            return 0
-        cdir = os.path.join(cur, "centroids")
-        if os.path.isdir(cdir):
-            store_mod.link_tree(cdir, os.path.join(gen, "centroids"))
-        meta = self._read_meta(cur)
-        if meta is not None:
-            self._write_meta(gen, meta["counts"], meta["n_at_retrain"])
-        self._publish(gen, cur)
-        return merged
-
     def merge_from(self, other: "AnnIndex") -> None:
         """Shard consolidation (r11), the ANN twin of
         DedupIndex.merge_from: adopt ``other``'s postings (built by a
@@ -443,8 +323,6 @@ class AnnIndex:
         corpus. Tracked tallies sum per cell; probes over the merged
         index == one index over the union corpus
         (``ann_index_probe_merged`` oracle row)."""
-        from .. import store as store_mod
-
         osnap = other._snapshot()
         if osnap is None:
             return
@@ -465,34 +343,12 @@ class AnnIndex:
                 "different centroids; retrain() the union instead"
             )
         gen = self._new_gen_from(cur)
-        src = os.path.join(osnap, "cells")
-        if os.path.isdir(src):
-            store_mod.link_tree(
-                src, os.path.join(gen, "cells"), skip_existing=True
-            )
-        mine, theirs = self._read_meta(cur), other._read_meta(osnap)
-        if mine is not None or theirs is not None:
-            # A side without a tracked tally (pre-tracking shard) is
-            # reconstructed from its cells' parquet footers — O(#files)
-            # driver metadata, the same reset retrain() uses — so a
-            # merge can never silently DEMOTE the receiver's streaming
-            # maintain() gauge from a driver-side JSON read back to the
-            # O(corpus) cell_stats scan (ADVICE r11 #4).
-            def _counts(meta: dict | None, snap: str | None) -> dict[int, int]:
-                if meta is not None:
-                    return dict(meta["counts"])
-                cdir = os.path.join(snap, "cells") if snap is not None else ""
-                return self._footer_cell_counts(cdir) if os.path.isdir(cdir) else {}
-
-            counts = _counts(mine, cur)
-            for c, n in _counts(theirs, osnap).items():
-                counts[c] = counts.get(c, 0) + n
-            n_at = (
-                mine["n_at_retrain"]
-                if mine is not None
-                else theirs["n_at_retrain"]
-            )
-            self._write_meta(gen, counts, n_at)
+        self._link_subs(osnap, gen, ("cells",), skip_existing=True)
+        mine = self._read_meta(cur)
+        counts = dict(mine["counts"])
+        for c, n in other._read_meta(osnap)["counts"].items():
+            counts[c] = counts.get(c, 0) + n
+        self._write_meta(gen, counts, mine["n_at_retrain"])
         self._publish(gen, cur)
 
     # ---- query ----
@@ -635,13 +491,12 @@ class AnnIndex:
         retrain itself is one atomic generation flip, so probes are
         never disturbed.
 
-        Gauge source: the generation's tracked cell tally when present
-        (VERDICT r10 #3 — a driver-side JSON read, ZERO Spark jobs on
-        the no-alarm path, which is what makes a per-micro-batch
-        maintain() check affordable at streaming cadence; the tally is
-        an upper bound under crash replay, which can only fire the
-        retrain early), falling back to the exact cell_stats() scan for
-        a pre-tracking index.
+        Gauge source: the generation's tracked cell tally (VERDICT r10
+        #3 — a driver-side JSON read, ZERO Spark jobs, which is what
+        makes a per-micro-batch maintain() check affordable at streaming
+        cadence; the tally is an upper bound under crash replay, which
+        can only fire the retrain early). An empty tally (no postings)
+        fires nothing.
 
         Thrash guard (ADVICE r10): when k-means skew keeps max cell mass
         above target even at the self-sized k, re-firing the alarm would
@@ -649,22 +504,13 @@ class AnnIndex:
         after a retrain, the alarms are suppressed until the corpus has
         grown by ``RETRAIN_GROWTH_REFIRE`` (default 1.2x) since it."""
         meta = self._read_meta(self._snapshot())
-        if meta is not None and meta["counts"]:
-            vals = meta["counts"].values()
-            m, n = max(vals), sum(vals)
-            imb = (m / n) * len(vals) if n else 0.0
-            n_last = meta["n_at_retrain"]
-        else:
-            stats = self.cell_stats().agg(
-                F.max("n_vecs").alias("m"),
-                F.sum("n_vecs").alias("n"),
-                (F.max("frac") * F.count(F.lit(1))).alias("imb"),
-            ).collect()
-            if not stats or stats[0]["n"] is None:
-                return None
-            m, n, imb = stats[0]["m"], stats[0]["n"], stats[0]["imb"]
-            n_last = None
-        if m <= int(target_cell_mass) and (imb or 0.0) <= float(skew_limit):
+        if meta is None or not meta["counts"]:
+            return None
+        vals = meta["counts"].values()
+        m, n = max(vals), sum(vals)
+        imb = (m / n) * len(vals) if n else 0.0
+        n_last = meta["n_at_retrain"]
+        if m <= int(target_cell_mass) and imb <= float(skew_limit):
             return None
         if n_last is not None and n < n_last * self.RETRAIN_GROWTH_REFIRE:
             return None
@@ -769,8 +615,9 @@ def attach_embedding_ingest(
 ):
     """foreachBatch sink maintaining the ANN index from a streaming
     embedding source — the similarity twin of
-    dedup_index.attach_document_ingest: exactly-once via the epoch guard,
-    restart-durable via the checkpoint.
+    dedup_index.attach_document_ingest: exactly-once via the (query,
+    epoch) guard, the query keyed by ``checkpoint_dir``, restart-durable
+    via the checkpoint.
 
     With ``target_cell_mass`` set, every micro-batch ends with a
     ``maintain()`` check, so the quantizer retrains itself as the
@@ -792,6 +639,7 @@ def attach_embedding_ingest(
     import time as _time
 
     last_maintain = [_time.monotonic()]
+    query = store.query_key(checkpoint_dir)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         # stabilize: read the (possibly non-deterministic) batch source
@@ -799,7 +647,7 @@ def attach_embedding_ingest(
         # see the same rows (ADVICE r11 #3; the dedup sink already does
         # this)
         batch_df = batch_df.localCheckpoint()
-        index.update(batch_df, epoch=int(epoch_id))
+        index.update(batch_df, epoch=(query, int(epoch_id)))
         if target_cell_mass is not None:
             index.maintain(target_cell_mass, skew_limit=skew_limit)
         if maintenance_interval_s is not None:

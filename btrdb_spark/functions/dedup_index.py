@@ -46,8 +46,9 @@ est_jaccard, because signatures are a pure function of text.
 
 Reference parity note: the reference engine has no dedup surface; this
 is a training-data-pipeline extension (SURVEY.md §6). The maintenance
-pattern (append partials per batch + epoch replay guard) mirrors the
-rollup ladder's spine update (plans/rollup.py:540).
+pattern (append partials per batch + (query, epoch) replay guard) mirrors
+the rollup ladder's spine update (RollupLadder.ingest_batch); the
+generation lifecycle is store.SnapshotIndex, shared with AnnIndex.
 """
 
 from __future__ import annotations
@@ -57,13 +58,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..store import has_parquet
+from .. import store
+from ..store import SnapshotIndex
 from .dedup import band_rows_of, minhash_signatures
 
 
-class DedupIndex:
+class DedupIndex(SnapshotIndex):
     """MinHash-LSH + exact-hash index over a documents corpus behind one
-    atomic snapshot pointer.
+    atomic snapshot pointer (store.SnapshotIndex).
 
     Each ``state`` generation holds:
 
@@ -78,6 +80,22 @@ class DedupIndex:
     same doc twice except as a crash replay of the same epoch (guarded).
     """
 
+    PLAN = {"sigs": "flat", "bands": "partitioned", "hashes": "partitioned"}
+    # Explicit read schemas per sub-table (ADVICE r10, medium): the
+    # partition columns (pfx/hpfx) hold HEX prefixes, and Spark's
+    # partition-column type inference will read a young index whose
+    # populated prefixes all happen to parse numerically ('07', '12',
+    # '1e4') back as int/decimal — after which the probe's
+    # ``isin('07',...)`` string comparison silently prunes LIVE
+    # partitions (false-negative duplicate misses). Pinning the schema
+    # (partition column types are taken from a user schema) makes
+    # inference irrelevant.
+    SCHEMAS = {
+        "sigs": "doc_id long, sig array<long>",
+        "bands": "doc_id long, band int, band_hash string, pfx string",
+        "hashes": "doc_id long, text_md5 string, hpfx string",
+    }
+
     def __init__(
         self,
         spark: SparkSession,
@@ -89,141 +107,17 @@ class DedupIndex:
         backend=None,
         band_pfx_len: int = 2,
     ):
-        from .. import store as store_mod
-
         assert num_hashes % bands == 0
         assert 1 <= band_pfx_len <= 4
-        self.spark = spark
-        self.base = base_dir
+        super().__init__(spark, base_dir, backend)
         self.n = n
         self.num_hashes = num_hashes
         self.bands = bands
         self.rows_per_band = num_hashes // bands
         self.text_col = text_col
         self.band_pfx_len = band_pfx_len
-        self.store = backend if backend is not None else store_mod.DEFAULT
-        os.makedirs(base_dir, exist_ok=True)
 
     # ---- maintenance ----
-
-    def committed_epoch(self) -> int | None:
-        """Highest streaming epoch whose rows are durably appended, or
-        None if no epoch-stamped update ever ran (batch-mode updates)."""
-        import re as _re
-
-        path = self.store.resolve(self.base, "_epoch")
-        if path is None:
-            return None
-        m = _re.search(r"\.g(\d+)$", path)
-        return int(m.group(1)) if m else None
-
-    def _mark_epoch(self, epoch: int) -> None:
-        gen = os.path.join(self.base, f"_epoch.g{epoch}")
-        os.makedirs(gen, exist_ok=True)
-        self.store.publish(self.base, "_epoch", gen)
-        self.store.gc_generations(self.base, "_epoch", keep=2)
-
-    # ---- snapshot plumbing ----
-
-    # Explicit read schemas per sub-table (ADVICE r10, medium): the
-    # partition columns (pfx/hpfx) hold HEX prefixes, and Spark's
-    # partition-column type inference will read a young index whose
-    # populated prefixes all happen to parse numerically ('07', '12',
-    # '1e4') back as int/decimal — after which the probe's
-    # ``isin('07',...)`` string comparison silently prunes LIVE
-    # partitions (false-negative duplicate misses). Pinning the schema
-    # (partition column types are taken from a user schema) makes
-    # inference irrelevant.
-    _SCHEMAS = {
-        "sigs": "doc_id long, sig array<long>",
-        "bands": "doc_id long, band int, band_hash string, pfx string",
-        "hashes": "doc_id long, text_md5 string, hpfx string",
-    }
-
-    def _snapshot(self) -> str | None:
-        return self.store.resolve(self.base, "state")
-
-    def _read(self, snap: str | None, sub: str) -> DataFrame | None:
-        if snap is None:
-            return None
-        path = os.path.join(snap, sub)
-        if not has_parquet(path):
-            return None
-        return self.spark.read.schema(self._SCHEMAS[sub]).parquet(path)
-
-    def _new_gen_from(self, cur: str | None) -> str:
-        from .. import store as store_mod
-
-        gen = self.store.new_generation(self.base, "state")
-        if cur is not None:
-            for sub in ("sigs", "bands", "hashes"):
-                full = os.path.join(cur, sub)
-                if os.path.isdir(full):
-                    store_mod.link_tree(full, os.path.join(gen, sub))
-        return gen
-
-    def _publish(self, gen: str, cur: str | None) -> None:
-        from .. import store as store_mod
-
-        self.store.publish(
-            self.base,
-            "state",
-            gen,
-            expected=cur if cur is not None else store_mod.EXPECT_ABSENT,
-        )
-
-    def gc(self, keep: int = 2, min_age_s: float | None = None) -> list[str]:
-        """Drop superseded generations (hardlinked files shared with the
-        live one survive). With ``min_age_s=None`` run only once no
-        reader holds plans resolved against them; automated callers
-        (the streaming sink cadence) pass ``min_age_s`` >= the maximum
-        expected probe duration, which condemns first and reaps a grace
-        window later so a concurrent cross-process prober's resolved
-        snapshot stays on disk until it finishes (VERDICT r11 #2)."""
-        return self.store.gc_generations(
-            self.base, "state", keep=keep, min_age_s=min_age_s
-        )
-
-    def compact(self, big_bytes: int = 128 << 20, max_small: int = 8) -> int:
-        """Merge accumulated per-batch small files into runs (VERDICT r10
-        #2): every ``update()`` appends ~1 file per touched partition dir
-        AND hardlinks every prior file into its new generation, so
-        without compaction per-batch cost grows with batch count. This
-        rewrites only partitions holding more than ``max_small``
-        sub-``big_bytes`` files (one Spark job per table; files >=
-        ``big_bytes`` are immutable runs linked forever), publishes the
-        result as one CAS generation flip — concurrent probes keep their
-        resolved snapshot — and returns the number of files merged.
-        Run it from the ingest maintenance cadence together with gc()."""
-        from .. import store as store_mod
-
-        cur = self._snapshot()
-        if cur is None:
-            return 0
-        gen = self.store.new_generation(self.base, "state")
-        merged = 0
-        for sub, fn in (
-            ("sigs", store_mod.compact_flat),
-            ("bands", store_mod.compact_partitioned),
-            ("hashes", store_mod.compact_partitioned),
-        ):
-            src = os.path.join(cur, sub)
-            if os.path.isdir(src):
-                merged += fn(
-                    self.spark,
-                    src,
-                    os.path.join(gen, sub),
-                    big_bytes=big_bytes,
-                    max_small=max_small,
-                    schema=self._SCHEMAS[sub],
-                )
-        if merged == 0:
-            import shutil
-
-            shutil.rmtree(gen, ignore_errors=True)
-            return 0
-        self._publish(gen, cur)
-        return merged
 
     def merge_from(self, other: "DedupIndex") -> None:
         """Shard consolidation (r11): adopt every index row of ``other``
@@ -240,8 +134,6 @@ class DedupIndex:
         (``dedup_incremental_merged`` oracle row). Both shards must
         share the MinHash/LSH geometry — different (n, num_hashes,
         bands, pfx) would mix incomparable signatures, so it raises."""
-        from .. import store as store_mod
-
         mine = (self.n, self.num_hashes, self.bands, self.band_pfx_len)
         theirs = (other.n, other.num_hashes, other.bands, other.band_pfx_len)
         if mine != theirs:
@@ -253,31 +145,27 @@ class DedupIndex:
             return
         cur = self._snapshot()
         gen = self._new_gen_from(cur)
-        for sub in ("sigs", "bands", "hashes"):
-            src = os.path.join(osnap, sub)
-            if os.path.isdir(src):
-                store_mod.link_tree(
-                    src, os.path.join(gen, sub), skip_existing=True
-                )
+        self._link_subs(osnap, gen, self.PLAN, skip_existing=True)
         self._publish(gen, cur)
 
-    def update(self, new_docs: DataFrame, epoch: int | None = None) -> None:
+    def update(
+        self, new_docs: DataFrame, epoch: tuple[int, int] | None = None
+    ) -> None:
         """Append index rows for ``new_docs`` — O(batch) compute, one
         atomic generation flip for all three tables together.
 
-        ``epoch`` is the streaming replay guard (rollup.py ingest_batch
-        semantics): foreachBatch epochs arrive strictly in order, so a
-        replayed epoch <= the committed watermark is skipped whole. The
+        ``epoch`` = (query key, epoch id) is the streaming replay guard
+        (store.epoch_done, the rollup ingest_batch semantics): a query's
+        foreachBatch epochs arrive strictly in order, so a replayed epoch
+        <= that query's committed watermark is skipped whole. The
         residual crash window (between the state flip and the watermark
         flip) re-appends one batch; probe() tolerates the resulting
         duplicate rows (candidates are DISTINCT, signature lookups dedup
         on doc_id), so replay degrades cost, never correctness — same
         contract as the hot-table sink.
         """
-        if epoch is not None:
-            done = self.committed_epoch()
-            if done is not None and done >= epoch:
-                return
+        if epoch is not None and store.epoch_done(self.store, self.base, "state", epoch):
+            return
         cur = self._snapshot()
         gen = self._new_gen_from(cur)
         # one pass over the batch text: signatures once, bands + md5 from it
@@ -343,7 +231,7 @@ class DedupIndex:
             raise errs[0]
         self._publish(gen, cur)
         if epoch is not None:
-            self._mark_epoch(epoch)
+            store.mark_epoch(self.store, self.base, "state", epoch)
 
     # ---- probes ----
 
@@ -527,8 +415,10 @@ def attach_document_ingest(
     gc_grace_s: float = 300.0,
 ):
     """Wire a streaming documents source into the dedup index: each
-    micro-batch appends the batch's index rows (epoch-guarded, so a
-    crash replay is skipped) and, optionally, the raw docs to a corpus
+    micro-batch appends the batch's index rows (guarded by (query,
+    epoch), the query keyed by ``checkpoint_dir``, so a crash replay is
+    skipped and a new query's first epochs are not) and, optionally, the
+    raw docs to a corpus
     parquet dir. The streaming checkpoint is the WAL — the ingest.py
     hot-table contract applied to documents. Returns the StreamingQuery.
 
@@ -547,12 +437,13 @@ def attach_document_ingest(
     import time as _time
 
     last_maintain = [_time.monotonic()]
+    query = store.query_key(checkpoint_dir)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()  # stabilize: read source once
         if docs_dir is not None:
             batch_df.write.mode("append").parquet(docs_dir)
-        index.update(batch_df, epoch=int(epoch_id))
+        index.update(batch_df, epoch=(query, int(epoch_id)))
         if maintenance_interval_s is not None:
             now = _time.monotonic()
             if now - last_maintain[0] >= maintenance_interval_s:

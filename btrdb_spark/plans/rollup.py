@@ -37,8 +37,6 @@ buckets per stream — still 6 orders of magnitude below raw.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -486,32 +484,9 @@ class RollupLadder:
             return set()
         return set(rb.to_table(columns=["version"], filter=ds.field("uuid") == uuid)["version"].to_pylist())
 
-    # ---- streaming exactly-once bookkeeping (pqm.go:152-188 analog) ----
-
-    def _epoch_name(self, pw: int) -> str:
-        return f"{self._name(pw)}_epoch"
-
-    def committed_epoch(self, pw: int) -> int | None:
-        """Highest streaming epoch whose partials are durably appended at
-        level pw, or None if no epoch-stamped ingest ever ran."""
-        import re as _re
-
-        path = self.store.resolve(self.base, self._epoch_name(pw))
-        if path is None:
-            return None
-        m = _re.search(r"\.g(\d+)$", path)
-        return int(m.group(1)) if m else None
-
-    def _mark_epoch(self, pw: int, epoch: int) -> None:
-        """Atomically record epoch as committed at level pw: an empty
-        generation directory named by the epoch + the backend's pointer
-        flip (works on every StoreBackend, including no-rename ones)."""
-        gen = os.path.join(self.base, f"{self._epoch_name(pw)}.g{epoch}")
-        os.makedirs(gen, exist_ok=True)
-        self.store.publish(self.base, self._epoch_name(pw), gen)
-        self.store.gc_generations(self.base, self._epoch_name(pw), keep=2)
-
-    def ingest_batch(self, batch_points: DataFrame, epoch: int | None = None) -> None:
+    def ingest_batch(
+        self, batch_points: DataFrame, epoch: tuple[int, int] | None = None
+    ) -> None:
         """Append per-level partials for a batch — O(batch) work.
 
         Folds level-to-level (finest first, each 64x smaller) exactly like
@@ -520,13 +495,15 @@ class RollupLadder:
         CGeneration analog); unversioned batches get the latest sentinel.
 
         ``epoch`` (streaming replay guard): when the caller supplies the
-        micro-batch's monotonic epoch id, each level's append is followed
-        by an atomic per-level epoch-watermark flip, and a replayed epoch
+        micro-batch's (query key, epoch id) — store.query_key names the
+        query — each level's append is followed by an atomic per-level,
+        per-query watermark flip (store.mark_epoch), and a replayed epoch
         skips every level whose watermark already covers it — the
         version-guarded journal replay of pqm.go:152-188, per ladder
-        level. Epochs arrive strictly in order (Structured Streaming
-        serializes foreachBatch), so watermark >= epoch means this
-        level's partials for the epoch are already durable. The residual
+        level. A query's epochs arrive strictly in order (Structured
+        Streaming serializes foreachBatch), so watermark >= epoch means
+        this level's partials for the epoch are already durable; another
+        query's epochs are guarded by its own watermark. The residual
         window is a crash between a level's parquet job commit and its
         watermark flip (one metadata op later); closing it entirely
         takes a transactional table format, same note as the hot sink.
@@ -556,16 +533,12 @@ class RollupLadder:
                     # coarser finest level for such rates; bench and the
                     # engine probes use levels=(30,)).
                     partial = partial.localCheckpoint()
+            name = self._name(pw)
+            if epoch is not None and store_mod.epoch_done(self.store, self.base, name, epoch):
+                continue  # replayed crash: this level already has it
+            store_mod.append(self.store, self.base, name, partial.write.mode("append").parquet)
             if epoch is not None:
-                done = self.committed_epoch(pw)
-                if done is not None and done >= epoch:
-                    continue  # replayed crash: this level already has it
-            partial.write.mode("append").parquet(
-                self.store.current_dir(self.base, self._name(pw), create=True)
-            )
-            store_mod.bump_stamp(self.base, self._name(pw))
-            if epoch is not None:
-                self._mark_epoch(pw, epoch)
+                store_mod.mark_epoch(self.store, self.base, name, epoch)
 
     def rewrite_level(self, pw: int, rewrite) -> None:
         """Replace level pw with ``rewrite(level_df)`` via a new generation
@@ -804,7 +777,7 @@ def invalidate_buckets_multi(
             f"uuid string, bucket_start long, version long, cnt long, "
             f"vmin double, vmax double, vsum {DEC}, rebase boolean",
         ).withColumn("vsum", F.coalesce(F.col("vsum"), F.lit(0).cast(DEC)))
-        full.unionByName(sentinels).coalesce(1).write.mode("append").parquet(
-            ladder.store.current_dir(ladder.base, ladder._rb_name(pw), create=True)
+        store_mod.append(
+            ladder.store, ladder.base, ladder._rb_name(pw),
+            full.unionByName(sentinels).coalesce(1).write.mode("append").parquet,
         )
-        store_mod.bump_stamp(ladder.base, ladder._rb_name(pw))

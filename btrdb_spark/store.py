@@ -679,9 +679,9 @@ def bump_stamp(base: str, name: str) -> None:
     pre-append handle (the append is not yet acked — same window the
     walk had while files moved out of _temporary/); any read after the
     append call returns sees the new stamp. An append that does not
-    bump leaves readers on the pre-append handle until the next bump or
-    publish, so every append into a table read through the memos
-    bumps."""
+    bump would leave readers on the pre-append handle until the next
+    bump or publish; every append goes through ``append``, which bumps
+    by construction."""
     import uuid as _uuid
 
     path = os.path.join(base, f"{name}.SIG")
@@ -700,6 +700,16 @@ def read_stamp(base: str, name: str) -> str | None:
             return f.read()
     except OSError:
         return None
+
+
+def append(backend: StoreBackend, base: str, name: str, write) -> None:
+    """Append a batch into table ``name``'s live generation and bump its
+    stamp: ``write(path)`` writes the batch under the live generation
+    directory, created and published empty on first use (e.g. a bound
+    ``df.write.mode("append").parquet``). The one append of the store:
+    the stamp contract of bump_stamp holds for every caller."""
+    write(backend.current_dir(base, name, create=True))
+    bump_stamp(base, name)
 
 
 def table_signature(backend: StoreBackend, base: str, name: str) -> tuple | None:
@@ -906,29 +916,187 @@ def compact_partitioned(
     return len(victims)
 
 
-# ---- module-level facade (back-compat; delegates to the POSIX default) ----
+# ---- streaming epoch watermarks (pqm.go:152-188 analog) ----
+#
+# Structured Streaming runs a query's foreachBatch epochs strictly in
+# order and replays the last one after a crash, so a per-table watermark
+# "epoch e of query q is durable here" turns a replay into a skip: the
+# version-guarded journal replay of the reference. Epoch ids restart at 0
+# for every new query, so a watermark is keyed by (query, epoch) and
+# lives in a table of its own per query: ``{name}_epoch_{query:08x}``,
+# whose live generation number IS the epoch (an empty directory and one
+# pointer flip through the backend, so it works on every StoreBackend).
 
-def resolve(base: str, name: str) -> str | None:
-    return DEFAULT.resolve(base, name)
-
-
-def current_dir(base: str, name: str, create: bool = False) -> str | None:
-    return DEFAULT.current_dir(base, name, create)
-
-
-def new_generation(base: str, name: str) -> str:
-    return DEFAULT.new_generation(base, name)
-
-
-def publish(base: str, name: str, gen_path: str) -> None:
-    DEFAULT.publish(base, name, gen_path)
+QUERY_KEY_BITS = 30
 
 
-def link_unchanged_partitions(cur: str, gen: str, exclude_subdir: str) -> None:
-    DEFAULT.link_unchanged_partitions(cur, gen, exclude_subdir)
+def query_key(checkpoint_dir: str) -> int:
+    """Key of the streaming query whose checkpoint is ``checkpoint_dir``:
+    a random ``QUERY_KEY_BITS``-bit id written once into that directory,
+    which is Spark's identity for a query (a restart from the checkpoint
+    is the same query, a fresh checkpoint a new one). Concurrent first
+    calls agree: the id appears by ``os.link``, which only one wins."""
+    import secrets
+    import uuid as _uuid
+
+    path = os.path.join(checkpoint_dir, "btrdb_query_key")
+    if not os.path.exists(path):
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        tmp = f"{path}.tmp-{_uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(str(secrets.randbits(QUERY_KEY_BITS)))
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            pass
+        finally:
+            os.unlink(tmp)
+    with open(path) as f:
+        return int(f.read())
 
 
-def gc_generations(
-    base: str, name: str, keep: int = 2, min_age_s: float | None = None
-) -> list[str]:
-    return DEFAULT.gc_generations(base, name, keep, min_age_s=min_age_s)
+def _watermark(name: str, query: int) -> str:
+    return f"{name}_epoch_{query:08x}"
+
+
+def committed_epoch(backend: StoreBackend, base: str, name: str, query: int) -> int | None:
+    """Highest epoch of streaming query ``query`` marked durable for table
+    ``name``, or None if that query never marked one."""
+    path = backend.resolve(base, _watermark(name, query))
+    m = _GEN_RE.search(path) if path is not None else None
+    return int(m.group(1)) if m else None
+
+
+def epoch_done(backend: StoreBackend, base: str, name: str, epoch: tuple[int, int]) -> bool:
+    """Whether ``epoch`` = (query, epoch id) is at or below the query's
+    watermark for ``name``: a replay whose writes are already durable."""
+    done = committed_epoch(backend, base, name, epoch[0])
+    return done is not None and done >= epoch[1]
+
+
+def mark_epoch(backend: StoreBackend, base: str, name: str, epoch: tuple[int, int]) -> None:
+    """Record ``epoch`` = (query, epoch id) as durable for ``name``: one
+    pointer flip, called after the epoch's writes are durable. The window
+    between those writes and this flip replays one batch."""
+    wm = _watermark(name, epoch[0])
+    gen = os.path.join(base, f"{wm}.g{int(epoch[1])}")
+    os.makedirs(gen, exist_ok=True)
+    backend.publish(base, wm, gen)
+    backend.gc_generations(base, wm, keep=2)
+
+
+# ---- multi-table index snapshots ----
+
+
+class SnapshotIndex:
+    """An index of several sub-tables behind ONE generation pointer named
+    ``state``: each generation directory holds every sub-table (and any
+    small sidecar file), a writer builds a new generation that carries
+    the live one's sub-tables by hardlink and CAS-publishes it
+    (``EXPECT_ABSENT`` on the first publish), and a reader resolves the
+    pointer once and reads every sub-table from that generation, so it
+    sees whole commits or none. Subclasses declare their sub-tables in
+    ``PLAN`` (sub-table -> how ``compact`` treats it: ``"flat"`` and
+    ``"partitioned"`` size-tier merge a flat or hive-partitioned parquet
+    directory, ``"link"`` carries a directory or file unchanged) and may
+    pin a read schema per sub-table in ``SCHEMAS``."""
+
+    PLAN: dict[str, str] = {}
+    SCHEMAS: dict[str, str] = {}
+
+    def __init__(self, spark, base_dir: str, backend: StoreBackend | None = None):
+        self.spark = spark
+        self.base = base_dir
+        self.store = backend if backend is not None else DEFAULT
+        os.makedirs(base_dir, exist_ok=True)
+
+    def _snapshot(self) -> str | None:
+        """Path of the live generation: one resolve = one consistent view
+        of every sub-table."""
+        return self.store.resolve(self.base, "state")
+
+    def _read(self, snap: str | None, sub: str):
+        """Sub-table ``sub`` of generation ``snap`` (its pinned schema, if
+        any), or None when it holds no parquet."""
+        if snap is None:
+            return None
+        path = os.path.join(snap, sub)
+        if not has_parquet(path):
+            return None
+        schema = self.SCHEMAS.get(sub)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
+
+    @staticmethod
+    def _link_subs(snap: str | None, gen: str, subs, skip_existing: bool = False) -> None:
+        """Hardlink the sub-table directories ``subs`` of ``snap`` into
+        ``gen`` (``skip_existing`` lets a second generation's files join
+        the same directories)."""
+        if snap is None:
+            return
+        for sub in subs:
+            src = os.path.join(snap, sub)
+            if os.path.isdir(src):
+                link_tree(src, os.path.join(gen, sub), skip_existing=skip_existing)
+
+    def _new_gen_from(self, cur: str | None, carry=None) -> str:
+        """Fresh, unpublished generation carrying ``carry`` (default every
+        sub-table directory of the plan) from ``cur`` by hardlink. Sidecar
+        files are never carried: a writer rewrites its own."""
+        gen = self.store.new_generation(self.base, "state")
+        self._link_subs(cur, gen, self.PLAN if carry is None else carry)
+        return gen
+
+    def _publish(self, gen: str, cur: str | None) -> None:
+        """CAS-flip the pointer from ``cur`` (the generation this writer
+        built on) to ``gen``; a concurrent writer surfaces as
+        CommitConflict."""
+        self.store.publish(
+            self.base, "state", gen, expected=cur if cur is not None else EXPECT_ABSENT
+        )
+
+    def gc(self, keep: int = 2, min_age_s: float | None = None) -> list[str]:
+        """Drop superseded generations (files hardlinked into the live one
+        survive). With ``min_age_s=None`` run only once no reader holds
+        plans resolved against them; automated callers (the streaming
+        sinks' cadence) pass ``min_age_s`` >= the longest expected probe,
+        which condemns first and reaps a grace window later
+        (StoreBackend.gc_generations)."""
+        return self.store.gc_generations(self.base, "state", keep=keep, min_age_s=min_age_s)
+
+    def compact(self, big_bytes: int = 128 << 20, max_small: int = 8) -> int:
+        """Merge accumulated per-batch small files into runs: every update
+        appends ~1 file per touched partition directory and hardlinks
+        every prior file into its new generation, so without compaction
+        per-batch cost grows with batch count. Only directories holding
+        more than ``max_small`` sub-``big_bytes`` files are rewritten (one
+        Spark job per sub-table; files >= ``big_bytes`` are runs linked
+        forever), ``"link"`` entries are carried unchanged, and the result
+        is one CAS generation flip, so concurrent probes keep their
+        resolved snapshot. Returns the number of files merged (0 = no new
+        generation)."""
+        import shutil
+
+        cur = self._snapshot()
+        if cur is None:
+            return 0
+        gen = self.store.new_generation(self.base, "state")
+        merged = 0
+        for sub, how in self.PLAN.items():
+            src, dst = os.path.join(cur, sub), os.path.join(gen, sub)
+            if how == "link":
+                if os.path.isdir(src):
+                    link_tree(src, dst)
+                elif os.path.exists(src):
+                    os.link(src, dst)
+            elif os.path.isdir(src):
+                fn = compact_flat if how == "flat" else compact_partitioned
+                merged += fn(self.spark, src, dst, big_bytes=big_bytes,
+                             max_small=max_small, schema=self.SCHEMAS.get(sub))
+        if merged == 0:
+            shutil.rmtree(gen, ignore_errors=True)
+            return 0
+        self._publish(gen, cur)
+        return merged

@@ -10,13 +10,18 @@ streaming window state.
 Spark mapping:
 - ``readStream`` on a source -> ``foreachBatch`` append into the engine's
   hot table. The streaming checkpoint is the WAL: a batch is acked only
-  after its parquet commit (at-least-once), and a committed-epoch marker
-  makes replay after failure skip epochs whose data commit completed —
-  the version-guarded journal replay of pqm.go:152-188. The residual
-  window (crash between the data commit and the marker write) re-appends
-  one batch; closing it entirely requires a transactional table format
-  (Delta/Iceberg txn appends keyed by (queryId, epochId)), which is what
-  this sink becomes on a cluster.
+  after its parquet commit (at-least-once), and a committed-epoch
+  watermark makes replay after failure skip epochs whose data commit
+  completed — the version-guarded journal replay of pqm.go:152-188. Every
+  guard (the batch watermark, the hot rows' seq and the ladder's per-level
+  watermarks) is keyed by (query, epoch), the (queryId, epochId) pair of
+  a Delta/Iceberg transactional append: epoch ids restart at 0 for every
+  new query, and the query key (store.query_key) is a random id written
+  once into the query's checkpoint directory, so a new query's first
+  batches are never mistaken for an earlier query's replays. The residual
+  window (crash between the data commit and the watermark flip)
+  re-appends one batch; closing it entirely requires a transactional
+  table format, which is what this sink becomes on a cluster.
 - Flush/compaction runs inside the same foreachBatch once a stream's
   buffer exceeds the threshold — exactly the reference's size-triggered
   commit (pqm.go:568-600). The per-stream count check is bounded: one row
@@ -31,11 +36,10 @@ Spark mapping:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from ..engine import BTrDBEngine
 from ..plans.rollup import RollupLadder
 
@@ -45,9 +49,16 @@ from ..plans.rollup import RollupLadder
 # a first-time batch whose epoch_id matched any buffered insert seq would
 # be treated as a replay and silently dropped from the hot table. The
 # offset is far above any reachable minor (minor < flush_threshold +
-# MAX_INSERT_SIZE << 2^61) and far below int64 overflow for any
-# realistic epoch count.
+# MAX_INSERT_SIZE << 2^61). Above it, the query key takes the bits from
+# 32 up and the epoch id the 32 below, so two queries' rows never share
+# a seq; the largest seq, 2^61 + 2^62, is below int64 overflow.
 STREAM_SEQ_BASE = 1 << 61
+
+
+def stream_seq(query: int, epoch_id: int) -> int:
+    """The hot-table seq of streaming query ``query``'s epoch ``epoch_id``
+    (epoch ids below 2^32: 136 years of one batch a second)."""
+    return STREAM_SEQ_BASE + (query << 32) + epoch_id
 
 
 def attach_ingest(
@@ -108,28 +119,30 @@ def make_batch_processor(
     normal run. A hard kill INSIDE the append job can leave a partially
     visible append that the existence probe then pins; closing that
     residual window takes a transactional table format, per the module
-    docstring):
-    - hot table: rows carry seq=STREAM_SEQ_BASE+epoch_id (a namespace
-      disjoint from insert()'s minor-counter seqs, so mixed insert()+
-      streaming traffic can't fake a replay); a replayed epoch whose
-      rows already landed is detected with one pruned existence probe
-      over the batch's own uuids and skipped;
-    - ladder: ingest_batch(epoch=...) guards each level with an atomic
-      per-level epoch watermark (plans/rollup.py) — a kill between the
-      hot append and the ladder merge, or between any two level appends,
-      replays into appends of only the missing levels;
-    - the epoch .done marker then gates the whole batch; flush/GC after
-      it are version-guarded engine ops, safe to repeat.
+    docstring). Every guard is keyed by (query, epoch_id), the query
+    being ``store.query_key(checkpoint_dir)``:
+    - hot table: rows carry seq=stream_seq(query, epoch_id) (a namespace
+      disjoint from insert()'s minor-counter seqs and from every other
+      query's, so neither mixed insert()+streaming traffic nor a new
+      query can fake a replay); a replayed epoch whose rows already
+      landed is detected with one pruned existence probe over the
+      batch's own uuids and skipped;
+    - ladder: ingest_batch(epoch=(query, epoch_id)) guards each level
+      with an atomic per-level watermark (store.mark_epoch) — a kill
+      between the hot append and the ladder merge, or between any two
+      level appends, replays into appends of only the missing levels;
+    - the batch watermark in the checkpoint directory then gates the
+      whole batch; flush/GC after it are version-guarded engine ops,
+      safe to repeat.
     """
-    marker_dir = os.path.join(checkpoint_dir, "committed_epochs")
-    os.makedirs(marker_dir, exist_ok=True)
+    query = store.query_key(checkpoint_dir)
     last_maintain = [float("-inf")]  # monotonic seconds of the last GC run
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
+        epoch = (query, int(epoch_id))
+        if store.epoch_done(store.DEFAULT, checkpoint_dir, "batch", epoch):
             return  # crashed-then-replayed epoch: data commit already done
-        seq = STREAM_SEQ_BASE + epoch_id
+        seq = stream_seq(*epoch)
         batch = batch.select(
             "uuid",
             F.col("time").cast("long"),
@@ -148,20 +161,8 @@ def make_batch_processor(
         if not hot_done:
             engine.append_hot(batch)
         if ladder is not None:
-            ladder.ingest_batch(batch.select("uuid", "time", "value"), epoch=epoch_id)
-        # atomic marker AFTER the data commit (write tmp + rename)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("ok")
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, marker)
-        # bound the marker set: replay can only revisit epochs still in the
-        # streaming checkpoint's recent window, so markers far behind the
-        # current epoch are dead weight (keep a generous 1000)
-        for fn in os.listdir(marker_dir):
-            if fn.endswith(".done") and int(fn[:-5]) < epoch_id - 1000:
-                os.unlink(os.path.join(marker_dir, fn))
+            ladder.ingest_batch(batch.select("uuid", "time", "value"), epoch=epoch)
+        store.mark_epoch(store.DEFAULT, checkpoint_dir, "batch", epoch)
         # size-triggered flush per stream (pqm.go:568-600); only streams
         # present in THIS batch can have crossed the threshold
         counts = (

@@ -5,8 +5,10 @@ foreachBatch sink."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from btrdb_spark.functions import similarity
@@ -75,9 +77,9 @@ def test_epoch_replay_guard_and_crash_residue(spark, tmp_path):
     cents = corpus.filter(F.col("vec_id") < 16)
     idx = AnnIndex(spark, str(tmp_path / "idx"))
     idx.set_centroids(cents)
-    idx.update(corpus, epoch=0)
+    idx.update(corpus, epoch=(1, 0))
     baseline = _rows(idx.probe(batch, k=5, nprobe=2))
-    idx.update(corpus, epoch=0)  # replay: skipped by watermark
+    idx.update(corpus, epoch=(1, 0))  # replay: skipped by watermark
     assert _rows(idx.probe(batch, k=5, nprobe=2)) == baseline
     idx.update(corpus.limit(20))  # crash residue: duplicate posting rows
     assert _rows(idx.probe(batch, k=5, nprobe=2)) == baseline
@@ -255,3 +257,170 @@ def test_streaming_ingest_with_auto_retrain(spark, tmp_path):
     got = _rows(idx.probe(batch, k=5, nprobe=2))
     want = _rows(_one_shot(corpus, batch, final_cents))
     assert got == want and len(got) > 0
+
+
+# ---- tracked cell-mass gauge, retrain thrash guard, compaction, shard merge ----
+
+
+def test_update_tracks_cell_counts_exactly(spark, tmp_path):
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(corpus.filter(F.col("vec_id") < 16))
+    idx.update(corpus.filter(F.col("vec_id") % 3 != 0))
+    idx.update(corpus.filter(F.col("vec_id") % 3 == 0))
+    tracked = idx.tracked_cell_counts()
+    exact = {
+        int(r["cell"]): int(r["n_vecs"]) for r in idx.cell_stats().collect()
+    }
+    assert tracked == exact and sum(tracked.values()) == corpus.count()
+
+
+def test_maintain_no_alarm_runs_zero_spark_jobs(spark, tmp_path, monkeypatch):
+    """The streaming sink checks maintain() after EVERY micro-batch; with
+    the tracked tally present the no-alarm path must not touch the
+    posting table at all (VERDICT r10 #3)."""
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(corpus.filter(F.col("vec_id") < 16))
+    idx.update(corpus)
+
+    calls = []
+    orig = AnnIndex.cell_stats
+    monkeypatch.setattr(
+        AnnIndex, "cell_stats", lambda self: calls.append(1) or orig(self)
+    )
+    target = corpus.count() * 2
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
+    assert idx.maintain(target_cell_mass=target) is None
+    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
+    assert calls == [], "no-alarm maintain must not scan postings"
+    assert jobs_after == jobs_before, "no-alarm maintain must launch no Spark job"
+
+
+def test_maintain_thrash_guard_suppresses_refire(spark, tmp_path):
+    """After a self-sized retrain, residual skew must not re-fire a full
+    posting rewrite every batch; the alarm re-arms only once the corpus
+    grows 1.2x past the last retrain (ADVICE r10)."""
+    emb = _emb(spark)
+    corpus = emb.filter((F.col("vec_id") % 10 != 0) & (F.col("vec_id") % 3 != 0))
+    growth = emb.filter((F.col("vec_id") % 10 != 0) & (F.col("vec_id") % 3 == 0))
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(corpus.filter(F.col("vec_id") < 16))
+    idx.update(corpus)
+    n0 = corpus.count()
+    target = max(1, n0 // 40)
+    assert idx.maintain(target_cell_mass=target) is not None  # retrains
+    snap = idx._snapshot()
+    # same corpus, alarm condition still holds (target 2 << per-cell
+    # mass), but the growth gate suppresses a rewrite-per-batch loop
+    assert idx.maintain(target_cell_mass=2) is None
+    assert idx._snapshot() == snap
+    # grow the corpus past the 1.2x refire threshold: alarm re-arms
+    idx.update(growth)
+    total = n0 + growth.count()
+    assert total >= n0 * AnnIndex.RETRAIN_GROWTH_REFIRE, "fixture must grow enough"
+    assert idx.maintain(target_cell_mass=2) is not None
+    assert idx._snapshot() != snap
+
+
+def test_set_centroids_with_postings_raises(spark, tmp_path):
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    cents = corpus.filter(F.col("vec_id") < 16)
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(cents)
+    idx.update(corpus)
+    with pytest.raises(RuntimeError, match="retrain"):
+        idx.set_centroids(corpus.filter(F.col("vec_id") < 32))
+
+
+def test_ann_compact_preserves_probe_and_bounds_files(spark, tmp_path):
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    batch = emb.filter(F.col("vec_id") % 10 == 0)
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(corpus.filter(F.col("vec_id") < 16))
+    for m in range(4):
+        idx.update(corpus.filter(F.col("vec_id") % 4 == m))
+    want = sorted(map(tuple, idx.probe(batch, k=5, nprobe=2).collect()))
+    cells = os.path.join(idx._snapshot(), "cells")
+    before = len(glob.glob(os.path.join(cells, "cell=*", "*.parquet")))
+    merged = idx.compact(big_bytes=1 << 30, max_small=1)  # force merge
+    assert merged > 0
+    cells2 = os.path.join(idx._snapshot(), "cells")
+    after = len(glob.glob(os.path.join(cells2, "cell=*", "*.parquet")))
+    assert after < before
+    got = sorted(map(tuple, idx.probe(batch, k=5, nprobe=2).collect()))
+    assert got == want and len(got) > 0
+    # tracked gauge survives the compaction generation
+    assert sum(idx.tracked_cell_counts().values()) == corpus.count()
+    # idempotent: nothing left to merge at this threshold
+    assert idx.compact(big_bytes=1 << 30, max_small=1) == 0
+
+
+def test_streaming_sink_no_posting_scan_per_batch(spark, tmp_path, monkeypatch):
+    """attach_embedding_ingest checks maintain() after EVERY micro-batch;
+    on ordinary (no-alarm) batches that check must never run the
+    O(corpus) cell_stats scan (VERDICT r10 #3 done-bar). cell_stats is
+    patched to raise: the stream must still drain cleanly, and the
+    maintenance cadence must also run compact+gc without it."""
+    from btrdb_spark.functions.ann_index import attach_embedding_ingest
+
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    cents = corpus.filter(F.col("vec_id") < 16)
+    src = str(tmp_path / "src")
+    corpus.write.parquet(src)
+    idx = AnnIndex(spark, str(tmp_path / "idx"))
+    idx.set_centroids(cents)
+
+    def _boom(self):
+        raise AssertionError("cell_stats ran during an ordinary batch")
+
+    monkeypatch.setattr(AnnIndex, "cell_stats", _boom)
+    stream = spark.readStream.schema(corpus.schema).parquet(src)
+    q = attach_embedding_ingest(
+        stream,
+        idx,
+        str(tmp_path / "ckpt"),
+        target_cell_mass=corpus.count() * 10,  # generous: no alarm
+        maintenance_interval_s=0.0,  # compact+gc every batch
+    ).start()
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert sum(idx.tracked_cell_counts().values()) == corpus.count()
+
+
+def test_ann_merge_from_equals_single_index(spark, tmp_path):
+    emb = _emb(spark)
+    corpus = emb.filter(F.col("vec_id") % 10 != 0)
+    batch = emb.filter(F.col("vec_id") % 10 == 0)
+    cents = corpus.filter(F.col("vec_id") < 16)
+    one = AnnIndex(spark, str(tmp_path / "one"))
+    one.set_centroids(cents)
+    one.update(corpus)
+    want = sorted(map(tuple, one.probe(batch, k=5, nprobe=2).collect()))
+
+    a = AnnIndex(spark, str(tmp_path / "a"))
+    b = AnnIndex(spark, str(tmp_path / "b"))
+    a.set_centroids(cents)
+    b.set_centroids(cents)
+    a.update(corpus.filter(F.col("vec_id") % 3 != 0))
+    b.update(corpus.filter(F.col("vec_id") % 3 == 0))
+    a.merge_from(b)
+    got = sorted(map(tuple, a.probe(batch, k=5, nprobe=2).collect()))
+    assert got == want and len(got) > 0
+    # merged tally = exact union counts
+    assert sum(a.tracked_cell_counts().values()) == corpus.count()
+    assert a.tracked_cell_counts() == {
+        int(r["cell"]): int(r["n_vecs"]) for r in a.cell_stats().collect()
+    }
+    # different quantizer refuses: cell ids would mean different regions
+    c = AnnIndex(spark, str(tmp_path / "c"))
+    c.set_centroids(corpus.filter(F.col("vec_id") < 32))
+    c.update(corpus.limit(20))
+    with pytest.raises(ValueError, match="centroids"):
+        a.merge_from(c)

@@ -140,11 +140,11 @@ def test_compact_points_preserves_answers(spark, tmp_path):
     ver_before = eng.stream_version(u)
     base = str(tmp_path / "cp")
     nfiles_before = len(
-        glob.glob(store.resolve(base, "points") + "/**/*.parquet", recursive=True)
+        glob.glob(store.DEFAULT.resolve(base, "points") + "/**/*.parquet", recursive=True)
     )
     eng.compact_points()
     nfiles_after = len(
-        glob.glob(store.resolve(base, "points") + "/**/*.parquet", recursive=True)
+        glob.glob(store.DEFAULT.resolve(base, "points") + "/**/*.parquet", recursive=True)
     )
     assert nfiles_after < nfiles_before
     assert eng.raw_values(u, 0, 10**12).collect() == before
@@ -192,15 +192,15 @@ def test_create_clash_check_equals_spark_and_runs_no_job(engine, spark):
     live stream of the collection whatever the insertion order of its
     tags, a tombstoned stream's tagset can be reused, and non-ASCII
     collections and values compare as Spark compares them. Tag keys are
-    ASCII by validation; a null-valued tag drops out of the catalog
-    side's canonical form, as Spark's array_join drops it."""
+    ASCII by validation, and a null tag value is refused at create."""
     from pyspark.sql import functions as F
 
     from btrdb_spark import metadata as md
 
     live = engine.create_stream("campus/ü", tags={"b": "ß", "a.b": "1", "a_b": "2"}, uuid="u-live")
     dead = engine.create_stream("campus/dead", tags={"k": "v"})
-    engine.create_stream("campus/null", tags={"n": None, "k": "v"})
+    with pytest.raises(ValueError):
+        engine.create_stream("campus/null", tags={"n": None, "k": "v"})
     engine.obliterate(dead, defer_gc=True)
 
     def spark_check(uuid, collection, tags):
@@ -229,7 +229,6 @@ def test_create_clash_check_equals_spark_and_runs_no_job(engine, spark):
         ("n1", "campus/ü", {"a.b": "1", "a_b": "2"}),
         ("n1", "campus/u", {"a_b": "2", "a.b": "1", "b": "ß"}),
         ("n1", "campus/dead", {"k": "v"}),
-        ("n1", "campus/null", {"k": "v"}), ("n1", "campus/null", {"n": None, "k": "v"}),
     ]
     got = []
     for case in cases:
@@ -239,7 +238,7 @@ def test_create_clash_check_equals_spark_and_runs_no_job(engine, spark):
         got.append(None if msg is None else msg.split()[0].strip("(,"))
     want = [spark_check(*case) for case in cases]
     assert [{"uuid": "uuid", "duplicate": "tagset"}.get(g) for g in got] == want
-    assert want == ["uuid", "uuid", "tagset", None, None, None, None, "tagset", None]
+    assert want == ["uuid", "uuid", "tagset", None, None, None, None]
     assert engine.create_stream("campus/dead", tags={"k": "v"})  # tombstoned tagset reused
     with pytest.raises(ValueError):
         engine.create_stream("campus/ü", tags={"a_b": "2", "b": "ß", "a.b": "1"})

@@ -6,6 +6,7 @@ producing results identical to the POSIX backend."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -203,7 +204,7 @@ def test_engine_opens_over_a_staging_only_gc_pending(spark, tmp_path):
     pq.write_table(
         pa.table({"uuid": ["u-1"], "requested": [1]}), str(staged / "part-0.parquet")
     )
-    store.publish(str(base), "gc_pending", str(gen))
+    store.DEFAULT.publish(str(base), "gc_pending", str(gen))
     assert BTrDBEngine(spark, str(base))._pending_gc == set()
     assert not store.has_parquet(str(gen))
 
@@ -275,3 +276,36 @@ def test_ladder_memo_stamp_sees_appends(spark, tmp_path):
     assert lad.level(30).count() == 2 * n1
     lad.compact()
     assert lad.level(30).count() == n1
+
+
+def test_gc_min_age_condemns_then_reaps(tmp_path):
+    base = str(tmp_path)
+    st = store.PosixStore()
+    for g in range(4):
+        gen = os.path.join(base, f"t.g{g}")
+        os.makedirs(gen)
+        with open(os.path.join(gen, "part-0.parquet"), "w") as f:
+            f.write("x")
+        st.publish(base, "t", gen)
+    # pass 1: victims (g0, g1) are condemned, NOT deleted
+    assert st.gc_generations(base, "t", keep=2, min_age_s=3600) == []
+    assert os.path.exists(os.path.join(base, "t.g0", "part-0.parquet"))
+    assert os.path.exists(os.path.join(base, "t.g0", ".condemned"))
+    # pass 2 within the grace window: still nothing reaped
+    assert st.gc_generations(base, "t", keep=2, min_age_s=3600) == []
+    assert os.path.exists(os.path.join(base, "t.g1", "part-0.parquet"))
+    # grace expired: both victims reaped
+    old = time.time() - 7200
+    for g in ("t.g0", "t.g1"):
+        os.utime(os.path.join(base, g, ".condemned"), (old, old))
+    reaped = st.gc_generations(base, "t", keep=2, min_age_s=3600)
+    assert sorted(os.path.basename(p) for p in reaped) == ["t.g0", "t.g1"]
+    assert not os.path.exists(os.path.join(base, "t.g0"))
+    # live + keep window untouched
+    assert os.path.exists(os.path.join(base, "t.g3", "part-0.parquet"))
+    # min_age_s=None keeps the old immediate-reap contract
+    gen4 = os.path.join(base, "t.g4")
+    os.makedirs(gen4)
+    st.publish(base, "t", gen4)
+    assert st.gc_generations(base, "t", keep=1) != []
+    assert not os.path.exists(os.path.join(base, "t.g2"))

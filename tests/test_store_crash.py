@@ -163,17 +163,18 @@ def test_vacuum_reaps_old_generations(engine):
 def test_publish_is_pointer_flip_and_gc_spares_live(tmp_path):
     base = str(tmp_path / "t")
     os.makedirs(base)
-    g0 = store.current_dir(base, "tbl", create=True)
-    assert store.resolve(base, "tbl") == g0
-    g1 = store.new_generation(base, "tbl")
+    st = store.DEFAULT
+    g0 = st.current_dir(base, "tbl", create=True)
+    assert st.resolve(base, "tbl") == g0
+    g1 = st.new_generation(base, "tbl")
     # not live until published
-    assert store.resolve(base, "tbl") == g0
-    store.publish(base, "tbl", g1)
-    assert store.resolve(base, "tbl") == g1
-    g2 = store.new_generation(base, "tbl")
-    store.publish(base, "tbl", g2)
-    victims = store.gc_generations(base, "tbl", keep=1)
-    assert g0 in victims and os.path.exists(g2) and store.resolve(base, "tbl") == g2
+    assert st.resolve(base, "tbl") == g0
+    st.publish(base, "tbl", g1)
+    assert st.resolve(base, "tbl") == g1
+    g2 = st.new_generation(base, "tbl")
+    st.publish(base, "tbl", g2)
+    victims = st.gc_generations(base, "tbl", keep=1)
+    assert g0 in victims and os.path.exists(g2) and st.resolve(base, "tbl") == g2
 
 
 def test_compact_crash_preserves_table_manifest_backend(spark, tmp_path, monkeypatch):

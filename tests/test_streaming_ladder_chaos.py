@@ -13,9 +13,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from btrdb_spark import store
 from btrdb_spark.engine import BTrDBEngine
 from btrdb_spark.plans.rollup import RollupLadder
-from btrdb_spark.streaming.ingest import make_batch_processor
+from btrdb_spark.streaming.ingest import make_batch_processor, stream_seq
 
 
 class Boom(RuntimeError):
@@ -55,6 +56,18 @@ def _expected_totals(n):
     return (n, 0.0, float(n - 1), float(sum(range(n))))
 
 
+def _rewind(ckpt, epoch_id):
+    """Move the sink's batch watermark back below ``epoch_id``, so the
+    next call of that epoch runs as a full replay."""
+    store.mark_epoch(store.DEFAULT, ckpt, "batch", (store.query_key(ckpt), epoch_id - 1))
+
+
+def _level_epoch(ladder, pw, ckpt):
+    return store.committed_epoch(
+        ladder.store, ladder.base, ladder._name(pw), store.query_key(ckpt)
+    )
+
+
 def test_kill_between_hot_append_and_ladder_merge_replays_exact(spark, tmp_path, monkeypatch):
     eng, ladder, proc = _mk(spark, tmp_path)
     b = _batch(spark)
@@ -72,17 +85,14 @@ def test_kill_between_hot_append_and_ladder_merge_replays_exact(spark, tmp_path,
 
     # hot: exactly once
     assert eng.hot.count() == 500
-    from btrdb_spark.streaming.ingest import STREAM_SEQ_BASE
-
-    assert eng.hot.filter(F.col("seq") == STREAM_SEQ_BASE + 7).count() == 500
+    ckpt = str(tmp_path / "ckpt")
+    seq = stream_seq(store.query_key(ckpt), 7)
+    assert eng.hot.filter(F.col("seq") == seq).count() == 500
     # every level: exactly the batch's rollup
     for pw in ladder.levels:
         assert _level_totals(ladder, pw) == _expected_totals(500), f"level {pw}"
-    # a SECOND full replay (marker removed) changes nothing anywhere
-    import os
-
-    marker = os.path.join(str(tmp_path / "ckpt"), "committed_epochs", "7.done")
-    os.unlink(marker)
+    # a SECOND full replay (batch watermark rewound) changes nothing anywhere
+    _rewind(ckpt, 7)
     proc(b, 7)
     assert eng.hot.count() == 500
     for pw in ladder.levels:
@@ -100,15 +110,12 @@ def test_mixed_insert_and_streaming_seq_namespaces_disjoint(spark, tmp_path):
 
     proc(_batch(spark, 100, base=1_000_000), 2)  # epoch_id=2 collides with seq 2
 
-    from btrdb_spark.streaming.ingest import STREAM_SEQ_BASE
-
+    ckpt = str(tmp_path / "ckpt")
     assert eng.hot.count() == 105
-    assert eng.hot.filter(F.col("seq") == STREAM_SEQ_BASE + 2).count() == 100
+    assert eng.hot.filter(F.col("seq") == stream_seq(store.query_key(ckpt), 2)).count() == 100
     # and the replay guard still works in the streaming namespace
-    # (marker removed so the existence probe itself must catch it)
-    import os
-
-    os.unlink(os.path.join(str(tmp_path / "ckpt"), "committed_epochs", "2.done"))
+    # (batch watermark rewound so the existence probe itself must catch it)
+    _rewind(ckpt, 2)
     proc(_batch(spark, 100, base=1_000_000), 2)
     assert eng.hot.count() == 105
 
@@ -118,26 +125,27 @@ def test_kill_between_level_appends_replays_only_missing_levels(spark, tmp_path,
     b = _batch(spark)
 
     # kill AFTER level 0's append+watermark, before level 1's append
-    real_mark = RollupLadder._mark_epoch
+    real_mark = store.mark_epoch
     calls = {"n": 0}
 
-    def mark_then_die(self, pw, epoch):
-        real_mark(self, pw, epoch)
+    def mark_then_die(*args):
+        real_mark(*args)
         calls["n"] += 1
         if calls["n"] == 1:
             raise Boom()
 
-    monkeypatch.setattr(RollupLadder, "_mark_epoch", mark_then_die)
+    monkeypatch.setattr(store, "mark_epoch", mark_then_die)
     with pytest.raises(Boom):
         proc(b, 3)
-    assert ladder.committed_epoch(ladder.levels[0]) == 3
-    assert ladder.committed_epoch(ladder.levels[1]) is None
+    ckpt = str(tmp_path / "ckpt")
+    assert _level_epoch(ladder, ladder.levels[0], ckpt) == 3
+    assert _level_epoch(ladder, ladder.levels[1], ckpt) is None
 
-    monkeypatch.setattr(RollupLadder, "_mark_epoch", real_mark)
+    monkeypatch.setattr(store, "mark_epoch", real_mark)
     proc(b, 3)  # replay: level 0 skipped, level 1 appended
     for pw in ladder.levels:
         assert _level_totals(ladder, pw) == _expected_totals(500), f"level {pw}"
-        assert ladder.committed_epoch(pw) == 3
+        assert _level_epoch(ladder, pw, ckpt) == 3
 
 
 def test_multi_epoch_stream_with_mid_crash_totals_exact(spark, tmp_path, monkeypatch):
@@ -161,9 +169,31 @@ def test_multi_epoch_stream_with_mid_crash_totals_exact(spark, tmp_path, monkeyp
         cnt, vmin, vmax, vsum = _level_totals(ladder, pw)
         assert cnt == 900 and vmin == 0.0 and vmax == 299.0
         assert vsum == 3.0 * sum(range(300))
-        assert ladder.committed_epoch(pw) == 2
+        assert _level_epoch(ladder, pw, str(tmp_path / "ckpt")) == 2
     # ladder-served stats match the raw hot data exactly
     served = ladder.aligned_windows("ca", 0, 1 << 40, 18).agg(
         F.sum("cnt").alias("c")
     ).collect()[0]["c"]
     assert served == 900
+
+
+def test_fresh_checkpoint_query_keeps_its_first_batches(spark, tmp_path):
+    """Epoch ids restart at 0 for every new query. A second query (fresh
+    checkpoint) into the same stream and ladder must not take its epoch
+    0 for a replay of the first query's epoch 0: neither the hot seq
+    probe nor the ladder watermarks may drop its batch."""
+    eng, ladder, proc1 = _mk(spark, tmp_path)
+    proc1(_batch(spark, 100, base=0), 0)
+    proc1(_batch(spark, 100, base=1_000_000), 1)
+    proc2 = make_batch_processor(eng, str(tmp_path / "ckpt2"), ladder=ladder)
+    proc2(_batch(spark, 100, base=2_000_000), 0)
+
+    assert eng.hot.count() == 300
+    for pw in ladder.levels:
+        assert _level_totals(ladder, pw)[0] == 300, f"level {pw}"
+    # each query's replay of its own epoch 0 is still skipped
+    proc2(_batch(spark, 100, base=2_000_000), 0)
+    proc1(_batch(spark, 100, base=0), 0)
+    assert eng.hot.count() == 300
+    for pw in ladder.levels:
+        assert _level_totals(ladder, pw)[0] == 300, f"level {pw}"
