@@ -46,7 +46,12 @@ import time as timelib
 import uuid as uuidlib
 from collections.abc import Iterable, Iterator, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from . import metadata as md
@@ -71,6 +76,15 @@ FLUSH_THRESHOLD = 32768        # pqm.go:29
 # version-slot claim generations: ver_<uuid>.g<slot>c<writer_nonce>
 _CLAIM_RE = re.compile(r"\.g(\d+)c[0-9a-f]+$")
 MAX_BUFFER_AGE_S = 8 * 3600.0  # pqm.go:29-35 MaxPQMBufferAge (8 h)
+# A commit condemns the hot generations older than the newest two and
+# reaps them on a later commit once condemned this long: the time a
+# reader that resolved one of them (a Spark plan over the hot table, a
+# multi-stream drain, a reader in another process) has to finish. The
+# service's own reads of a hot generation take tens of milliseconds on
+# the Arrow tier. The grace is paid on disk: about grace / (time between
+# commits) more generations, each the whole hot table, mostly hardlinks.
+# vacuum() and maintain() still reap at once.
+HOT_GC_GRACE_S = 2.0
 # Cold-table partition fanout (hash ring analog). Sized ~2x local cores so
 # the bucketed commit write saturates the box (measured 3.2x bulk_load vs
 # 16 buckets at 20M points); at 100 TB raise further — the right number is
@@ -412,15 +426,16 @@ class BTrDBEngine:
         clash = self._clash(uuid, collection, tags)
         if clash is not None:
             raise ValueError(clash)
-        row = self.spark.createDataFrame(
-            [(uuid, collection, tags, annotations, 1, None)], STREAMS_SCHEMA
-        )
+        kv = pa.map_(pa.string(), pa.string())
+        row = pa.table({
+            "uuid": [uuid], "collection": [collection],
+            "tags": pa.array([list(tags.items())], kv),
+            "annotations": pa.array([list(annotations.items())], kv),
+            "annotation_version": [1], "tombstoned": pa.array([None], pa.string()),
+        })
         store.append(
             self.store, self.base, "streams",
-            row.withColumn("meta_bucket", self._ubucket(F.col("uuid")))
-            .write.mode("append")
-            .partitionBy("meta_bucket")
-            .parquet,
+            store.arrow_parts({f"meta_bucket={self._bucket_of(uuid)}": row}, STREAMS_SCHEMA),
         )
         return uuid
 
@@ -434,8 +449,6 @@ class BTrDBEngine:
         the reference's uniqueness index (metaprovider.go:288-307); tag
         values are never null (create_stream refuses them). Python's
         code-point order of the keys is Spark's UTF-8 byte order."""
-        import pyarrow.dataset as ds
-
         cat = self._dataset("streams")
         if cat is None:
             return None
@@ -547,9 +560,10 @@ class BTrDBEngine:
         minor on hot. Any write, by this engine or another on the base dir,
         changes a key, which drops that half; keys are read BEFORE the
         tables, so a racing write can only make an answer newer than its
-        key. A hit runs no Spark job; a major miss is one union+groupBy
-        (_stream_versions_multi) refilling both halves; a minor-only miss,
-        what an Insert leaves, counts the stream's hot rows with Arrow."""
+        key. A hit runs no Spark job, and neither does a miss: the major
+        is the highest version of the stream's cold points and tombstones
+        (tier.committed_version) once stream_row shows the stream live,
+        and the minor counts the stream's hot rows, both read with Arrow."""
         sigs = [
             store.table_signature(self.store, self.base, n)
             for n in ("streams", "points", "deletes", "hot")
@@ -562,19 +576,23 @@ class BTrDBEngine:
             minors = {}
             self._minor_memo = (sigs[3], minors)
         if uuid not in majors:
-            majors[uuid], minors[uuid] = self._stream_versions_multi([uuid])[uuid]
-        elif uuid not in minors:
-            import pyarrow.dataset as ds
-
+            row = self.stream_row(uuid)
+            if row is None or row["tombstoned"] is not None:
+                raise NoSuchStream(f"no such stream: {uuid}")
+            v = tier.committed_version(self, uuid)
+            majors[uuid] = VERSION_CREATED if v is None else v
+        if uuid not in minors:
             hot = self._dataset("hot", f"uuid_bucket={self._bucket_of(uuid)}")
             minors[uuid] = 0 if hot is None else hot.count_rows(filter=ds.field("uuid") == uuid)
         return majors[uuid], minors[uuid]
 
     def stream_row(self, uuid: str):
-        """The stream's catalog Row (STREAMS_SCHEMA; a tombstoned stream's
-        row too), or None for a uuid never created. Memoized on the
-        streams table signature under stream_version's rule: a changed
-        signature drops the memo, and a hit runs no Spark job."""
+        """The stream's catalog Row (STREAMS_SCHEMA, maps as dicts, as
+        ``streams`` collects it; a tombstoned stream's row too), or None
+        for a uuid never created. Read with Arrow from the stream's
+        meta_bucket directory and memoized on the streams table signature
+        under stream_version's rule: a changed signature drops the memo.
+        Runs no Spark job."""
         sig = store.table_signature(self.store, self.base, "streams")
         memo_sig, memo = self._row_memo
         if memo_sig != sig:
@@ -582,9 +600,16 @@ class BTrDBEngine:
             self._row_memo = (sig, memo)
         hit = memo.get(uuid)
         if hit is None and sig is not None:
-            rows = self.streams.filter(F.col("uuid") == uuid).collect()
+            cat = self._dataset("streams", f"meta_bucket={self._bucket_of(uuid)}")
+            names = STREAMS_SCHEMA.fieldNames()
+            rows = [] if cat is None else cat.to_table(
+                columns=names, filter=ds.field("uuid") == uuid
+            ).to_pylist()
             if rows:
-                hit = memo[uuid] = rows[0]
+                r = rows[0]
+                for k in ("tags", "annotations"):
+                    r[k] = None if r[k] is None else dict(r[k])
+                hit = memo[uuid] = Row(**{k: r[k] for k in names})
         return hit
 
     def _buffered(self, uuid: str) -> bool:
@@ -629,25 +654,36 @@ class BTrDBEngine:
                 raise ValueError(f"time out of domain: {t}")
             if v != v or v in (float("inf"), float("-inf")):
                 raise ValueError(f"non-finite value at t={t}")
-        base_seq = minor
-        now_ms = int(timelib.time() * 1000)
-        rows = [
-            (uuid, int(t), float(v), base_seq + i, now_ms)
-            for i, (t, v) in enumerate(values)
-        ]
-        self.append_hot(self.spark.createDataFrame(rows, HOT_POINTS_SCHEMA))
-        minor += len(values)
+        n = len(values)
+        self.append_hot(pa.table({
+            "uuid": pa.array([uuid] * n, pa.string()),
+            "time": pa.array([int(t) for t, _ in values], pa.int64()),
+            "value": pa.array([float(v) for _, v in values], pa.float64()),
+            "seq": pa.array(np.arange(minor, minor + n, dtype=np.int64)),
+            "ingest_ts": pa.array(np.full(n, int(timelib.time() * 1000), np.int64)),
+        }))
+        minor += n
         if sync or minor >= self.flush_threshold:
             return self.flush(uuid)
         return major, minor
 
     @_locked
-    def append_hot(self, batch: DataFrame) -> None:
+    def append_hot(self, batch: "DataFrame | pa.Table") -> None:
         """Append (uuid, time, value, seq[, ingest_ts]) rows to the hot
         buffer, partitioned by uuid_bucket so a flush's clear touches 1/N
-        of the buffer. Used by insert() and the streaming ingest sink.
-        Rows without an ingest_ts get stamped with now (ms) — the age
-        clock for flush_aged()."""
+        of the buffer. insert() passes its RPC batch, the rows of one
+        stream, as a pyarrow Table with every HOT_POINTS_SCHEMA column,
+        written on the driver as one file in the stream's uuid_bucket; the
+        streaming ingest sink passes a Spark DataFrame, whose rows without
+        an ingest_ts get stamped with now (ms) — the age clock for
+        flush_aged()."""
+        if isinstance(batch, pa.Table):
+            uuids = pc.unique(batch["uuid"]).to_pylist()
+            if len(uuids) != 1:
+                raise ValueError(f"a Table batch holds one stream's rows, not {len(uuids)}")
+            part = {f"uuid_bucket={self._bucket_of(uuids[0])}": batch}
+            store.append(self.store, self.base, "hot", store.arrow_parts(part, HOT_POINTS_SCHEMA))
+            return
         if "ingest_ts" not in batch.columns:
             batch = batch.withColumn(
                 "ingest_ts", F.lit(int(timelib.time() * 1000)).cast("long")
@@ -712,17 +748,85 @@ class BTrDBEngine:
 
     @_locked
     def flush(self, uuid: str) -> tuple[int, int]:
-        """S4: commit the hot buffer into the cold points table at major+1."""
+        """S4: commit the hot buffer into the cold points table at major+1.
+
+        In order: claim the version, append the cold rows (and stamp the
+        points table), append every ladder level's partials, then
+        CAS-publish the hot table without the stream's rows. A buffer of
+        at most tier.ARROW_MAX_ROWS rows commits on the driver
+        (_flush_arrow, no Spark job). A larger one, one that shares hot
+        files of more rows than that with other streams (both only the
+        streaming sink's appends can build), or one holding a value
+        outside the ladder fold's domain commits with Spark
+        (_flush_spark). Either way the commit then condemns the hot generations older than the
+        one it superseded and reaps those condemned at least
+        HOT_GC_GRACE_S ago (StoreBackend.gc_generations)."""
         major, minor = self.stream_version(uuid)
         if minor == 0:
             return major, 0
         new_major = VERSION_FIRST_DATA if major == VERSION_CREATED else major + 1
         new_major = self._claim_version_slot(uuid, new_major)
+        if not self._flush_arrow(uuid, new_major, minor):
+            self._flush_spark(uuid, new_major)
+        self.store.gc_generations(self.base, "hot", keep=2, min_age_s=HOT_GC_GRACE_S)
+        return new_major, 0
+
+    def _flush_arrow(self, uuid: str, version: int, minor: int) -> bool:
+        """Commit the stream's buffer at ``version`` on the driver, or
+        return False (nothing written) when it holds more than
+        ARROW_MAX_ROWS rows, when the hot files that mix it with other
+        streams (a streaming sink's micro-batches) hold more than that in
+        all, or when it holds a value outside the ladder fold's domain.
+        Reads the stream's rows from the hot files of its uuid_bucket
+        whose uuid statistics admit it, writes them sorted by time as one
+        file per time_bucket directory, folds the ladder partials
+        (RollupLadder.ingest_batch of the Arrow batch), and drops the rows
+        from the hot table (store.drop_key, which rewrites each mixed file
+        whole on the driver)."""
+        if minor > tier.ARROW_MAX_ROWS:
+            return False
+        cur = self.store.resolve(self.base, "hot")
+        sub = f"uuid_bucket={self._bucket_of(uuid)}"
+        seen = store.key_files(os.path.join(cur, sub), "uuid", uuid)
+        mixed = [p for p, kind in seen.items() if kind == "mixed"]
+        if sum(pq.read_metadata(p).num_rows for p in mixed) > tier.ARROW_MAX_ROWS:
+            return False
+        mine = [p for p, kind in seen.items() if kind != "none"]
+        rows = ds.dataset(mine, format="parquet").to_table(
+            columns=["time", "value"], filter=ds.field("uuid") == uuid
+        ) if mine else None
+        n = 0 if rows is None else rows.num_rows
+        if n > tier.ARROW_MAX_ROWS or (
+            self.ladder is not None and n
+            and pc.max(pc.abs(rows["value"])).as_py() >= tier.MAX_FOLD_ABS
+        ):
+            return False
+        if n:
+            rows = rows.take(pc.sort_indices(rows["time"]))
+            batch = pa.table({
+                "uuid": pa.array([uuid] * n, pa.string()),
+                "time": rows["time"], "value": rows["value"],
+                "version": pa.array(np.full(n, version, np.int64)),
+            })
+            tb = batch["time"].to_numpy() >> self.time_partition_pw
+            cuts = [0, *(np.flatnonzero(np.diff(tb)) + 1), n]
+            store.append(self.store, self.base, "points", store.arrow_parts({
+                f"{sub}/time_bucket={tb[a]}": batch.slice(a, b - a)
+                for a, b in zip(cuts, cuts[1:])
+            }, POINTS_SCHEMA))
+            if self.ladder is not None:
+                self.ladder.ingest_batch(batch)
+        store.drop_key(self.store, self.base, "hot", cur, sub, seen, "uuid", uuid, HOT_POINTS_SCHEMA)
+        return True
+
+    def _flush_spark(self, uuid: str, version: int) -> None:
+        """Commit the stream's buffer at ``version`` with Spark: the cold
+        append, the ladder ingest and the hot clear, each a Spark job."""
         mine = self.hot.filter(F.col("uuid") == uuid)
         store.append(
             self.store, self.base, "points",
             mine.select(
-                "uuid", "time", "value", F.lit(new_major).cast("long").alias("version")
+                "uuid", "time", "value", F.lit(version).cast("long").alias("version")
             )
             .withColumn("uuid_bucket", self._ubucket(F.col("uuid")))
             .withColumn("time_bucket", self._tbucket(F.col("time")))
@@ -740,11 +844,10 @@ class BTrDBEngine:
             # ladder can also serve query-at-version
             self.ladder.ingest_batch(
                 mine.select(
-                    "uuid", "time", "value", F.lit(new_major).cast("long").alias("version")
+                    "uuid", "time", "value", F.lit(version).cast("long").alias("version")
                 )
             )
         self._clear_hot(uuid)
-        return new_major, 0
 
     @_locked
     def bulk_load(self, points: DataFrame, version: int | None = None) -> None:
@@ -1029,56 +1132,6 @@ class BTrDBEngine:
         directories without running a job."""
         return F.col("uuid_bucket").isin(*[self._ubucket(F.lit(u)) for u in uuids])
 
-    def _stream_versions_multi(self, uuids: list[str]) -> dict[str, tuple[int, int]]:
-        """Versions of a uuid set in ONE aggregate over the union of the
-        live catalog rows, committed versions (points, deletes) and hot
-        rows — not one job per table per stream. Tables with no parquet
-        yet are left out of the union."""
-        ulist = list(dict.fromkeys(uuids))
-        want = F.col("uuid").isin(ulist)
-        none = F.lit(None).cast("long")
-        parts = [
-            md.live(self.streams)
-            .filter(want)
-            .select("uuid", F.lit(1).alias("live"), none.alias("version"), F.lit(0).alias("hot"))
-        ]
-        pts = self._scan_memo("points")
-        if pts is not None:
-            pts = pts.filter(self._in_buckets(ulist))
-        for df, version, hot in (
-            (pts, F.col("version"), 0),
-            (self._scan_memo("deletes"), F.col("version"), 0),
-            (self._scan_memo("hot"), none, 1),
-        ):
-            if df is not None:
-                parts.append(
-                    df.filter(want).select(
-                        "uuid", F.lit(0).alias("live"), version.alias("version"),
-                        F.lit(hot).alias("hot"),
-                    )
-                )
-        rows = {
-            r["uuid"]: r
-            for r in functools.reduce(DataFrame.unionByName, parts)
-            .groupBy("uuid")
-            .agg(
-                F.max("live").alias("live"),
-                F.max("version").alias("v"),
-                F.sum("hot").alias("n"),
-            )
-            .collect()
-        }
-        for u in ulist:
-            if u not in rows or not rows[u]["live"]:
-                raise NoSuchStream(f"no such stream: {u}")
-        return {
-            u: (
-                rows[u]["v"] if rows[u]["v"] is not None else VERSION_CREATED,
-                int(rows[u]["n"]),
-            )
-            for u in ulist
-        }
-
     @_locked
     def delete_ranges(self, ranges: list[tuple[str, int, int]]) -> dict[str, int]:
         """Batched V3 (verdict r7 ask #2): commit a batch of (uuid, start,
@@ -1103,7 +1156,7 @@ class BTrDBEngine:
         if not ranges:
             return {}
         uuids = list(dict.fromkeys(u for u, _, _ in ranges))
-        vers = self._stream_versions_multi(uuids)
+        vers = {u: self.stream_version(u) for u in uuids}
         versions: dict[str, int] = {}
         for u in uuids:
             major, minor = vers[u]
@@ -1274,8 +1327,6 @@ class BTrDBEngine:
     def _delete_versions(self, uuid: str) -> list[int]:
         """Distinct tombstone versions of one stream, read with Arrow from
         the deletes table (no Spark job)."""
-        import pyarrow.dataset as ds
-
         dels = self._dataset("deletes")
         if dels is None:
             return []

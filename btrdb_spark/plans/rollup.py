@@ -37,12 +37,13 @@ buckets per stream — still 6 orders of magnitude below raw.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import store as store_mod
 from ..functions.timeops import bucket_start, floor_div
-from ..schemas import PWFACTOR
+from ..schemas import LEVEL_SCHEMA, PWFACTOR
 
 LEVELS = (20, 26, 32, 38, 44, 50, 56)
 DEC = "decimal(38,6)"
@@ -441,11 +442,7 @@ class RollupLadder:
         column; snapshot rows live in the rebase sidecar)."""
         df = self._read_memo(self._name(pw))
         if df is None:
-            return self.spark.createDataFrame(
-                [],
-                f"uuid string, bucket_start long, version long, cnt long, "
-                f"vmin double, vmax double, vsum {DEC}",
-            )
+            return self.spark.createDataFrame([], LEVEL_SCHEMA)
         return df
 
     def rebase_level(self, pw: int) -> DataFrame | None:
@@ -507,7 +504,21 @@ class RollupLadder:
         window is a crash between a level's parquet job commit and its
         watermark flip (one metadata op later); closing it entirely
         takes a transactional table format, same note as the hot sink.
+
+        A pyarrow Table (the driver commit of one stream's buffer, with a
+        ``version`` column and no epoch) is folded on the driver instead
+        (tier.level_partials) and each level's partials are written there
+        as one file, with no Spark job.
         """
+        if isinstance(batch_points, pa.Table):
+            from .. import tier
+
+            for pw, part in tier.level_partials(batch_points, self.levels, self.spark).items():
+                store_mod.append(
+                    self.store, self.base, self._name(pw),
+                    store_mod.arrow_parts({"": part}, LEVEL_SCHEMA),
+                )
+            return
         if "version" not in batch_points.columns:
             batch_points = batch_points.withColumn(
                 "version", F.lit(1 << 62).cast("long")

@@ -12,6 +12,7 @@ Data model mirrors the reference (SURVEY.md §1):
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    DecimalType,
     DoubleType,
     LongType,
     MapType,
@@ -74,6 +75,20 @@ DELETES_SCHEMA = StructType(
         StructField("start", LongType(), False),  # inclusive
         StructField("end", LongType(), False),    # exclusive
         StructField("version", LongType(), False),
+    ]
+)
+
+# One row of a rollup-ladder level (plans/rollup.py): the partials of one
+# (uuid, bucket, commit version)
+LEVEL_SCHEMA = StructType(
+    [
+        StructField("uuid", StringType(), False),
+        StructField("bucket_start", LongType(), False),
+        StructField("version", LongType(), False),
+        StructField("cnt", LongType(), False),
+        StructField("vmin", DoubleType(), False),
+        StructField("vmax", DoubleType(), False),
+        StructField("vsum", DecimalType(38, 6), False),
     ]
 )
 

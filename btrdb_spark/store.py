@@ -705,11 +705,129 @@ def read_stamp(base: str, name: str) -> str | None:
 def append(backend: StoreBackend, base: str, name: str, write) -> None:
     """Append a batch into table ``name``'s live generation and bump its
     stamp: ``write(path)`` writes the batch under the live generation
-    directory, created and published empty on first use (e.g. a bound
-    ``df.write.mode("append").parquet``). The one append of the store:
-    the stamp contract of bump_stamp holds for every caller."""
+    directory, created and published empty on first use (a bound
+    ``df.write.mode("append").parquet`` for a Spark batch, ``arrow_parts``
+    for a batch on the driver). The one append of the store: the stamp
+    contract of bump_stamp holds for every caller."""
     write(backend.current_dir(base, name, create=True))
     bump_stamp(base, name)
+
+
+# ---- the driver's parquet writer ----
+#
+# Batches bounded by the RPC contract (an Insert, a flush of one stream's
+# buffer, a catalog row) are written on the driver with pyarrow instead of
+# a Spark job. A file is written in full under a ``_``-prefixed name, which
+# every reader skips, and renamed into place, so no reader sees a partial
+# file. Its footer carries the Spark schema under Spark's own key (as
+# Arrow schema metadata, which pyarrow stores in the footer's key-value
+# pairs), so memo_scan reads it without an inference job. The settings
+# keep the files as small as Spark's or smaller: zstd at Spark's level 3,
+# dictionaries only where values repeat (uuid, version, ingest_ts), and
+# delta encoding on the int64 columns that run in order or nearly so.
+
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_DICTIONARY = ("uuid", "version", "ingest_ts")
+_DELTA = ("time", "seq", "bucket_start")
+
+
+def write_parquet(directory: str, table, schema) -> None:
+    """Write the pyarrow ``table`` as one parquet file in ``directory``,
+    with the columns and types of the Spark StructType ``schema``, under
+    the settings above. The file appears whole or not at all."""
+    import uuid as _uuid
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = table.select(schema.fieldNames()).cast(to_arrow_schema(schema))
+    table = table.replace_schema_metadata({SPARK_ROW_METADATA: schema.json().encode()})
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{_uuid.uuid4().hex}.zstd.parquet"
+    tmp = os.path.join(directory, f"_{name}")
+    pq.write_table(
+        table, tmp, compression="zstd", compression_level=3,
+        use_dictionary=[c for c in _DICTIONARY if c in table.column_names],
+        column_encoding={c: "DELTA_BINARY_PACKED" for c in _DELTA if c in table.column_names},
+    )
+    os.rename(tmp, os.path.join(directory, name))
+
+
+def arrow_parts(parts: dict, schema):
+    """The ``write`` of an append whose batch is on the driver: ``parts``
+    maps a partition subdirectory (``"uuid_bucket=3/time_bucket=9"``, or
+    ``""`` for an unpartitioned table) to the pyarrow Table written there
+    as one file (write_parquet)."""
+
+    def write(path: str) -> None:
+        for sub, table in parts.items():
+            write_parquet(os.path.join(path, sub), table, schema)
+
+    return write
+
+
+def key_files(directory: str, column: str, key: str) -> dict[str, str]:
+    """How each parquet file under ``directory`` that Spark would read
+    (_parquet_files) holds rows with ``column == key``, from its footer
+    statistics: ``"none"`` when every row group's min/max excludes the key, ``"only"``
+    when every row group's min and max equal it and no value is null,
+    else ``"mixed"`` (also when statistics are missing). Keyed by path."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, str] = {}
+    for path in sorted(os.path.join(r, f) for r, f in _parquet_files(directory)):
+        meta = pq.ParquetFile(path).metadata
+        idx = meta.schema.names.index(column)
+        kinds = set()
+        for i in range(meta.num_row_groups):
+            col = meta.row_group(i).column(idx)
+            st = col.statistics
+            if col.num_values == 0:
+                continue
+            if st is None or not st.has_min_max:
+                kinds.add("mixed")
+            elif st.max < key or st.min > key:
+                kinds.add("none")
+            elif st.min == st.max == key and not st.null_count:
+                kinds.add("only")
+            else:
+                kinds.add("mixed")
+        out[path] = kinds.pop() if len(kinds) == 1 else ("mixed" if kinds else "none")
+    return out
+
+
+def drop_key(
+    backend: StoreBackend, base: str, name: str, cur: str, sub: str,
+    seen: dict[str, str], column: str, key: str, schema,
+) -> None:
+    """Publish a new generation of table ``name`` built from its live
+    generation ``cur``, in which partition directory ``sub`` no longer
+    holds the rows with ``column == key`` of the files in ``seen`` (what
+    key_files said of them when the caller read those rows). Every other
+    partition directory and every file that holds no such row is
+    hardlinked; a file that holds only such rows is left out; a file that
+    mixes them with others is rewritten without them (write_parquet, as
+    ``schema``). A file in ``sub`` that is not in ``seen`` arrived after
+    the caller's read and is carried unchanged. CAS publish against
+    ``cur``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    gen = backend.new_generation(base, name)
+    backend.link_unchanged_partitions(cur, gen, exclude_subdir=sub)
+    out = os.path.join(gen, sub)
+    os.makedirs(out, exist_ok=True)
+    for root, fn in _parquet_files(os.path.join(cur, sub)):
+        path = os.path.join(root, fn)
+        kind = seen.get(path, "none")
+        if kind == "none":
+            os.link(path, os.path.join(out, fn))
+        elif kind == "mixed":
+            rest = pq.ParquetFile(path).read()
+            rest = rest.filter(pc.not_equal(rest[column], key))
+            if rest.num_rows:
+                write_parquet(out, rest, schema)
+    backend.publish(base, name, gen, expected=cur)
 
 
 def table_signature(backend: StoreBackend, base: str, name: str) -> tuple | None:

@@ -1,10 +1,13 @@
-"""The driver's Arrow tier: single-stream reads answered on the driver.
+"""The driver's Arrow tier: single-stream work done on the driver.
 
 BTrDBEngine answers RawValues, AlignedWindows, Windows and Nearest of one
-stream here, with pyarrow over the store's parquet files and no Spark job.
-Every answer equals the Spark plan it stands in for exactly
-(tests/test_raw_tier.py, tests/test_arrow_tier.py and tests/test_tier.py
-compare them). The readers share three pieces:
+stream here, and reads a stream's committed version, with pyarrow over the
+store's parquet files and no Spark job. Every answer equals the Spark plan
+it stands in for exactly (tests/test_raw_tier.py, tests/test_arrow_tier.py
+and tests/test_tier.py compare them). A commit of one stream's buffer
+computes its ladder partials here too (level_partials; compared with the
+Spark ingest by tests/test_driver_write.py). The readers share three
+pieces:
 
 - the slice reader (``_Slice``): one stream's cold points from its
   uuid_bucket/time_bucket directories, its hot rows at latest, and its
@@ -26,6 +29,7 @@ from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from . import store as store_mod
@@ -183,6 +187,23 @@ class _Slice:
                 yield batch
 
 
+def committed_version(eng, uuid: str) -> int | None:
+    """The highest version among the stream's cold points (its uuid_bucket
+    directory) and its tombstones, or None when it has neither: the major
+    version of stream_version, without the catalog check."""
+    f = ds.field("uuid") == uuid
+    found = [
+        pc.max(d.to_table(columns=["version"], filter=f)["version"]).as_py()
+        for d in (
+            eng._dataset("points", f"uuid_bucket={eng._bucket_of(uuid)}", _TIME_BUCKET),
+            eng._dataset("deletes"),
+        )
+        if d is not None
+    ]
+    found = [v for v in found if v is not None]
+    return max(found) if found else None
+
+
 def _table(batches) -> pa.Table:
     """The batches as one ``(time, value)`` table."""
     return pa.concat_tables(
@@ -283,6 +304,34 @@ def _units(key: np.ndarray, values: np.ndarray, spark) -> pa.Table:
         "vmax": pa.array(values), "vsum": dec6(values, spark),
     })
     return _partials(key, stats)
+
+
+def level_partials(batch: pa.Table, levels, spark) -> dict[int, pa.Table]:
+    """Every ladder level's partials of a batch of points ``(uuid, time,
+    value, version)``: for each pw in ``levels`` a Table of LEVEL_SCHEMA's
+    columns, one row per (uuid, bucket_start, version) with bucket_start =
+    ``(time >> pw) << pw``, sorted. Row for row what the Spark ingest
+    appends (rollup_points at the finest level, then coarsen level to
+    level): dec6 is computed once per batch and every level's exact
+    decimal128 sum groups the same unit partials. Values must be under
+    MAX_FOLD_ABS, the domain of the Spark ingest's long sums."""
+    t = batch["time"].to_numpy()
+    v = batch["value"].to_numpy()
+    units = pa.table({
+        "uuid": batch["uuid"], "version": batch["version"],
+        "cnt": np.ones(len(t), np.int64), "vmin": v, "vmax": v, "vsum": dec6(v, spark),
+    })
+    keys = ["uuid", "bucket_start", "version"]
+    out = {}
+    for pw in levels:
+        g = units.append_column("bucket_start", pa.array((t >> pw) << pw)).group_by(keys).aggregate(
+            [("cnt", "sum"), ("vmin", "min"), ("vmax", "max"), ("vsum", "sum")]
+        )
+        out[pw] = pa.table(
+            [g[k] for k in keys] + [g["cnt_sum"], g["vmin_min"], g["vmax_max"], g["vsum_sum"]],
+            names=keys + _STATS,
+        ).sort_by([(k, "ascending") for k in keys])
+    return out
 
 
 def _fold(parts: list[pa.Table]):

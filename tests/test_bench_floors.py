@@ -10,9 +10,11 @@ for the drifted rows. Spark-free structural checks, always run.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
@@ -30,7 +32,7 @@ PROBE_KEYS = {
 
 
 def _floors() -> dict:
-    with open("/root/repo/bench_floors.json") as f:
+    with open(os.path.join(ROOT, "bench_floors.json")) as f:
         return json.load(f)
 
 

@@ -12,9 +12,11 @@ the driver's 2000-char stdout tail window.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import compact_tail
 
@@ -22,7 +24,7 @@ from bench import compact_tail
 def _realistic_out() -> dict:
     # the committed full artifact is the realistic shape: 201 queries
     # with real registry names, full throughput block
-    with open("/root/repo/bench_full.json") as f:
+    with open(os.path.join(ROOT, "bench_full.json")) as f:
         return json.load(f)
 
 

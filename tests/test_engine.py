@@ -185,6 +185,44 @@ def test_aligned_windows_collection(spark, tmp_path):
     assert {r["uuid"] for r in kw_only.collect()} == {us[1], us[3]}
 
 
+def test_created_row_reads_back_equal_and_runs_no_job(engine, spark):
+    """create_stream writes its catalog row on the driver, with no Spark
+    job, and the row reads back equal through the Spark catalog read
+    (tags and annotations as Spark maps), stream_row and _clash, next to a
+    stream whose row Spark rewrote (set_annotations)."""
+    from pyspark.sql.types import MapType
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    made = {
+        "r-ü": ("campus/ü", {"b": "ß", "a.b": "1"}, {"note": "ünïcode", "empty": ""}),
+        "r-bare": ("campus/bare", {}, {}),
+        "r-set": ("campus/set", {"k": "v"}, {"a": "1"}),
+    }
+    for u, (coll, tags, anns) in made.items():
+        j0 = dag.nextJobId()
+        assert engine.create_stream(coll, tags=tags, annotations=anns, uuid=u) == u
+        assert dag.nextJobId() == j0, u
+    engine.set_annotations("r-set", 1, {"a": None, "b": "2"})
+    want = {
+        "r-ü": ("campus/ü", {"b": "ß", "a.b": "1"}, {"note": "ünïcode", "empty": ""}, 1),
+        "r-bare": ("campus/bare", {}, {}, 1),
+        "r-set": ("campus/set", {"k": "v"}, {"b": "2"}, 2),
+    }
+    schema = {f.name: f.dataType for f in engine.streams.schema.fields}
+    assert isinstance(schema["tags"], MapType) and isinstance(schema["annotations"], MapType)
+
+    def fields(r):
+        return (r["collection"], dict(r["tags"]), dict(r["annotations"]), r["annotation_version"])
+
+    assert {r["uuid"]: fields(r) for r in engine.streams.collect()} == want
+    fresh = BTrDBEngine(spark, engine.base)
+    for u, row in want.items():
+        assert fields(fresh.stream_row(u)) == row and fresh.stream_row(u)["tombstoned"] is None
+        assert fresh._clash(u, "elsewhere", {}).startswith("uuid")
+        assert fresh._clash("new", row[0], dict(reversed(list(row[1].items())))).startswith("duplicate")
+        assert fresh._clash("new", row[0], {**row[1], "x": "y"}) is None
+
+
 def test_create_clash_check_equals_spark_and_runs_no_job(engine, spark):
     """create_stream's clash check (one Arrow read of the catalog) gives
     the answer of the Spark check it replaced, with no Spark job: a uuid

@@ -12,6 +12,7 @@ import time
 
 from pyspark.sql import functions as F
 
+import btrdb_spark.engine as engine_mod
 from btrdb_spark.engine import BTrDBEngine
 from btrdb_spark.streaming.ingest import attach_ingest
 
@@ -29,16 +30,21 @@ def test_maintain_reaps_generations_and_keep_window_reader_survives(spark, tmp_p
     eng = BTrDBEngine(spark, base, flush_threshold=10_000, ladder=True)
     u = eng.create_stream("gc/a")
     # every sync insert = one flush = one new hot generation (clear is a
-    # generation rewrite); generations pile up like a long-running ingest
-    for b in range(6):
+    # generation rewrite); each flush condemns the hot generations older
+    # than the one it superseded and reaps them only HOT_GC_GRACE_S later,
+    # so six quick flushes leave them condemned, not yet reaped
+    for b in range(5):
         eng.insert(u, [(b * 1000 + i, float(i)) for i in range(10)], sync=True)
-    before = _gens(base, "hot")
-    assert len(before) >= 6
+    eng.insert(u, [(5000 + i, float(i)) for i in range(10)])
     expect = [tuple(r) for r in eng.raw_values(u, 0, 10**9).collect()]
 
-    # a reader resolved BEFORE maintenance, against the live generation
-    # (inside any keep>=1 window)
+    # a reader resolved BEFORE the last flush and maintenance, against the
+    # live generation (inside any keep>=1 window)
     reader = eng.raw_values(u, 0, 10**9)
+    eng.flush(u)
+    before = sorted(_gens(base, "hot"), key=lambda g: int(g.rsplit(".g", 1)[1]))
+    assert len(before) >= 3
+    assert all(os.path.exists(os.path.join(base, g, ".condemned")) for g in before[:-2])
 
     out = eng.maintain(keep=2)
     assert out["reaped"].get("hot", 0) >= 1
@@ -54,6 +60,37 @@ def test_maintain_reaps_generations_and_keep_window_reader_survives(spark, tmp_p
     assert out2["compacted"]
     assert [tuple(r) for r in eng.raw_values(u, 0, 10**9).collect()] == expect
     assert len(_gens(base, "points")) <= 2
+
+
+def test_reader_survives_two_commits_of_another_stream(spark, tmp_path):
+    """A DataFrame planned over the hot table still collects after two
+    commits of another stream: the generation it resolved is condemned by
+    the second commit and reaped only HOT_GC_GRACE_S later."""
+    base = str(tmp_path / "db")
+    eng = BTrDBEngine(spark, base, flush_threshold=10_000)
+    a, b = eng.create_stream("gc/a"), eng.create_stream("gc/b")
+    eng.insert(a, [(i, float(i)) for i in range(10)])
+    expect = [tuple(r) for r in eng.raw_values(a, 0, 10**9).collect()]
+    reader = eng.raw_values(a, 0, 10**9)
+    for k in range(2):
+        eng.insert(b, [(k * 100 + i, float(i)) for i in range(10)], sync=True)
+    assert [tuple(r) for r in reader.collect()] == expect
+
+
+def test_commit_reaps_condemned_hot_generations(spark, tmp_path, monkeypatch):
+    """With no grace, a commit reaps what the previous commit condemned:
+    the hot table holds at most the newest two generations plus the one
+    the last commit condemned, however many commits ran."""
+    monkeypatch.setattr(engine_mod, "HOT_GC_GRACE_S", 0.0)
+    base = str(tmp_path / "db")
+    eng = BTrDBEngine(spark, base, flush_threshold=10_000)
+    u = eng.create_stream("gc/a")
+    for b in range(6):
+        eng.insert(u, [(b * 1000 + i, float(i)) for i in range(10)], sync=True)
+        assert len(_gens(base, "hot")) <= 3
+    assert [r["time"] for r in eng.raw_values_rows(u, 0, 10**9)] == [
+        b * 1000 + i for b in range(6) for i in range(10)
+    ]
 
 
 def test_streaming_trigger_runs_interval_gc(spark, tmp_path):

@@ -170,6 +170,50 @@ def test_rpc_job_counts(spark, tmp_path):
     assert n == 0 and sum(tbl["cnt"].to_pylist()) == 3001
 
 
+def test_write_rpcs_and_the_reads_after_a_commit_run_no_job(spark, tmp_path):
+    """Create, an Insert, an Insert that crosses the flush threshold (the
+    commit: cold points, ladder partials and hot clear written on the
+    driver), and the RawValues, AlignedWindows and StreamInfo right after
+    that commit run no Spark job, for each of two streams, and answer what
+    was written."""
+    from btrdb_spark.service import BTrDBHttpClient, BTrDBService
+
+    eng = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=2000, ladder=True)
+    svc = BTrDBService(eng)
+    cli = BTrDBHttpClient("127.0.0.1", svc.start())
+    try:
+        uuids = []
+        for i in range(2):
+            n, (meta, _rows) = _jobs(spark, lambda: cli.rows("Create", collection=f"w/{i}"))
+            assert n == 0
+            uuids.append(meta["uuid"])
+        for k, u in enumerate(uuids):
+            pts = [(i << 20, float((i + k) % 13)) for i in range(3000)]
+            major = None
+            for lo, hi, sync in ((0, 1000, True), (1000, 2500, False), (2500, 3000, False)):
+                req = dict(uuid=u, values=[[t, v] for t, v in pts[lo:hi]], sync=sync)
+                n, (meta, _rows) = _jobs(spark, lambda: cli.rows("Insert", **req))
+                assert n == 0, (u, lo)
+                if hi == 2500:  # buffered: 1500 rows under the threshold
+                    assert (meta["versionMajor"], meta["versionMinor"]) == (major, 1500)
+                major, minor = meta["versionMajor"], meta["versionMinor"]
+            assert minor == 0  # the last Insert crossed the threshold and committed
+            raw = dict(uuid=u, start=0, end=1 << 40)
+            n, (meta, rows) = _jobs(spark, lambda: cli.rows("RawValues", **raw))
+            assert n == 0 and meta["versionMajor"] == major
+            assert [(r["time"], r["value"]) for r in rows] == pts
+            stat = dict(uuid=u, start=0, end=1 << 40, pointWidth=26)
+            n, (meta, rows) = _jobs(spark, lambda: cli.rows("AlignedWindows", **stat))
+            assert n == 0 and meta["versionMajor"] == major
+            assert [r["count"] for r in rows] == [64] * 46 + [3000 - 64 * 46]
+            n, (meta, _rows) = _jobs(spark, lambda: cli.rows("StreamInfo", uuid=u))
+            assert n == 0
+            assert (meta["collection"], meta["versionMajor"], meta["versionMinor"]) == (
+                f"w/{k}", major, 0)
+    finally:
+        svc.stop()
+
+
 def test_routing_gate_runs_no_job_on_a_store_with_tombstones(spark, tmp_path):
     """Once stream A has a delete, warm AlignedWindows and Windows RPCs of
     the delete-free stream B still run no Spark job, and the routing

@@ -22,7 +22,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
@@ -35,7 +36,7 @@ def test_every_query_is_callable_and_unique():
     # source by re-parsing the literal keys
     import re
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(ROOT, "__spark_entry__.py")).read()
     m = re.search(r"def queries\(\).*?base = \{(.*?)\n    \}", src, re.S)
     keys = re.findall(r'"([a-z0-9_]+)":', m.group(1))
     assert len(keys) == len(set(keys)), "duplicate key in queries() literal"
@@ -73,9 +74,9 @@ def test_never_certified_entries_lead_the_gate_order():
     # full oracle in r9); its historical rows+schema rows still count
     rows_only = {"image_phash_pairs"}
     certified = set()
-    for fn in sorted(os.listdir("/root/repo")):
+    for fn in sorted(os.listdir(ROOT)):
         if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            d = json.load(open(os.path.join("/root/repo", fn)))
+            d = json.load(open(os.path.join(ROOT, fn)))
             for k, v in d.items():
                 if (
                     v.get("rows_match")
@@ -106,7 +107,7 @@ def test_local_gate_comparator_is_dtype_strict():
     and per-column-dtype."""
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import check_correctness as cc
 
     spark_df = pd.DataFrame({"n": [123, 4]})  # int64
@@ -127,7 +128,7 @@ def test_local_gate_comparator_is_dtype_strict():
 def test_full_registry_oracle_gate():
     proc = subprocess.run(
         [sys.executable, "tools/check_correctness.py"],
-        cwd="/root/repo",
+        cwd=ROOT,
         capture_output=True,
         text=True,
         timeout=1200,
