@@ -50,7 +50,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,6 +60,7 @@ from .operators import windows as win_ops
 from .operators import changes as chg_ops
 from .schemas import (
     DELETES_SCHEMA,
+    GC_PENDING_SCHEMA,
     HOT_POINTS_SCHEMA,
     MAX_INSERT_TIME,
     MIN_TIME,
@@ -187,6 +187,20 @@ def _drain(df: DataFrame, cols: list[str]) -> Iterator[dict]:
     return rows()
 
 
+def _bounded(batches, limit: int) -> Iterator[pa.Table]:
+    """Consecutive record batches of at most ``limit`` rows each, joined
+    into Tables of at most ``limit`` rows each."""
+    part, n = [], 0
+    for b in batches:
+        if part and n + b.num_rows > limit:
+            yield pa.Table.from_batches(part)
+            part, n = [], 0
+        part.append(b)
+        n += b.num_rows
+    if n:
+        yield pa.Table.from_batches(part)
+
+
 def _locked(fn):
     """Serialize a mutating engine method on the per-engine write lock
     (see __init__) — required once a MaintenanceLoop runs off-thread."""
@@ -226,8 +240,8 @@ class BTrDBEngine:
         # off-thread maintenance pass can never snapshot-then-republish a
         # table while a foreground write lands in the superseded
         # generation. Reads never take it — the generation-pointer MVCC
-        # keeps them consistent lock-free. Re-entrant: flush (locked)
-        # calls _clear_hot (locked).
+        # keeps them consistent lock-free. Re-entrant: insert and
+        # delete_ranges (locked) call flush (locked).
         self._write_lock = threading.RLock()
         # query-path DataFrame memo: see _scan_memo
         self._df_memo: dict[str, tuple[tuple, DataFrame]] = {}
@@ -654,6 +668,10 @@ class BTrDBEngine:
                 raise ValueError(f"time out of domain: {t}")
             if v != v or v in (float("inf"), float("-inf")):
                 raise ValueError(f"non-finite value at t={t}")
+            if self.ladder is not None and abs(v) >= 1e32:
+                # past decimal(38,6), the ladder's sums: every later
+                # commit of the buffer would fail (tier.dec6 raises)
+                raise ValueError(f"|value| >= 1e32 at t={t} overflows the ladder's sums")
         n = len(values)
         self.append_hot(pa.table({
             "uuid": pa.array([uuid] * n, pa.string()),
@@ -748,106 +766,57 @@ class BTrDBEngine:
 
     @_locked
     def flush(self, uuid: str) -> tuple[int, int]:
-        """S4: commit the hot buffer into the cold points table at major+1.
+        """S4: commit the hot buffer into the cold points table at major+1,
+        on the driver, with no Spark job.
 
-        In order: claim the version, append the cold rows (and stamp the
-        points table), append every ladder level's partials, then
-        CAS-publish the hot table without the stream's rows. A buffer of
-        at most tier.ARROW_MAX_ROWS rows commits on the driver
-        (_flush_arrow, no Spark job). A larger one, one that shares hot
-        files of more rows than that with other streams (both only the
-        streaming sink's appends can build), or one holding a value
-        outside the ladder fold's domain commits with Spark
-        (_flush_spark). Either way the commit then condemns the hot generations older than the
-        one it superseded and reaps those condemned at least
+        Claims the version, then reads the stream's rows from the hot files
+        of its uuid_bucket whose uuid statistics admit it (store.key_files),
+        in batches of at most tier.ARROW_MAX_ROWS rows. For each batch it
+        first folds every ladder level's partials (tier.level_partials), so
+        a value the fold refuses fails the batch before any of its files is
+        written, then appends the batch sorted by time as one file per
+        time_bucket (stamping the points table) and one partials file per
+        level. Partials are additive: a buffer of several batches leaves
+        several rows per (uuid, bucket_start, version), which every reader
+        combines. Last, it CAS-publishes the hot table without the stream's
+        rows (store.drop_key), then condemns the hot generations older than
+        the one it superseded and reaps those condemned at least
         HOT_GC_GRACE_S ago (StoreBackend.gc_generations)."""
         major, minor = self.stream_version(uuid)
         if minor == 0:
             return major, 0
         new_major = VERSION_FIRST_DATA if major == VERSION_CREATED else major + 1
         new_major = self._claim_version_slot(uuid, new_major)
-        if not self._flush_arrow(uuid, new_major, minor):
-            self._flush_spark(uuid, new_major)
-        self.store.gc_generations(self.base, "hot", keep=2, min_age_s=HOT_GC_GRACE_S)
-        return new_major, 0
-
-    def _flush_arrow(self, uuid: str, version: int, minor: int) -> bool:
-        """Commit the stream's buffer at ``version`` on the driver, or
-        return False (nothing written) when it holds more than
-        ARROW_MAX_ROWS rows, when the hot files that mix it with other
-        streams (a streaming sink's micro-batches) hold more than that in
-        all, or when it holds a value outside the ladder fold's domain.
-        Reads the stream's rows from the hot files of its uuid_bucket
-        whose uuid statistics admit it, writes them sorted by time as one
-        file per time_bucket directory, folds the ladder partials
-        (RollupLadder.ingest_batch of the Arrow batch), and drops the rows
-        from the hot table (store.drop_key, which rewrites each mixed file
-        whole on the driver)."""
-        if minor > tier.ARROW_MAX_ROWS:
-            return False
         cur = self.store.resolve(self.base, "hot")
         sub = f"uuid_bucket={self._bucket_of(uuid)}"
         seen = store.key_files(os.path.join(cur, sub), "uuid", uuid)
-        mixed = [p for p, kind in seen.items() if kind == "mixed"]
-        if sum(pq.read_metadata(p).num_rows for p in mixed) > tier.ARROW_MAX_ROWS:
-            return False
         mine = [p for p, kind in seen.items() if kind != "none"]
-        rows = ds.dataset(mine, format="parquet").to_table(
-            columns=["time", "value"], filter=ds.field("uuid") == uuid
-        ) if mine else None
-        n = 0 if rows is None else rows.num_rows
-        if n > tier.ARROW_MAX_ROWS or (
-            self.ladder is not None and n
-            and pc.max(pc.abs(rows["value"])).as_py() >= tier.MAX_FOLD_ABS
-        ):
-            return False
-        if n:
+        scan = ds.dataset(mine, format="parquet").scanner(
+            columns=["time", "value"], filter=ds.field("uuid") == uuid,
+            batch_size=tier.ARROW_MAX_ROWS,
+        ).to_batches() if mine else ()
+        for rows in _bounded(scan, tier.ARROW_MAX_ROWS):
+            n = rows.num_rows
             rows = rows.take(pc.sort_indices(rows["time"]))
             batch = pa.table({
                 "uuid": pa.array([uuid] * n, pa.string()),
                 "time": rows["time"], "value": rows["value"],
-                "version": pa.array(np.full(n, version, np.int64)),
+                "version": pa.array(np.full(n, new_major, np.int64)),
             })
+            partials = {} if self.ladder is None else tier.level_partials(
+                batch, self.ladder.levels, self.spark
+            )
             tb = batch["time"].to_numpy() >> self.time_partition_pw
             cuts = [0, *(np.flatnonzero(np.diff(tb)) + 1), n]
             store.append(self.store, self.base, "points", store.arrow_parts({
                 f"{sub}/time_bucket={tb[a]}": batch.slice(a, b - a)
                 for a, b in zip(cuts, cuts[1:])
             }, POINTS_SCHEMA))
-            if self.ladder is not None:
-                self.ladder.ingest_batch(batch)
+            if partials:
+                self.ladder.append_partials(partials)
         store.drop_key(self.store, self.base, "hot", cur, sub, seen, "uuid", uuid, HOT_POINTS_SCHEMA)
-        return True
-
-    def _flush_spark(self, uuid: str, version: int) -> None:
-        """Commit the stream's buffer at ``version`` with Spark: the cold
-        append, the ladder ingest and the hot clear, each a Spark job."""
-        mine = self.hot.filter(F.col("uuid") == uuid)
-        store.append(
-            self.store, self.base, "points",
-            mine.select(
-                "uuid", "time", "value", F.lit(version).cast("long").alias("version")
-            )
-            .withColumn("uuid_bucket", self._ubucket(F.col("uuid")))
-            .withColumn("time_bucket", self._tbucket(F.col("time")))
-            # batch sorted before commit (qtree.go:623). Partition columns
-            # lead the sort so the file writer's required ordering is
-            # already satisfied — no second sort materializes the batch.
-            .sortWithinPartitions("uuid_bucket", "time_bucket", "time")
-            .write.mode("append")
-            .partitionBy("uuid_bucket", "time_bucket")
-            .parquet,
-        )
-        if self.ladder is not None:
-            # incremental rollup maintenance (A4) — O(batch) partial append,
-            # stamped with the commit version (CGeneration analog) so the
-            # ladder can also serve query-at-version
-            self.ladder.ingest_batch(
-                mine.select(
-                    "uuid", "time", "value", F.lit(version).cast("long").alias("version")
-                )
-            )
-        self._clear_hot(uuid)
+        self.store.gc_generations(self.base, "hot", keep=2, min_age_s=HOT_GC_GRACE_S)
+        return new_major, 0
 
     @_locked
     def bulk_load(self, points: DataFrame, version: int | None = None) -> None:
@@ -1098,17 +1067,6 @@ class BTrDBEngine:
                 out[name] = len(victims)
         return out
 
-    def _clear_hot(self, uuid: str) -> None:
-        """Drop one stream's buffered rows: rewrites only its uuid_bucket
-        partition of the hot table (others hardlink into the new
-        generation); atomic flip."""
-        cols = [f.name for f in HOT_POINTS_SCHEMA.fields]
-
-        def xf(df: DataFrame) -> DataFrame:
-            return df.filter(F.col("uuid") != uuid).select(cols)
-
-        self._rewrite_bucket_partition("hot", "uuid_bucket", self._bucket_of(uuid), xf)
-
     @_locked
     def delete_range(self, uuid: str, start: int, end: int) -> int:
         """V3: range tombstone at a new version; flushes the buffer first so
@@ -1165,12 +1123,10 @@ class BTrDBEngine:
             versions[u] = self._claim_version_slot(
                 u, VERSION_FIRST_DATA if major == VERSION_CREATED else major + 1
             )
-        store.append(
-            self.store, self.base, "deletes",
-            self.spark.createDataFrame(
-                [(u, s, e, versions[u]) for u, s, e in ranges], DELETES_SCHEMA
-            ).coalesce(1).write.mode("append").parquet,
+        tombstones = pa.Table.from_pylist(
+            [{"uuid": u, "start": s, "end": e, "version": versions[u]} for u, s, e in ranges]
         )
+        store.append(self.store, self.base, "deletes", store.arrow_parts({"": tombstones}, DELETES_SCHEMA))
         if self.ladder is not None:
             from .operators.raw import apply_deletes
             from .plans.rollup import invalidate_buckets_multi
@@ -1209,13 +1165,8 @@ class BTrDBEngine:
                 raise NoSuchStream(f"no such stream: {uuid}")
             self._rewrite_stream_row(uuid, tombstoned="deleted")
             if defer_gc:
-                store.append(
-                    self.store, self.base, "gc_pending",
-                    self.spark.createDataFrame(
-                        [(uuid, int(timelib.time() * 1e9))],
-                        "uuid string, requested long",
-                    ).coalesce(1).write.mode("append").parquet,
-                )
+                row = pa.table({"uuid": [uuid], "requested": [int(timelib.time() * 1e9)]})
+                store.append(self.store, self.base, "gc_pending", store.arrow_parts({"": row}, GC_PENDING_SCHEMA))
                 self._pending_gc.add(uuid)
                 return
             self._drop_stream_data(uuid)
@@ -1231,7 +1182,11 @@ class BTrDBEngine:
                 lambda df: df.filter(F.col("uuid") != uuid),
                 child_partition="time_bucket",
             )
-        self._clear_hot(uuid)
+        cur = self._data_dir("hot")
+        if cur is not None:
+            sub = f"uuid_bucket={self._bucket_of(uuid)}"
+            seen = store.key_files(os.path.join(cur, sub), "uuid", uuid)
+            store.drop_key(self.store, self.base, "hot", cur, sub, seen, "uuid", uuid, HOT_POINTS_SCHEMA)
         if self.ladder is not None:
             for pw in self.ladder.levels:
                 self.ladder.rewrite_level(

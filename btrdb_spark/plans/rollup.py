@@ -504,21 +504,7 @@ class RollupLadder:
         window is a crash between a level's parquet job commit and its
         watermark flip (one metadata op later); closing it entirely
         takes a transactional table format, same note as the hot sink.
-
-        A pyarrow Table (the driver commit of one stream's buffer, with a
-        ``version`` column and no epoch) is folded on the driver instead
-        (tier.level_partials) and each level's partials are written there
-        as one file, with no Spark job.
         """
-        if isinstance(batch_points, pa.Table):
-            from .. import tier
-
-            for pw, part in tier.level_partials(batch_points, self.levels, self.spark).items():
-                store_mod.append(
-                    self.store, self.base, self._name(pw),
-                    store_mod.arrow_parts({"": part}, LEVEL_SCHEMA),
-                )
-            return
         if "version" not in batch_points.columns:
             batch_points = batch_points.withColumn(
                 "version", F.lit(1 << 62).cast("long")
@@ -550,6 +536,14 @@ class RollupLadder:
             store_mod.append(self.store, self.base, name, partial.write.mode("append").parquet)
             if epoch is not None:
                 store_mod.mark_epoch(self.store, self.base, name, epoch)
+
+    def append_partials(self, partials: dict[int, pa.Table]) -> None:
+        """Append each level's partials of a commit's batch
+        (tier.level_partials) as one file, written on the driver."""
+        for pw, part in partials.items():
+            store_mod.append(
+                self.store, self.base, self._name(pw), store_mod.arrow_parts({"": part}, LEVEL_SCHEMA)
+            )
 
     def rewrite_level(self, pw: int, rewrite) -> None:
         """Replace level pw with ``rewrite(level_df)`` via a new generation

@@ -78,6 +78,14 @@ DELETES_SCHEMA = StructType(
     ]
 )
 
+# One row of the deferred-obliterate journal (engine.obliterate(defer_gc=True))
+GC_PENDING_SCHEMA = StructType(
+    [
+        StructField("uuid", StringType(), True),
+        StructField("requested", LongType(), True),  # ns since the epoch
+    ]
+)
+
 # One row of a rollup-ladder level (plans/rollup.py): the partials of one
 # (uuid, bucket, commit version)
 LEVEL_SCHEMA = StructType(

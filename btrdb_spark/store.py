@@ -715,11 +715,12 @@ def append(backend: StoreBackend, base: str, name: str, write) -> None:
 
 # ---- the driver's parquet writer ----
 #
-# Batches bounded by the RPC contract (an Insert, a flush of one stream's
-# buffer, a catalog row) are written on the driver with pyarrow instead of
-# a Spark job. A file is written in full under a ``_``-prefixed name, which
-# every reader skips, and renamed into place, so no reader sees a partial
-# file. Its footer carries the Spark schema under Spark's own key (as
+# Bounded batches (an Insert, a commit's batch of at most
+# tier.ARROW_MAX_ROWS rows, a catalog row, a delete's tombstones, a
+# journal row, a rewritten hot file streamed in such batches) are written
+# on the driver with pyarrow instead of a Spark job. A file is written in
+# full under a ``_``-prefixed name, which every reader skips, and renamed
+# into place, so no reader sees a partial file. Its footer carries the Spark schema under Spark's own key (as
 # Arrow schema metadata, which pyarrow stores in the footer's key-value
 # pairs), so memo_scan reads it without an inference job. The settings
 # keep the files as small as Spark's or smaller: zstd at Spark's level 3,
@@ -731,26 +732,37 @@ _DICTIONARY = ("uuid", "version", "ingest_ts")
 _DELTA = ("time", "seq", "bucket_start")
 
 
-def write_parquet(directory: str, table, schema) -> None:
-    """Write the pyarrow ``table`` as one parquet file in ``directory``,
-    with the columns and types of the Spark StructType ``schema``, under
-    the settings above. The file appears whole or not at all."""
+def write_parquet(directory: str, data, schema) -> None:
+    """Write ``data``, a pyarrow Table or an iterator of record batches,
+    as one parquet file in ``directory``, with the columns and types of
+    the Spark StructType ``schema``, under the settings above. Each
+    non-empty batch of an iterator becomes its own row group. The file
+    appears whole or not at all, and not at all when it holds no row."""
     import uuid as _uuid
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    table = table.select(schema.fieldNames()).cast(to_arrow_schema(schema))
-    table = table.replace_schema_metadata({SPARK_ROW_METADATA: schema.json().encode()})
+    arrow = to_arrow_schema(schema)
     os.makedirs(directory, exist_ok=True)
     name = f"part-{_uuid.uuid4().hex}.zstd.parquet"
     tmp = os.path.join(directory, f"_{name}")
-    pq.write_table(
-        table, tmp, compression="zstd", compression_level=3,
-        use_dictionary=[c for c in _DICTIONARY if c in table.column_names],
-        column_encoding={c: "DELTA_BINARY_PACKED" for c in _DELTA if c in table.column_names},
-    )
-    os.rename(tmp, os.path.join(directory, name))
+    rows = 0
+    with pq.ParquetWriter(
+        tmp, arrow.with_metadata({SPARK_ROW_METADATA: schema.json().encode()}),
+        compression="zstd", compression_level=3,
+        use_dictionary=[c for c in _DICTIONARY if c in arrow.names],
+        column_encoding={c: "DELTA_BINARY_PACKED" for c in _DELTA if c in arrow.names},
+    ) as w:
+        for part in [data] if isinstance(data, pa.Table) else data:
+            if part.num_rows:
+                w.write_table(pa.table(part).select(arrow.names).cast(arrow))
+                rows += part.num_rows
+    if rows:
+        os.rename(tmp, os.path.join(directory, name))
+    else:
+        os.remove(tmp)
 
 
 def arrow_parts(parts: dict, schema):
@@ -807,11 +819,15 @@ def drop_key(
     partition directory and every file that holds no such row is
     hardlinked; a file that holds only such rows is left out; a file that
     mixes them with others is rewritten without them (write_parquet, as
-    ``schema``). A file in ``sub`` that is not in ``seen`` arrived after
-    the caller's read and is carried unchanged. CAS publish against
-    ``cur``."""
+    ``schema``), streamed in batches of at most tier.ARROW_MAX_ROWS rows,
+    so the driver never holds a whole file however large a streaming
+    sink's micro-batch made it. A file in ``sub`` that is not in ``seen``
+    arrived after the caller's read and is carried unchanged. CAS publish
+    against ``cur``."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from .tier import ARROW_MAX_ROWS
 
     gen = backend.new_generation(base, name)
     backend.link_unchanged_partitions(cur, gen, exclude_subdir=sub)
@@ -823,10 +839,8 @@ def drop_key(
         if kind == "none":
             os.link(path, os.path.join(out, fn))
         elif kind == "mixed":
-            rest = pq.ParquetFile(path).read()
-            rest = rest.filter(pc.not_equal(rest[column], key))
-            if rest.num_rows:
-                write_parquet(out, rest, schema)
+            batches = pq.ParquetFile(path).iter_batches(batch_size=ARROW_MAX_ROWS)
+            write_parquet(out, (b.filter(pc.not_equal(b[column], key)) for b in batches), schema)
     backend.publish(base, name, gen, expected=cur)
 
 

@@ -4,10 +4,10 @@ BTrDBEngine answers RawValues, AlignedWindows, Windows and Nearest of one
 stream here, and reads a stream's committed version, with pyarrow over the
 store's parquet files and no Spark job. Every answer equals the Spark plan
 it stands in for exactly (tests/test_raw_tier.py, tests/test_arrow_tier.py
-and tests/test_tier.py compare them). A commit of one stream's buffer
-computes its ladder partials here too (level_partials; compared with the
-Spark ingest by tests/test_driver_write.py). The readers share three
-pieces:
+and tests/test_tier.py compare them). Every commit computes its ladder
+partials here too, one batch of at most ARROW_MAX_ROWS rows at a time
+(level_partials; compared with the Spark ingest's math by
+tests/test_driver_write.py). The readers share three pieces:
 
 - the slice reader (``_Slice``): one stream's cold points from its
   uuid_bucket/time_bucket directories, its hot rows at latest, and its
@@ -39,12 +39,15 @@ from .plans.rollup import route_level, route_level_width
 # loads on the driver: the level rows its filter keeps plus the raw rows it
 # folds in, and for windows the window count. A read over the bound stays
 # on Spark. It bounds driver memory (about 60 B a row in Arrow); it is not
-# a knob. Raw reads have no bound (see raw).
+# a knob. Raw reads have no bound (see raw). A commit (engine.flush) reads,
+# folds and writes its buffer in batches of at most this many rows, and a
+# hot-file rewrite (store.drop_key) streams in such batches.
 ARROW_MAX_ROWS = 1 << 18
 
 DEC6 = pa.decimal128(38, 6)
-# |value| bound of Spark's ladder sums (functions/decsum.py): a stat read
-# that would fold a larger raw value stays on Spark
+# |value| bound of the Spark plans' long sums over raw points
+# (functions/decsum.py): a stat read that would fold a larger raw value
+# stays on Spark
 MAX_FOLD_ABS = 9.2e12
 
 _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
@@ -313,8 +316,9 @@ def level_partials(batch: pa.Table, levels, spark) -> dict[int, pa.Table]:
     ``(time >> pw) << pw``, sorted. Row for row what the Spark ingest
     appends (rollup_points at the finest level, then coarsen level to
     level): dec6 is computed once per batch and every level's exact
-    decimal128 sum groups the same unit partials. Values must be under
-    MAX_FOLD_ABS, the domain of the Spark ingest's long sums."""
+    decimal128 sum groups the same unit partials. Folds every value that
+    decimal(38,6) holds, exactly; dec6 raises OverflowError at |v| >= 1e32,
+    as Spark's ANSI cast does."""
     t = batch["time"].to_numpy()
     v = batch["value"].to_numpy()
     units = pa.table({

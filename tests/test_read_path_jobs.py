@@ -214,14 +214,17 @@ def test_write_rpcs_and_the_reads_after_a_commit_run_no_job(spark, tmp_path):
         svc.stop()
 
 
-def test_routing_gate_runs_no_job_on_a_store_with_tombstones(spark, tmp_path):
-    """Once stream A has a delete, warm AlignedWindows and Windows RPCs of
+def test_routing_gate_runs_no_job_on_a_store_with_tombstones(spark, tmp_path, monkeypatch):
+    """The tombstone append of a delete runs no Spark job, and both read
+    paths (the Arrow tier and the Spark plan) apply the tombstone. Once
+    stream A has a delete, warm AlignedWindows and Windows RPCs of
     the delete-free stream B still run no Spark job, and the routing
     decision for A runs none either: the tombstone versions and the
     level's rebase versions are read with Arrow. The decision equals the
     one the Spark reads of both tables give."""
     from pyspark.sql import functions as F
 
+    from btrdb_spark import store
     from btrdb_spark.plans.rollup import RollupLadder
     from btrdb_spark.service import BTrDBHttpClient, BTrDBService
 
@@ -230,7 +233,19 @@ def test_routing_gate_runs_no_job_on_a_store_with_tombstones(spark, tmp_path):
     a, b = (eng.create_stream(f"gate/{i}") for i in range(2))
     rows = [(s, i << 20, float(i % 13)) for s in (a, b) for i in range(3000)]
     eng.bulk_load(spark.createDataFrame(rows, "uuid string, time long, value double"))
+    append_jobs = {}
+    real_append = store.append
+
+    def append(backend, base, name, write):
+        append_jobs[name], _ = _jobs(spark, lambda: real_append(backend, base, name, write))
+
+    monkeypatch.setattr(store, "append", append)
     v = eng.delete_range(a, 0, 100 << 20)
+    monkeypatch.undo()
+    assert append_jobs["deletes"] == 0
+    live = [(i << 20, float(i % 13)) for i in range(100, 3000)]
+    assert [(r["time"], r["value"]) for r in eng.raw_values_rows(a, 0, 1 << 40)] == live
+    assert [(r["time"], r["value"]) for r in eng.raw_values(a, 0, 1 << 40).collect()] == live
     svc = BTrDBService(eng)
     cli = BTrDBHttpClient("127.0.0.1", svc.start())
     try:

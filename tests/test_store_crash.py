@@ -79,20 +79,38 @@ def test_annotation_cas_crash_preserves_metadata(engine, monkeypatch):
     assert engine.streams.filter("uuid = '%s'" % u).first()["annotations"] == {"owner": "a"}
 
 
-def test_flush_clear_hot_crash_keeps_buffer(engine, monkeypatch):
-    """A crash while clearing the hot buffer must not lose buffered rows:
-    worst case is replayed duplicates handled upstream, never data loss."""
+def test_flush_clear_hot_crash_keeps_buffer(spark, tmp_path, monkeypatch):
+    """A commit that dies at its last step, the publish of the hot table
+    without the stream's rows, loses no buffered row: the cold rows and
+    ladder partials are already appended, the buffer is still whole
+    (at-least-once, never loss), and the next flush commits it again."""
+    from btrdb_spark.schemas import MAX_TIME, MIN_TIME
+
+    engine = BTrDBEngine(spark, str(tmp_path / "db"), flush_threshold=10**9, ladder=True)
     warm = engine.create_stream("c/warm")
     engine.insert(warm, [(1, 1.0)], sync=True)  # tables exist + published
     u = engine.create_stream("c/hot")
     engine.insert(u, [(i, float(i)) for i in range(5)])  # buffered only
     assert engine.hot.count() == 5
-    _crash_publish(monkeypatch)
+    real = store.PosixStore.publish
+
+    def publish(self, base, name, gen, expected=None):
+        if name == "hot":
+            raise Boom()
+        return real(self, base, name, gen, expected)
+
+    monkeypatch.setattr(store.PosixStore, "publish", publish)
     with pytest.raises(Boom):
-        engine.flush(u)  # cold append (no flip) ok; dies clearing the buffer
-    # the buffer is still whole (not half-gone): at-least-once, never loss
-    assert engine.hot.count() == 5
+        engine.flush(u)  # claim and cold append ok; dies clearing the buffer
     monkeypatch.undo()
+    # the buffer is still whole (not half-gone)
+    assert engine.hot.count() == 5
+    assert sorted(r["time"] for r in engine.hot.collect()) == list(range(5))
+    assert engine.stream_version(u)[1] == 5
+    assert engine.flush(u) == (engine.stream_version(u)[0], 0)
+    got = [r["time"] for r in engine.raw_values_rows(u, MIN_TIME, MAX_TIME)]
+    assert set(got) == set(range(5))
+    assert sum(r["cnt"] for r in engine.aligned_windows_rows(u, MIN_TIME, MAX_TIME, 20)) == len(got)
 
 
 def test_layout_migration_crash_is_finished_on_reopen(spark, tmp_path, monkeypatch):
